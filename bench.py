@@ -276,7 +276,7 @@ def _emit_json_line(fd: int, obj: dict) -> None:
     round-tripping it through json.loads first so an unserializable or
     self-truncating payload fails HERE (visible, in-round) instead of
     blinding the driver's next comparison."""
-    line = json.dumps(obj)
+    line = json.dumps(obj, allow_nan=False)  # NaN/Infinity are not JSON
     json.loads(line)  # round-trip guard: never emit an unparseable line
     data = (line + "\n").encode()
     while data:

@@ -471,6 +471,9 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     comp = connected_components(
         edges, max_iterations=DEDUP_CC_ITERS, stop_early=True
     )
+    # comp is checkpointed, so nothing reads the LSH signature cache any
+    # more; an equal plan finds the cached entry to release.
+    _signatures(spark, sf_dir).unpersist()
     docs = load_table(spark, "documents", sf_dir).select("doc_id")
     return (
         docs.join(comp, docs.doc_id == comp.id, "left")

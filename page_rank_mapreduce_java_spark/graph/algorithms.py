@@ -12,8 +12,9 @@ CTE chain).
 - bfs_distances: frontier relaxation producing hop counts from a source
   set (unweighted SSSP).
 
-Scale: identical story to PageRank — edges shuffle once, supersteps
-re-shuffle only the (id, label/dist) state vector.
+Scale: identical story to PageRank — edges shuffle once onto the join
+key (graph/keyed.py), supersteps re-shuffle only the (id, label/dist)
+state vector.
 """
 
 from __future__ import annotations
@@ -21,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from page_rank_mapreduce_java_spark.graph.keyed import keyed_edges
 from page_rank_mapreduce_java_spark.plans.checkpoints import cut_lineage
 
 
@@ -33,7 +35,6 @@ def _symmetrize(edges: DataFrame) -> DataFrame:
 def connected_components(
     edges: DataFrame,
     max_iterations: int = 10,
-    partitions: int | None = None,
     stop_early: bool = False,
 ) -> DataFrame:
     """Undirected connected components: label = min node id in component.
@@ -51,47 +52,32 @@ def connected_components(
     saves; turn it on when the round budget far exceeds the expected
     diameter.
     """
-    spark = edges.sparkSession
-    sym_raw = _symmetrize(edges).persist()
-    if partitions is None:
-        # Same data-sized partitioning as pagerank.py: ~75k edge rows per
-        # partition, capped by the session's shuffle parallelism, so small
-        # graphs don't pay near-empty tasks per superstep while big ones
-        # use full cluster width.
-        cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        partitions = max(1, min(cap, -(-sym_raw.count() // 75_000)))
-
-    sym = sym_raw.repartition(partitions, "src").persist()
-    nodes = sym.select(F.col("src").alias("id")).distinct().repartition(partitions, "id").persist()
-    nodes.count()
-    sym_raw.unpersist()
-
-    labels = cut_lineage(nodes.select("id", F.col("id").alias("component")))
-    for _ in range(max_iterations):
-        nbr_min = (
-            labels.join(sym, labels.id == sym.src)
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("component").alias("nbr"))
-        )
-        new_labels = cut_lineage(
-            labels.join(nbr_min, "id", "left").select(
-                "id", F.least(F.col("component"), F.coalesce("nbr", F.col("component"))).alias("component")
+    with keyed_edges(_symmetrize(edges)) as (sym, partitions):
+        nodes = sym.select(F.col("src").alias("id")).distinct().repartition(partitions, "id")
+        labels = cut_lineage(nodes.select("id", F.col("id").alias("component")))
+        for _ in range(max_iterations):
+            nbr_min = (
+                labels.join(sym, labels.id == sym.src)
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.min("component").alias("nbr"))
             )
-        )
-        if stop_early:
-            changed = (
-                new_labels.alias("a")
-                .join(labels.alias("b"), "id")
-                .filter(F.col("a.component") != F.col("b.component"))
-                .first()
+            new_labels = cut_lineage(
+                labels.join(nbr_min, "id", "left").select(
+                    "id", F.least(F.col("component"), F.coalesce("nbr", F.col("component"))).alias("component")
+                )
             )
-            labels = new_labels
-            if changed is None:
-                break
-        else:
-            labels = new_labels
-    sym.unpersist()
-    nodes.unpersist()
+            if stop_early:
+                changed = (
+                    new_labels.alias("a")
+                    .join(labels.alias("b"), "id")
+                    .filter(F.col("a.component") != F.col("b.component"))
+                    .first()
+                )
+                labels = new_labels
+                if changed is None:
+                    break
+            else:
+                labels = new_labels
     return labels
 
 
@@ -144,76 +130,26 @@ def bfs_distances(
     edges: DataFrame,
     sources: DataFrame,
     max_hops: int = 6,
-    partitions: int | None = None,
 ) -> DataFrame:
     """Unweighted hop distance from a source id set, following edge
     direction. Unreached nodes get distance -1.
 
-    Returns DataFrame[id long, dist long].
+    Returns DataFrame[id long, dist long]. The unit-weight case of
+    ``sssp_weighted``: ``max_hops`` min-plus rounds with w = 1.
     """
-    spark = edges.sparkSession
-    ed_raw = edges.persist()
-    if partitions is None:
-        cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        partitions = max(1, min(cap, -(-ed_raw.count() // 75_000)))
-
-    ed = ed_raw.repartition(partitions, "src").persist()
-    nodes = (
-        ed.select(F.col("src").alias("id"))
-        .unionByName(ed.select(F.col("dst").alias("id")))
-        .distinct()
-        .repartition(partitions, "id")
-        .persist()
+    return sssp_weighted(
+        edges.select("src", "dst", F.lit(1).alias("w")), sources, rounds=max_hops
     )
-    nodes.count()
-
-    src_ids = (
-        sources.select(F.col(sources.columns[0]).alias("id"))
-        .distinct()
-        .join(nodes, "id", "left_semi")
-    )
-    if src_ids.first() is None:
-        ed.unpersist()
-        nodes.unpersist()
-        raise ValueError("BFS source set has no ids present in the graph")
-    dist = cut_lineage(
-        nodes.join(src_ids.withColumn("d0", F.lit(0)), "id", "left").select(
-            "id", F.coalesce("d0", F.lit(-1)).cast("long").alias("dist")
-        )
-    )
-    for _ in range(max_hops):
-        reached = dist.filter(F.col("dist") >= 0)
-        relax = (
-            reached.join(ed, reached.id == ed.src)
-            .groupBy(F.col("dst").alias("id"))
-            .agg((F.min("dist") + 1).alias("cand"))
-        )
-        dist = cut_lineage(
-            dist.join(relax, "id", "left").select(
-                "id",
-                F.when(
-                    F.col("dist") < 0, F.coalesce("cand", F.lit(-1))
-                )
-                .otherwise(F.least(F.col("dist"), F.coalesce("cand", F.col("dist"))))
-                .cast("long")
-                .alias("dist"),
-            )
-        )
-    ed_raw.unpersist()
-    ed.unpersist()
-    nodes.unpersist()
-    return dist
 
 
 def sssp_weighted(
     edges: DataFrame,
     sources: DataFrame,
     rounds: int = 4,
-    partitions: int | None = None,
 ) -> DataFrame:
     """Single-source(-set) shortest paths with non-negative integer edge
-    weights: ``rounds`` Bellman-Ford min-plus supersteps on the same
-    chassis as ``bfs_distances`` (the unweighted special case, w = 1).
+    weights: ``rounds`` Bellman-Ford min-plus supersteps over the keyed
+    edges (``bfs_distances`` is the unweighted special case, w = 1).
     ``edges``: DataFrame[src, dst, w] (w coerced to long). Unreached
     nodes get distance -1; after r rounds distances are exact for all
     shortest paths of <= r edges (the oracle unrolls the identical round
@@ -221,65 +157,50 @@ def sssp_weighted(
 
     Returns DataFrame[id long, dist long].
     """
-    spark = edges.sparkSession
-    ed_raw = edges.select(
-        "src", "dst", F.col("w").cast("long").alias("w")
-    ).persist()
-    if partitions is None:
-        cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        partitions = max(1, min(cap, -(-ed_raw.count() // 75_000)))
-
-    ed = ed_raw.repartition(partitions, "src").persist()
-    nodes = (
-        ed.select(F.col("src").alias("id"))
-        .unionByName(ed.select(F.col("dst").alias("id")))
-        .distinct()
-        .repartition(partitions, "id")
-        .persist()
-    )
-    nodes.count()
-
-    src_ids = (
-        sources.select(F.col(sources.columns[0]).alias("id"))
-        .distinct()
-        .join(nodes, "id", "left_semi")
-    )
-    if src_ids.first() is None:
-        ed.unpersist()
-        nodes.unpersist()
-        raise ValueError("SSSP source set has no ids present in the graph")
-    dist = cut_lineage(
-        nodes.join(src_ids.withColumn("d0", F.lit(0)), "id", "left").select(
-            "id", F.coalesce("d0", F.lit(-1)).cast("long").alias("dist")
+    with keyed_edges(
+        edges.select("src", "dst", F.col("w").cast("long").alias("w"))
+    ) as (ed, partitions):
+        nodes = (
+            ed.select(F.col("src").alias("id"))
+            .unionByName(ed.select(F.col("dst").alias("id")))
+            .distinct()
+            .repartition(partitions, "id")
         )
-    )
-    for _ in range(rounds):
-        reached = dist.filter(F.col("dist") >= 0)
-        relax = (
-            reached.join(ed, reached.id == ed.src)
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min(F.col("dist") + F.col("w")).alias("cand"))
+        src_ids = (
+            sources.select(F.col(sources.columns[0]).alias("id"))
+            .distinct()
+            .join(nodes, "id", "left_semi")
         )
+        if src_ids.first() is None:
+            raise ValueError("source set has no ids present in the graph")
         dist = cut_lineage(
-            dist.join(relax, "id", "left").select(
-                "id",
-                F.when(
-                    F.col("dist") < 0, F.coalesce("cand", F.lit(-1))
-                )
-                .otherwise(F.least(F.col("dist"), F.coalesce("cand", F.col("dist"))))
-                .cast("long")
-                .alias("dist"),
+            nodes.join(src_ids.withColumn("d0", F.lit(0)), "id", "left").select(
+                "id", F.coalesce("d0", F.lit(-1)).cast("long").alias("dist")
             )
         )
-    ed_raw.unpersist()
-    ed.unpersist()
-    nodes.unpersist()
+        for _ in range(rounds):
+            reached = dist.filter(F.col("dist") >= 0)
+            relax = (
+                reached.join(ed, reached.id == ed.src)
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.min(F.col("dist") + F.col("w")).alias("cand"))
+            )
+            dist = cut_lineage(
+                dist.join(relax, "id", "left").select(
+                    "id",
+                    F.when(
+                        F.col("dist") < 0, F.coalesce("cand", F.lit(-1))
+                    )
+                    .otherwise(F.least(F.col("dist"), F.coalesce("cand", F.col("dist"))))
+                    .cast("long")
+                    .alias("dist"),
+                )
+            )
     return dist
 
 
 def strongly_connected_components(
     edges: DataFrame,
-    partitions: int | None = None,
     max_outer: int = 64,
     max_inner: int = 256,
 ) -> DataFrame:
@@ -311,17 +232,17 @@ def strongly_connected_components(
       4. Assign confirmed nodes scc_id = min member id of their color
          class, remove them, restrict edges, repeat.
 
-    Chassis identical to connected_components: edges shuffled once per
-    outer round onto their join key and persisted; supersteps move only
-    (id, color/mark) vectors; lineage cut per step; every convergence
-    check is a first()-probe on a node-sized relation. Rounds are
+    Chassis identical to connected_components: edges shuffled once onto
+    their join key (graph/keyed.py), then trimmed to the live subgraph
+    each outer round; supersteps move only (id, color/mark) vectors;
+    lineage cut per step; every convergence check is a first()-probe on
+    a node-sized relation. Rounds are
     data-dependent (max_outer/max_inner are safety bounds ~ graph
     diameter, not tuning knobs), which is exactly why this form trades
     away the unrolled-SQL oracle — q_scc's fixed-round doubling closure
     stays registered as the cross-engine-checkable formulation, and
     tests/test_graph_algorithms.py proves the two agree.
     """
-    spark = edges.sparkSession
     ed0 = (
         edges.select(
             F.col("src").cast("long").alias("src"),
@@ -329,121 +250,115 @@ def strongly_connected_components(
         )
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .persist()
     )
-    if partitions is None:
-        cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        partitions = max(1, min(cap, -(-ed0.count() // 75_000)))
-
-    all_nodes = (
-        edges.select(F.col("src").cast("long").alias("id"))
-        .unionByName(edges.select(F.col("dst").cast("long").alias("id")))
-        .distinct()
-        .repartition(partitions, "id")
-    )
-    nodes = cut_lineage(all_nodes)
-    ed = cut_lineage(ed0.repartition(partitions, "src"))
-    ed0.unpersist()
-
-    assigned = None  # DataFrame[id, scc_id], unioned + lineage-cut per round
-
-    def bank(found: DataFrame) -> None:
-        nonlocal assigned
-        assigned = (
-            found if assigned is None else cut_lineage(assigned.unionByName(found))
+    with keyed_edges(ed0) as (ed, partitions):
+        all_nodes = (
+            edges.select(F.col("src").cast("long").alias("id"))
+            .unionByName(edges.select(F.col("dst").cast("long").alias("id")))
+            .distinct()
+            .repartition(partitions, "id")
         )
+        nodes = cut_lineage(all_nodes)
 
-    for _ in range(max_outer):
-        if nodes.first() is None:
-            break
+        assigned = None  # DataFrame[id, scc_id], unioned + lineage-cut per round
 
-        # --- 1. trim singleton SCCs to fixpoint --------------------------
-        for _ in range(max_inner):
-            has_out = ed.select(F.col("src").alias("id"))
-            has_in = ed.select(F.col("dst").alias("id"))
-            core = cut_lineage(
-                nodes.join(has_out.distinct(), "id", "left_semi")
-                .join(has_in.distinct(), "id", "left_semi")
+        def bank(found: DataFrame) -> None:
+            nonlocal assigned
+            assigned = (
+                found if assigned is None else cut_lineage(assigned.unionByName(found))
             )
-            trimmed = nodes.join(core, "id", "left_anti").select(
-                "id", F.col("id").alias("scc_id")
-            )
-            if trimmed.first() is None:
+
+        for _ in range(max_outer):
+            if nodes.first() is None:
                 break
-            bank(cut_lineage(trimmed))
-            nodes = core
+
+            # --- 1. trim singleton SCCs to fixpoint ----------------------
+            for _ in range(max_inner):
+                has_out = ed.select(F.col("src").alias("id"))
+                has_in = ed.select(F.col("dst").alias("id"))
+                core = cut_lineage(
+                    nodes.join(has_out.distinct(), "id", "left_semi")
+                    .join(has_in.distinct(), "id", "left_semi")
+                )
+                trimmed = nodes.join(core, "id", "left_anti").select(
+                    "id", F.col("id").alias("scc_id")
+                )
+                if trimmed.first() is None:
+                    break
+                bank(cut_lineage(trimmed))
+                nodes = core
+                ed = cut_lineage(
+                    ed.join(nodes.select(F.col("id").alias("src")), "src", "left_semi")
+                    .join(nodes.select(F.col("id").alias("dst")), "dst", "left_semi")
+                    .select("src", "dst")
+                )
+            if nodes.first() is None:
+                continue
+
+            # --- 2. forward max-coloring to fixpoint ---------------------
+            color = cut_lineage(nodes.select("id", F.col("id").alias("color")))
+            for _ in range(max_inner):
+                nbr = (
+                    color.join(ed, color.id == ed.src)
+                    .groupBy(F.col("dst").alias("id"))
+                    .agg(F.max("color").alias("c"))
+                )
+                new_color = cut_lineage(
+                    color.join(nbr, "id", "left").select(
+                        "id",
+                        F.greatest(
+                            F.col("color"), F.coalesce("c", F.col("color"))
+                        ).alias("color"),
+                    )
+                )
+                changed = (
+                    new_color.alias("a")
+                    .join(color.alias("b"), "id")
+                    .filter(F.col("a.color") != F.col("b.color"))
+                    .first()
+                )
+                color = new_color
+                if changed is None:
+                    break
+
+            # --- 3. backward confirmation within each color --------------
+            mark = cut_lineage(
+                color.select(
+                    "id", "color", (F.col("id") == F.col("color")).alias("m")
+                )
+            )
+            for _ in range(max_inner):
+                reach = (
+                    mark.filter("m")
+                    .join(ed, mark.id == ed.dst)
+                    .select(F.col("src").alias("id"), F.col("color").alias("vc"))
+                    .distinct()
+                )
+                newly = (
+                    mark.filter(~F.col("m"))
+                    .join(reach, "id")
+                    .filter(F.col("color") == F.col("vc"))
+                    .select("id")
+                )
+                if newly.first() is None:
+                    break
+                mark = cut_lineage(
+                    mark.join(newly.withColumn("_n", F.lit(True)), "id", "left").select(
+                        "id", "color", (F.col("m") | F.coalesce("_n", F.lit(False))).alias("m")
+                    )
+                )
+
+            members = mark.filter("m").select("id", "color")
+            scc_lbl = members.groupBy("color").agg(F.min("id").alias("scc_id"))
+            bank(cut_lineage(members.join(scc_lbl, "color").select("id", "scc_id")))
+
+            # --- 4. peel confirmed nodes and their edges -----------------
+            nodes = cut_lineage(nodes.join(members.select("id"), "id", "left_anti"))
             ed = cut_lineage(
                 ed.join(nodes.select(F.col("id").alias("src")), "src", "left_semi")
                 .join(nodes.select(F.col("id").alias("dst")), "dst", "left_semi")
                 .select("src", "dst")
             )
-        if nodes.first() is None:
-            continue
-
-        # --- 2. forward max-coloring to fixpoint -------------------------
-        color = cut_lineage(nodes.select("id", F.col("id").alias("color")))
-        for _ in range(max_inner):
-            nbr = (
-                color.join(ed, color.id == ed.src)
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.max("color").alias("c"))
-            )
-            new_color = cut_lineage(
-                color.join(nbr, "id", "left").select(
-                    "id",
-                    F.greatest(
-                        F.col("color"), F.coalesce("c", F.col("color"))
-                    ).alias("color"),
-                )
-            )
-            changed = (
-                new_color.alias("a")
-                .join(color.alias("b"), "id")
-                .filter(F.col("a.color") != F.col("b.color"))
-                .first()
-            )
-            color = new_color
-            if changed is None:
-                break
-
-        # --- 3. backward confirmation within each color ------------------
-        mark = cut_lineage(
-            color.select(
-                "id", "color", (F.col("id") == F.col("color")).alias("m")
-            )
-        )
-        for _ in range(max_inner):
-            reach = (
-                mark.filter("m")
-                .join(ed, mark.id == ed.dst)
-                .select(F.col("src").alias("id"), F.col("color").alias("vc"))
-                .distinct()
-            )
-            newly = (
-                mark.filter(~F.col("m"))
-                .join(reach, "id")
-                .filter(F.col("color") == F.col("vc"))
-                .select("id")
-            )
-            if newly.first() is None:
-                break
-            mark = cut_lineage(
-                mark.join(newly.withColumn("_n", F.lit(True)), "id", "left").select(
-                    "id", "color", (F.col("m") | F.coalesce("_n", F.lit(False))).alias("m")
-                )
-            )
-
-        members = mark.filter("m").select("id", "color")
-        scc_lbl = members.groupBy("color").agg(F.min("id").alias("scc_id"))
-        bank(cut_lineage(members.join(scc_lbl, "color").select("id", "scc_id")))
-
-        # --- 4. peel confirmed nodes and their edges ---------------------
-        nodes = cut_lineage(nodes.join(members.select("id"), "id", "left_anti"))
-        ed = cut_lineage(
-            ed.join(nodes.select(F.col("id").alias("src")), "src", "left_semi")
-            .join(nodes.select(F.col("id").alias("dst")), "dst", "left_semi")
-            .select("src", "dst")
-        )
 
     if assigned is None:
         return all_nodes.select("id", F.col("id").alias("scc_id"))
@@ -453,7 +368,6 @@ def strongly_connected_components(
 def label_propagation(
     edges: DataFrame,
     rounds: int = 3,
-    partitions: int | None = None,
 ) -> DataFrame:
     """Synchronous label propagation (Raghavan et al.'07) for community
     detection over the symmetrized edge set, made DETERMINISTIC: each
@@ -466,7 +380,7 @@ def label_propagation(
 
     Returns DataFrame[id long, community long] (community = final label).
 
-    Chassis: edges shuffled once onto the join key and persisted; each
+    Chassis: edges shuffled once onto the join key (graph/keyed.py); each
     round moves one (id, label) vector through a count aggregate keyed
     on (node, label) — bounded by degree sum — then a per-node argmax.
     The argmax is NOT a window (Window.partitionBy(id) serializes a hub
@@ -479,31 +393,23 @@ def label_propagation(
     regardless of density, LPA finds denser-than-cut groups INSIDE a
     component.
     """
-    spark = edges.sparkSession
-    sym_raw = _symmetrize(edges).persist()
-    if partitions is None:
-        cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        partitions = max(1, min(cap, -(-sym_raw.count() // 75_000)))
-    sym = sym_raw.repartition(partitions, "src").persist()
-    nodes = sym.select(F.col("src").alias("id")).distinct().repartition(partitions, "id")
-    labels = cut_lineage(nodes.select("id", F.col("id").alias("label")))
-    sym_raw.unpersist()
-
-    for _ in range(rounds):
-        counts = (
-            labels.join(sym, labels.id == sym.src)
-            .groupBy(F.col("dst").alias("id"), F.col("label"))
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        best = (
-            counts.groupBy("id")
-            .agg(F.max(F.struct(F.col("c"), (-F.col("label")).alias("nl"))).alias("m"))
-            .select("id", (-F.col("m.nl")).alias("new"))
-        )
-        labels = cut_lineage(
-            labels.join(best, "id", "left").select(
-                "id", F.coalesce("new", F.col("label")).alias("label")
+    with keyed_edges(_symmetrize(edges)) as (sym, partitions):
+        nodes = sym.select(F.col("src").alias("id")).distinct().repartition(partitions, "id")
+        labels = cut_lineage(nodes.select("id", F.col("id").alias("label")))
+        for _ in range(rounds):
+            counts = (
+                labels.join(sym, labels.id == sym.src)
+                .groupBy(F.col("dst").alias("id"), F.col("label"))
+                .agg(F.count(F.lit(1)).alias("c"))
             )
-        )
-    sym.unpersist()
+            best = (
+                counts.groupBy("id")
+                .agg(F.max(F.struct(F.col("c"), (-F.col("label")).alias("nl"))).alias("m"))
+                .select("id", (-F.col("m.nl")).alias("new"))
+            )
+            labels = cut_lineage(
+                labels.join(best, "id", "left").select(
+                    "id", F.coalesce("new", F.col("label")).alias("label")
+                )
+            )
     return labels.select("id", F.col("label").alias("community"))

@@ -5,19 +5,23 @@ per iteration, circulating the adjacency list through every shuffle to avoid
 a join, and feeding the dangling mass back through a Hadoop Counter. The
 Spark-idiomatic plan replaces all of that:
 
-- the adjacency ("links") DataFrame is computed once, hash-partitioned on
-  ``src``, and persisted — circulation (reference pageRank_v2.java:141,160)
-  is unnecessary because executors keep it resident;
+- the adjacency ("links") DataFrame is computed once from the keyed edges
+  (graph/keyed.py: hash-partitioned on ``src``) and persisted —
+  circulation (reference pageRank_v2.java:141,160) is unnecessary because
+  executors keep it resident;
 - the per-iteration scatter+gather is one join + one aggregation
   (``ranks ⋈ links`` on id, then ``groupBy(dst).sum``), which is exactly the
   GraphX/GraphFrames triplet step (Gonzalez et al., OSDI'14);
 - the dangling-mass counter (reference pageRank_v2.java:216-222, :79-83)
   becomes a broadcast 1-row aggregate folded into the same per-iteration
-  job (no driver round-trip; the reference needed a counter RPC per job);
+  action (no driver round-trip; the reference needed a counter RPC per job);
 - lineage is cut every iteration with ``localCheckpoint`` — the #1
   Spark-specific hazard for iterative dataflow (SURVEY.md §4.3). The
-  checkpoint doubles as the one action that executes the iteration, so
-  the whole superstep is exactly ONE Spark job.
+  checkpoint doubles as the one action that executes the iteration. That
+  is one action, not one job: under AQE every shuffle stage runs as its
+  own job, so the traced perfbench ``pagerank_chain`` run (250k edges, 4
+  partitions, 10 supersteps, 4-core host) counts 86 Spark jobs for its 11
+  lineage cuts.
 
 Scale notes (100 TB design point): ranks and links are co-partitioned on
 the join key with the same partition count, so the per-iteration join
@@ -42,7 +46,9 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
+from page_rank_mapreduce_java_spark.graph.keyed import keyed_edges
 from page_rank_mapreduce_java_spark.plans.checkpoints import cut_lineage
 
 
@@ -51,7 +57,6 @@ class PageRankResult:
     ranks: DataFrame  # id LONG, rank DOUBLE
     num_nodes: int
     iterations_run: int
-    dangling_mass_per_iter: list[float] = field(default_factory=list)
     l1_deltas: list[float] = field(default_factory=list)
 
 
@@ -61,7 +66,6 @@ def pagerank(
     damping: float = 0.85,
     tol: float | None = None,
     partitions: int | None = None,
-    record_dangling: bool = False,
     personalize: DataFrame | None = None,
     reliable_checkpoint_every: int = 0,
     weight_col: str | None = None,
@@ -79,16 +83,17 @@ def pagerank(
     for integral degrees the arithmetic (÷count vs ·1.0÷Σ1.0) is
     IEEE-identical, so existing unweighted results are bit-stable.
 
-    One Spark job per iteration: the dangling 1-row aggregate rides the
+    One action per iteration: the dangling 1-row aggregate rides the
     plan as a broadcast, and the eager localCheckpoint executes it.
-    ``tol``/``record_dangling`` add one small action per iteration each.
+    ``tol`` adds one small action per iteration.
 
     ``personalize``: optional DataFrame whose first column is a node-id
     source set S. Teleport mass then resets to uniform-over-S instead of
     uniform-over-all (personalized PageRank; dangling mass follows the
     same reset vector). Source ids absent from the graph are ignored.
 
-    Scale: ``links`` is shuffled once onto the join key and persisted —
+    Scale: the edges are shuffled once onto the join key (graph/keyed.py)
+    and ``links`` is persisted on that partitioning —
     iterations re-shuffle only the rank vector (8·N bytes·3 cols), never
     the edges. Contribution sums aggregate map-side before the exchange.
 
@@ -107,44 +112,32 @@ def pagerank(
             "spark.sparkContext.setCheckpointDir(<fault-tolerant path>)"
         )
 
-    # The edge input may itself be an expensive plan (e.g. a join); it is
-    # read twice during setup (degree aggregation + probe side), so cache
-    # it for the setup phase only. MEMORY_AND_DISK: spills, never OOMs.
+    # links: one row per edge with the emitting node's out-degree. The
+    # keyed edges are already hash-partitioned on src, so the per-src
+    # degree window needs no exchange and links inherits the partitioning
+    # every iteration's join reuses. Everything else (nodes, dangling set)
+    # derives from the persisted links so an expensive upstream edge
+    # computation runs exactly once.
     w = (
         F.col(weight_col).cast("double") if weight_col is not None else F.lit(1.0)
     )
-    edges = edges.select("src", "dst", w.alias("w")).persist()
-
-    if partitions is None:
-        # Size the iteration-state partitioning to the data: ~75k edge rows
-        # per partition, capped by the session's shuffle parallelism. On a
-        # real cluster spark.sql.shuffle.partitions is set to total-cores×k,
-        # so big graphs use full width while small ones avoid paying
-        # hundreds of near-empty tasks per superstep.
-        edge_count = edges.count()
-        cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        partitions = max(1, min(cap, -(-edge_count // 75_000)))
-
-    # links: one row per edge with the emitting node's out-degree, partitioned
-    # on the join key once and reused by every iteration's join. Everything
-    # else (nodes, dangling set) derives from the persisted links so an
-    # expensive upstream edge computation runs exactly once.
-    out_deg = edges.groupBy("src").agg(F.sum("w").alias("deg"))
-    links = (
-        edges.join(out_deg, "src")
-        .select(F.col("src").alias("id"), "dst", "w", "deg")
-        .repartition(partitions, "id")
-        .persist()
-    )
-    nodes = (
-        links.select("id")
-        .unionByName(links.select(F.col("dst").alias("id")))
-        .distinct()
-        .repartition(partitions, "id")
-        .persist()
-    )
-    n = nodes.count()
-    edges.unpersist()  # links/nodes hold everything the loop needs
+    with keyed_edges(
+        edges.select("src", "dst", w.alias("w")), partitions=partitions
+    ) as (ed, partitions):
+        links = ed.select(
+            F.col("src").alias("id"),
+            "dst",
+            "w",
+            F.sum("w").over(Window.partitionBy("src")).alias("deg"),
+        ).persist()
+        nodes = (
+            links.select("id")
+            .unionByName(links.select(F.col("dst").alias("id")))
+            .distinct()
+            .repartition(partitions, "id")
+            .persist()
+        )
+        n = nodes.count()
     if n == 0:
         empty = nodes.withColumn("rank", F.lit(0.0)).localCheckpoint(eager=True)
         links.unpersist()
@@ -156,8 +149,7 @@ def pagerank(
     dangling = nodes.join(links.select("id"), "id", "left_anti").persist()
 
     # Reset-probability vector p: uniform, or uniform-over-sources when
-    # personalized. Persisted co-partitioned with nodes; joined (not
-    # recomputed) every superstep.
+    # personalized. Co-partitioned with nodes; joined every superstep.
     if personalize is not None:
         srcs = (
             personalize.select(F.col(personalize.columns[0]).alias("id"))
@@ -174,7 +166,8 @@ def pagerank(
             .persist()
         )
     else:
-        pvec = nodes.select("id", F.lit(1.0 / n).alias("p")).persist()
+        # A constant column over the persisted nodes: nothing to cache.
+        pvec = nodes.select("id", F.lit(1.0 / n).alias("p"))
 
     ranks = cut_lineage(pvec.select("id", F.col("p").alias("rank")))
 
@@ -182,14 +175,12 @@ def pagerank(
 
     for it in range(num_iterations):
         # 1-row dangling-mass aggregate, broadcast into the update — stays
-        # inside this iteration's single job (contrast: the reference's
+        # inside this iteration's one action (contrast: the reference's
         # Counter needed a job boundary + client RPC to move this scalar).
         d_df = (
             ranks.join(dangling, "id", "left_semi")
             .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm"))
         )
-        if record_dangling:
-            result.dangling_mass_per_iter.append(d_df.first()["dm"])
 
         contribs = (
             ranks.join(links, "id")

@@ -218,30 +218,28 @@ def q_graph_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the symmetric edge list + one dst-keyed aggregate — the
     certified iterative-chassis shape; six fixed rounds. r13: the edge
     relation is shuffled once onto the superstep join key and persisted
-    (graph/centrality._key_partitioned_edges — the pagerank links
-    recipe, guide §2.4): the unpersisted ``sym`` used to re-run the
-    lineitem self-join + distinct subtree in EVERY one of the six
-    supersteps (each level materializes through its own localCheckpoint
-    job, so exchange reuse never fires across rounds).
+    (graph/keyed.py — the pagerank links recipe, guide §2.4): the
+    unpersisted ``sym`` used to re-run the lineitem self-join + distinct
+    subtree in EVERY one of the six supersteps (each level materializes
+    through its own localCheckpoint job, so exchange reuse never fires
+    across rounds).
     """
-    from page_rank_mapreduce_java_spark.graph.centrality import (
-        _key_partitioned_edges,
-    )
+    from page_rank_mapreduce_java_spark.graph.keyed import keyed_edges
 
     e = cooccurrence_edges(spark, sf_dir)
     sym = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    return _katz_from_sym(
-        _key_partitioned_edges(sym, cache_key=f"cooc:{sf_dir}")
-    )
+    with keyed_edges(sym, memo=f"cooc:{sf_dir}") as (keyed, _):
+        return _katz_from_sym(keyed)
 
 
 def _katz_from_sym(sym: DataFrame) -> DataFrame:
     """Katz recursion over an already src-keyed, PERSISTED symmetric
     edge relation — shared between q_graph_katz_centrality and the
     rank-agreement capstone (relational32), which feeds ONE persisted
-    edge relation to both of its iterative chains."""
+    edge relation to both of its iterative chains. The returned vector
+    is materialized, so the caller may release ``sym`` right after."""
     nodes = sym.select(F.col("src").alias("id")).distinct().persist()
     x = nodes.withColumn("x", F.lit(1).cast("decimal(38,0)"))
     for i in range(1, KATZ_ITERS + 1):
@@ -257,7 +255,8 @@ def _katz_from_sym(sym: DataFrame) -> DataFrame:
                 + F.coalesce("s", F.lit(0).cast("decimal(38,0)"))
             ).alias("x"),
         )
-        x = x.localCheckpoint(eager=False)
+        x = x.localCheckpoint(eager=i == KATZ_ITERS)
+    nodes.unpersist()
     return x.select(
         "id", F.expr("CAST((25 * x + 8) div 16 AS BIGINT)").alias("katz_e8")
     )

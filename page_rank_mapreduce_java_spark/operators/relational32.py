@@ -155,31 +155,26 @@ def q_graph_centrality_rank_agreement(
     (value, id) total orders, 2·avg-rank tie collapse, DECIMAL/HUGEINT
     sufficient statistics, identical correctly-rounded terminal).
     """
-    from page_rank_mapreduce_java_spark.graph.centrality import (
-        _key_partitioned_edges,
-    )
+    from page_rank_mapreduce_java_spark.graph.keyed import keyed_edges
     from page_rank_mapreduce_java_spark.operators.relational25 import (
         _katz_from_sym,
     )
 
-    # r13 (guide §2.4): ONE persisted, src-keyed edge relation feeds
-    # both iterative chains. The r12 shape built the co-occurrence
-    # self-join twice (once for pagerank's setup, once inside the Katz
-    # query) and Katz's unpersisted sym re-ran that subtree in every
-    # one of its six supersteps.
+    # ONE persisted, src-keyed edge relation (graph/keyed.py) feeds both
+    # iterative chains, so the co-occurrence self-join runs once. Both
+    # chains return materialized vectors, so the edges are released at
+    # the block's end.
     e = cooccurrence_edges(spark, sf_dir)
-    sym = _key_partitioned_edges(
-        e.unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ),
-        cache_key=f"cooc:{sf_dir}",
+    sym = e.unionByName(
+        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    pr = (
-        pagerank(sym, num_iterations=AGREE_PR_ITERS, damping=AGREE_DAMPING)
-        .ranks.withColumn("pr_e8", F.round(F.col("rank") * 1e8).cast("long"))
-        .select("id", "pr_e8")
-    )
-    kz = _katz_from_sym(sym)
+    with keyed_edges(sym, memo=f"cooc:{sf_dir}") as (keyed, _):
+        pr = (
+            pagerank(keyed, num_iterations=AGREE_PR_ITERS, damping=AGREE_DAMPING)
+            .ranks.withColumn("pr_e8", F.round(F.col("rank") * 1e8).cast("long"))
+            .select("id", "pr_e8")
+        )
+        kz = _katz_from_sym(keyed)
     both = pr.join(kz, "id")
     # ties-averaged 2·avg-ranks per metric via the global-ranking
     # chassis (nodes are dim-scale but GROW with the corpus — the

@@ -30,6 +30,10 @@ from pyspark.sql import DataFrame
 
 
 def floor_scan_parallelism(df: DataFrame) -> DataFrame:
+    # A streaming relation has no RDD to inspect; micro-batches keep the
+    # source's own parallelism.
+    if df.isStreaming:
+        return df
     spark = df.sparkSession
     par = int(spark.conf.get("spark.sql.shuffle.partitions"))
     if df.rdd.getNumPartitions() < par:

@@ -147,6 +147,21 @@ def test_emit_json_line_rejects_unserializable_payload_before_writing():
         os.close(r)
 
 
+def test_emit_json_line_rejects_nan_before_writing():
+    # NaN/Infinity are not JSON: a strict parser would reject the whole
+    # line.
+    import pytest
+
+    r, w = os.pipe()
+    try:
+        with pytest.raises(ValueError):
+            bench._emit_json_line(w, {"value": float("nan")})
+        os.close(w)
+        assert os.read(r, 4096) == b""
+    finally:
+        os.close(r)
+
+
 def test_seal_stdout_isolates_the_final_line_from_stdout_chatter():
     # End-to-end contract in a subprocess: after _seal_stdout, print()
     # chatter (and anything a child writes to fd 1) lands on stderr;
