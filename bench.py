@@ -42,6 +42,7 @@ adjudicable from the JSON alone (PERF.md, driver round 9 §3).
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import re
@@ -223,6 +224,7 @@ SLICE_SIZE = 20
 # graph_pagerank stays in the set as the flagship canary precisely to
 # record that fact honestly; the three others carry the parallelism
 # signal.
+SCALE10X_FACTOR = 10
 SCALE10X_QUERIES = [
     "graph_pagerank",
     "rec_item_item_topk",
@@ -282,6 +284,16 @@ def _emit_json_line(fd: int, obj: dict) -> None:
     while data:
         n = os.write(fd, data)
         data = data[n:]
+
+
+def _scale_sentinel(sf_dir: str, factor: int, recipe: str) -> str:
+    """The text ``_SCALE_OK`` holds for a scale replica: its source dir,
+    the factor and a sha256 of the build recipe (the script at
+    ``recipe``). A replica is reused only on an exact match, so a new
+    factor or an edited recipe rebuilds it."""
+    with open(recipe, "rb") as f:
+        digest = hashlib.sha256(f.read()).hexdigest()
+    return f"{sf_dir}\nfactor={factor}\nrecipe_sha256={digest}\n"
 
 
 def _cpu_counters() -> list[int] | None:
@@ -710,23 +722,25 @@ def main() -> None:
             "SPARK_GRAFT_SCALE_DIR", "/tmp/sf1_scale_bench"
         )
         sentinel = os.path.join(scale_dir, "_SCALE_OK")
+        recipe = os.path.join(here10, "tools", "make_scale_dir.py")
+        want = _scale_sentinel(sf_dir, SCALE10X_FACTOR, recipe)
         build_sec = None
         built_from = None
         if os.path.exists(sentinel):
             try:
-                built_from = open(sentinel).read().strip()
+                built_from = open(sentinel).read()
             except OSError:
                 built_from = None
-        if built_from != sf_dir:
+        if built_from != want:
             t0 = time.time()
             try:
                 rc = subprocess.run(
                     [
                         sys.executable,
-                        os.path.join(here10, "tools", "make_scale_dir.py"),
+                        recipe,
                         sf_dir,
                         scale_dir,
-                        "10",
+                        str(SCALE10X_FACTOR),
                     ],
                     stdout=sys.stderr,
                     stderr=sys.stderr,
@@ -737,15 +751,15 @@ def main() -> None:
                 print(f"bench: scale10x build error: {e}", file=sys.stderr)
             if rc == 0:
                 with open(sentinel, "w") as f:
-                    f.write(sf_dir + "\n")
-                built_from = sf_dir
+                    f.write(want)
+                built_from = want
                 build_sec = round(time.time() - t0, 1)
             else:
                 print(
                     "bench: scale10x replica build failed; block skipped",
                     file=sys.stderr,
                 )
-        if built_from == sf_dir:
+        if built_from == want:
             from page_rank_mapreduce_java_spark.graph.queries import (
                 _RANKS_CACHE as _rc10,
             )
@@ -785,7 +799,7 @@ def main() -> None:
             s10_steal = _steal_pct(s10_cpu0, _cpu_counters())
             out["scale10x"] = {
                 "dir": scale_dir,
-                "factor": 10,
+                "factor": SCALE10X_FACTOR,
                 "base_sf": sf,
                 "cpus": out["cpus"],
                 "queries": s10,

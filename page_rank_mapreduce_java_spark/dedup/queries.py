@@ -464,13 +464,10 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pairs = q_dedup_minhash_lsh_pairs(spark, sf_dir)
     edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    # stop_early: the LSH collision graph's diameter is 2-3 while the round
-    # budget is 6; exiting at the fixpoint halves the component step
-    # (measured 2.8-3.7 s -> 1.4-1.8 s at sf0.1, PERF.md). Oracle-safe:
-    # the unrolled 6-step oracle lands on the same stable fixpoint.
-    comp = connected_components(
-        edges, max_iterations=DEDUP_CC_ITERS, stop_early=True
-    )
+    # The LSH collision graph's diameter is 2-3 while the round budget is
+    # 6; connected_components exits at the fixpoint for free, and the
+    # unrolled 6-step oracle lands on the same stable labels.
+    comp = connected_components(edges, max_iterations=DEDUP_CC_ITERS)
     # comp is checkpointed, so nothing reads the LSH signature cache any
     # more; an equal plan finds the cached entry to release.
     _signatures(spark, sf_dir).unpersist()

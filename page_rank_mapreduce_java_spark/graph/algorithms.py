@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from page_rank_mapreduce_java_spark.graph.keyed import keyed_edges
-from page_rank_mapreduce_java_spark.plans.checkpoints import cut_lineage
+from page_rank_mapreduce_java_spark.plans.checkpoints import cut_lineage, iterate
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -35,7 +35,6 @@ def _symmetrize(edges: DataFrame) -> DataFrame:
 def connected_components(
     edges: DataFrame,
     max_iterations: int = 10,
-    stop_early: bool = False,
 ) -> DataFrame:
     """Undirected connected components: label = min node id in component.
 
@@ -43,41 +42,25 @@ def connected_components(
     the label-propagation rounds; propagation reaches fixpoint once every
     shortest path to its component's minimum is covered (≤ diameter).
 
-    ``stop_early`` exits once a round changes no label. The check is one
-    small job over the two checkpointed label vectors (rank-vector-sized,
-    never edge-sized) and is oracle-safe: a fixpoint is stable, so an
-    unrolled oracle running the full ``max_iterations`` computes the
-    identical labels. Default OFF: measured on the derived corpus graph
-    (diameter ≈ round budget) the per-round check job costs about what it
-    saves; turn it on when the round budget far exceeds the expected
-    diameter.
+    The loop exits after the first round that changes no label; the test
+    rides the checkpoint's own job (``iterate``), so it costs no job.
     """
     with keyed_edges(_symmetrize(edges)) as (sym, partitions):
         nodes = sym.select(F.col("src").alias("id")).distinct().repartition(partitions, "id")
-        labels = cut_lineage(nodes.select("id", F.col("id").alias("component")))
-        for _ in range(max_iterations):
+
+        def step(labels: DataFrame) -> DataFrame:
             nbr_min = (
                 labels.join(sym, labels.id == sym.src)
                 .groupBy(F.col("dst").alias("id"))
                 .agg(F.min("component").alias("nbr"))
             )
-            new_labels = cut_lineage(
-                labels.join(nbr_min, "id", "left").select(
-                    "id", F.least(F.col("component"), F.coalesce("nbr", F.col("component"))).alias("component")
-                )
+            new = F.least(F.col("component"), F.coalesce("nbr", F.col("component")))
+            return labels.join(nbr_min, "id", "left").select(
+                "id", new.alias("component"), (new != F.col("component")).alias("_moved")
             )
-            if stop_early:
-                changed = (
-                    new_labels.alias("a")
-                    .join(labels.alias("b"), "id")
-                    .filter(F.col("a.component") != F.col("b.component"))
-                    .first()
-                )
-                labels = new_labels
-                if changed is None:
-                    break
-            else:
-                labels = new_labels
+
+        labels = cut_lineage(nodes.select("id", F.col("id").alias("component")))
+        labels = iterate(labels, step, max_iterations)
     return labels
 
 
@@ -153,7 +136,9 @@ def sssp_weighted(
     ``edges``: DataFrame[src, dst, w] (w coerced to long). Unreached
     nodes get distance -1; after r rounds distances are exact for all
     shortest paths of <= r edges (the oracle unrolls the identical round
-    count, so the comparison holds at any r).
+    count, so the comparison holds at any r). The loop exits after the
+    first round that lowers no distance, a fixpoint the unrolled oracle
+    also lands on; the test rides the checkpoint's job (``iterate``).
 
     Returns DataFrame[id long, dist long].
     """
@@ -173,29 +158,29 @@ def sssp_weighted(
         )
         if src_ids.first() is None:
             raise ValueError("source set has no ids present in the graph")
-        dist = cut_lineage(
-            nodes.join(src_ids.withColumn("d0", F.lit(0)), "id", "left").select(
-                "id", F.coalesce("d0", F.lit(-1)).cast("long").alias("dist")
-            )
-        )
-        for _ in range(rounds):
+
+        def step(dist: DataFrame) -> DataFrame:
             reached = dist.filter(F.col("dist") >= 0)
             relax = (
                 reached.join(ed, reached.id == ed.src)
                 .groupBy(F.col("dst").alias("id"))
                 .agg(F.min(F.col("dist") + F.col("w")).alias("cand"))
             )
-            dist = cut_lineage(
-                dist.join(relax, "id", "left").select(
-                    "id",
-                    F.when(
-                        F.col("dist") < 0, F.coalesce("cand", F.lit(-1))
-                    )
-                    .otherwise(F.least(F.col("dist"), F.coalesce("cand", F.col("dist"))))
-                    .cast("long")
-                    .alias("dist"),
-                )
+            new = (
+                F.when(F.col("dist") < 0, F.coalesce("cand", F.lit(-1)))
+                .otherwise(F.least(F.col("dist"), F.coalesce("cand", F.col("dist"))))
+                .cast("long")
             )
+            return dist.join(relax, "id", "left").select(
+                "id", new.alias("dist"), (new != F.col("dist")).alias("_moved")
+            )
+
+        dist = cut_lineage(
+            nodes.join(src_ids.withColumn("d0", F.lit(0)), "id", "left").select(
+                "id", F.coalesce("d0", F.lit(-1)).cast("long").alias("dist")
+            )
+        )
+        dist = iterate(dist, step, rounds)
     return dist
 
 
@@ -235,8 +220,10 @@ def strongly_connected_components(
     Chassis identical to connected_components: edges shuffled once onto
     their join key (graph/keyed.py), then trimmed to the live subgraph
     each outer round; supersteps move only (id, color/mark) vectors;
-    lineage cut per step; every convergence check is a first()-probe on
-    a node-sized relation. Rounds are
+    lineage cut per step. The coloring and confirmation fixpoints exit
+    through ``iterate``, whose test rides the checkpoint job; only the
+    trim and outer loops still probe with first() on a node-sized
+    relation. Rounds are
     data-dependent (max_outer/max_inner are safety bounds ~ graph
     diameter, not tuning knobs), which is exactly why this form trades
     away the unrolled-SQL oracle — q_scc's fixed-round doubling closure
@@ -296,38 +283,22 @@ def strongly_connected_components(
                 continue
 
             # --- 2. forward max-coloring to fixpoint ---------------------
-            color = cut_lineage(nodes.select("id", F.col("id").alias("color")))
-            for _ in range(max_inner):
+            def color_step(color: DataFrame) -> DataFrame:
                 nbr = (
                     color.join(ed, color.id == ed.src)
                     .groupBy(F.col("dst").alias("id"))
                     .agg(F.max("color").alias("c"))
                 )
-                new_color = cut_lineage(
-                    color.join(nbr, "id", "left").select(
-                        "id",
-                        F.greatest(
-                            F.col("color"), F.coalesce("c", F.col("color"))
-                        ).alias("color"),
-                    )
+                new = F.greatest(F.col("color"), F.coalesce("c", F.col("color")))
+                return color.join(nbr, "id", "left").select(
+                    "id", new.alias("color"), (new != F.col("color")).alias("_moved")
                 )
-                changed = (
-                    new_color.alias("a")
-                    .join(color.alias("b"), "id")
-                    .filter(F.col("a.color") != F.col("b.color"))
-                    .first()
-                )
-                color = new_color
-                if changed is None:
-                    break
+
+            color = cut_lineage(nodes.select("id", F.col("id").alias("color")))
+            color = iterate(color, color_step, max_inner)
 
             # --- 3. backward confirmation within each color --------------
-            mark = cut_lineage(
-                color.select(
-                    "id", "color", (F.col("id") == F.col("color")).alias("m")
-                )
-            )
-            for _ in range(max_inner):
+            def confirm_step(mark: DataFrame) -> DataFrame:
                 reach = (
                     mark.filter("m")
                     .join(ed, mark.id == ed.dst)
@@ -338,15 +309,19 @@ def strongly_connected_components(
                     mark.filter(~F.col("m"))
                     .join(reach, "id")
                     .filter(F.col("color") == F.col("vc"))
-                    .select("id")
+                    .select("id", F.lit(True).alias("_moved"))
                 )
-                if newly.first() is None:
-                    break
-                mark = cut_lineage(
-                    mark.join(newly.withColumn("_n", F.lit(True)), "id", "left").select(
-                        "id", "color", (F.col("m") | F.coalesce("_n", F.lit(False))).alias("m")
-                    )
+                hit = F.coalesce("_moved", F.lit(False))
+                return mark.join(newly, "id", "left").select(
+                    "id", "color", (F.col("m") | hit).alias("m"), hit.alias("_moved")
                 )
+
+            mark = cut_lineage(
+                color.select(
+                    "id", "color", (F.col("id") == F.col("color")).alias("m")
+                )
+            )
+            mark = iterate(mark, confirm_step, max_inner)
 
             members = mark.filter("m").select("id", "color")
             scc_lbl = members.groupBy("color").agg(F.min("id").alias("scc_id"))
@@ -376,7 +351,9 @@ def label_propagation(
     is not reproducible; min-tiebreak synchronous LPA is, and is what an
     unrolled SQL oracle can mirror). A FIXED round count — LPA has no
     fixpoint guarantee (labels can oscillate on bipartite-ish structure),
-    so bounded rounds are the algorithm, not a compromise.
+    so bounded rounds are the algorithm, not a compromise. A round that
+    changes no label is a fixpoint (the step is deterministic), so the
+    loop exits there through ``iterate`` at no extra job.
 
     Returns DataFrame[id long, community long] (community = final label).
 
@@ -395,8 +372,7 @@ def label_propagation(
     """
     with keyed_edges(_symmetrize(edges)) as (sym, partitions):
         nodes = sym.select(F.col("src").alias("id")).distinct().repartition(partitions, "id")
-        labels = cut_lineage(nodes.select("id", F.col("id").alias("label")))
-        for _ in range(rounds):
+        def step(labels: DataFrame) -> DataFrame:
             counts = (
                 labels.join(sym, labels.id == sym.src)
                 .groupBy(F.col("dst").alias("id"), F.col("label"))
@@ -407,9 +383,11 @@ def label_propagation(
                 .agg(F.max(F.struct(F.col("c"), (-F.col("label")).alias("nl"))).alias("m"))
                 .select("id", (-F.col("m.nl")).alias("new"))
             )
-            labels = cut_lineage(
-                labels.join(best, "id", "left").select(
-                    "id", F.coalesce("new", F.col("label")).alias("label")
-                )
+            new = F.coalesce("new", F.col("label"))
+            return labels.join(best, "id", "left").select(
+                "id", new.alias("label"), (new != F.col("label")).alias("_moved")
             )
+
+        labels = cut_lineage(nodes.select("id", F.col("id").alias("label")))
+        labels = iterate(labels, step, rounds)
     return labels.select("id", F.col("label").alias("community"))

@@ -38,11 +38,101 @@ betweenness-family centralities (Brandes–Pich 2007): cost is linear in
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from page_rank_mapreduce_java_spark.graph.keyed import keyed_edges
 from page_rank_mapreduce_java_spark.plans.checkpoints import cut_lineage
+
+
+def _sigma_levels(
+    sym: DataFrame, sources: DataFrame, max_depth: int
+) -> list[DataFrame]:
+    """Forward pass shared by stress and betweenness: ``levels[l]`` is
+    DataFrame[s, id, sigma] for the nodes at distance ``l`` from source
+    ``s``, with ``sigma`` = the number of shortest s→id paths (BIGINT).
+    ``sym`` must be the keyed edge relation."""
+    lvl0 = cut_lineage(
+        sources.select(
+            F.col("src").alias("s"),
+            F.col("src").alias("id"),
+            F.lit(1).cast("long").alias("sigma"),
+        )
+    )
+    levels = [lvl0]
+    # ``visited`` is only ever a union of already-checkpointed levels, so
+    # it needs no cut of its own (one eager job per level saved): the
+    # union lineage is depth-bounded by max_depth and each leg scans a
+    # checkpoint.
+    visited = lvl0.select("s", "id")
+    for _ in range(max_depth):
+        prev = levels[-1]
+        cand = (
+            prev.join(sym, prev.id == sym.src)
+            .select("s", F.col("dst").alias("id"), "sigma")
+            .groupBy("s", "id")
+            .agg(F.sum("sigma").alias("sigma"))
+        )
+        nxt = cut_lineage(cand.join(visited, ["s", "id"], "left_anti"))
+        levels.append(nxt)
+        visited = visited.unionByName(nxt.select("s", "id"))
+    return levels
+
+
+def _accumulate(
+    sym: DataFrame,
+    levels: list[DataFrame],
+    term: Column,
+    total: Column,
+    name: str,
+) -> DataFrame:
+    """Backward pass shared by stress and betweenness, deepest level up:
+    acc(s,v) = Σ_{w ∈ DAG-succ(v)} ``term``, where ``term`` reads
+    ``sv``/``sw`` (σ of v and w) and ``aw`` (acc of w). Then ``total``
+    (over ``sigma`` and ``acc``) sums per node over levels ≥ 1 — a
+    level-0 row is v = s, an endpoint, not interior. Returns
+    DataFrame[id, <name>] over every node of ``sym`` (0 where never
+    interior), checkpointed so the caller may release the keyed edges."""
+    max_depth = len(levels) - 1
+    above = levels[max_depth].select(
+        "s", "id", "sigma", F.lit(0).cast("long").alias("acc")
+    )
+    interior = above
+    for l in range(max_depth - 1, -1, -1):
+        cur = levels[l]
+        succ = (
+            cur.select("s", F.col("id").alias("v"), F.col("sigma").alias("sv"))
+            .join(sym, F.col("v") == sym.src)
+            .select("s", "v", "sv", F.col("dst").alias("w"))
+            .join(
+                above.select(
+                    "s",
+                    F.col("id").alias("w"),
+                    F.col("sigma").alias("sw"),
+                    F.col("acc").alias("aw"),
+                ),
+                ["s", "w"],
+            )
+            .groupBy("s", F.col("v").alias("id"))
+            .agg(F.sum(term).alias("acc"))
+        )
+        above = cut_lineage(
+            cur.join(succ, ["s", "id"], "left").select(
+                "s",
+                "id",
+                "sigma",
+                F.coalesce("acc", F.lit(0)).cast("long").alias("acc"),
+            )
+        )
+        if l > 0:
+            interior = interior.unionByName(above)
+    per_node = interior.groupBy("id").agg(total.alias(name))
+    nodes = sym.select(F.col("src").alias("id")).distinct()
+    return cut_lineage(
+        nodes.join(per_node, "id", "left").select(
+            "id", F.coalesce(name, F.lit(0)).cast("long").alias(name)
+        )
+    )
 
 
 def stress_centrality_sampled(
@@ -59,77 +149,13 @@ def stress_centrality_sampled(
     every node of ``sym`` (0 where never interior).
     """
     with keyed_edges(sym.select("src", "dst"), memo=cache_key) as (sym, _):
-        lvl0 = cut_lineage(
-            sources.select(
-                F.col("src").alias("s"),
-                F.col("src").alias("id"),
-                F.lit(1).cast("long").alias("sigma"),
-            )
-        )
-        levels = [lvl0]
-        # r12: ``visited`` is only ever a union of ALREADY-checkpointed level
-        # relations, so its per-level cut_lineage was one pure-overhead eager
-        # job per level (the union lineage is depth-bounded by max_depth and
-        # recomputation-free — each leg scans a checkpoint). Dropping it
-        # removes max_depth+1 jobs per invocation; results are unchanged.
-        visited = lvl0.select("s", "id")
-        for _ in range(max_depth):
-            prev = levels[-1]
-            cand = (
-                prev.join(sym, prev.id == sym.src)
-                .select("s", F.col("dst").alias("id"), "sigma")
-                .groupBy("s", "id")
-                .agg(F.sum("sigma").alias("sigma"))
-            )
-            nxt = cut_lineage(cand.join(visited, ["s", "id"], "left_anti"))
-            levels.append(nxt)
-            visited = visited.unionByName(nxt.select("s", "id"))
-
-        # backward accumulation of continuation counts g
-        deepest = levels[max_depth]
-        parts = [
-            deepest.select("s", "id", "sigma", F.lit(0).cast("long").alias("g"))
-        ]
-        g_above = parts[0].select("s", "id", "g")
-        for l in range(max_depth - 1, -1, -1):
-            cur = levels[l]
-            succ = (
-                cur.select("s", F.col("id").alias("v"))
-                .join(sym, F.col("v") == sym.src)
-                .select("s", "v", F.col("dst").alias("w"))
-                .join(
-                    g_above.select(
-                        "s", F.col("id").alias("w"), F.col("g").alias("gw")
-                    ),
-                    ["s", "w"],
-                )
-                .groupBy("s", F.col("v").alias("id"))
-                .agg(F.sum(F.col("gw") + 1).alias("g"))
-            )
-            cur_g = cut_lineage(
-                cur.join(succ, ["s", "id"], "left").select(
-                    "s",
-                    "id",
-                    "sigma",
-                    F.coalesce("g", F.lit(0)).cast("long").alias("g"),
-                )
-            )
-            parts.append(cur_g)
-            g_above = cur_g.select("s", "id", "g")
-
-        # parts[-1] is level 0 (v = s: endpoint, not interior) — excluded.
-        interior = parts[0]
-        for p in parts[1:-1]:
-            interior = interior.unionByName(p)
-        stress = interior.groupBy("id").agg(
-            F.sum(F.col("sigma") * F.col("g")).alias("stress")
-        )
-        nodes = sym.select(F.col("src").alias("id")).distinct()
-        # Materialized inside the block: the keyed edges are released on exit.
-        return cut_lineage(
-            nodes.join(stress, "id", "left").select(
-                "id", F.coalesce("stress", F.lit(0)).cast("long").alias("stress")
-            )
+        levels = _sigma_levels(sym, sources, max_depth)
+        return _accumulate(
+            sym,
+            levels,
+            F.col("aw") + 1,
+            F.sum(F.col("sigma") * F.col("acc")),
+            "stress",
         )
 
 
@@ -179,90 +205,13 @@ def betweenness_sampled(
     frontier-sized × |sources|, never edge-sized.
     """
     with keyed_edges(sym.select("src", "dst"), memo=cache_key) as (sym, _):
-        lvl0 = cut_lineage(
-            sources.select(
-                F.col("src").alias("s"),
-                F.col("src").alias("id"),
-                F.lit(1).cast("long").alias("sigma"),
-            )
-        )
-        levels = [lvl0]
-        # r12: ``visited`` is only ever a union of ALREADY-checkpointed level
-        # relations, so its per-level cut_lineage was one pure-overhead eager
-        # job per level (the union lineage is depth-bounded by max_depth and
-        # recomputation-free — each leg scans a checkpoint). Dropping it
-        # removes max_depth+1 jobs per invocation; results are unchanged.
-        visited = lvl0.select("s", "id")
-        for _ in range(max_depth):
-            prev = levels[-1]
-            cand = (
-                prev.join(sym, prev.id == sym.src)
-                .select("s", F.col("dst").alias("id"), "sigma")
-                .groupBy("s", "id")
-                .agg(F.sum("sigma").alias("sigma"))
-            )
-            nxt = cut_lineage(cand.join(visited, ["s", "id"], "left_anti"))
-            levels.append(nxt)
-            visited = visited.unionByName(nxt.select("s", "id"))
-
-        # backward accumulation of fixed-point dependencies δ_fp
-        deepest = levels[max_depth]
-        parts = [
-            deepest.select(
-                "s", "id", "sigma", F.lit(0).cast("long").alias("delta")
-            )
-        ]
-        above = parts[0]
-        for l in range(max_depth - 1, -1, -1):
-            cur = levels[l]
-            succ = (
-                cur.select(
-                    "s",
-                    F.col("id").alias("v"),
-                    F.col("sigma").alias("sv"),
-                )
-                .join(sym, F.col("v") == sym.src)
-                .select("s", "v", "sv", F.col("dst").alias("w"))
-                .join(
-                    above.select(
-                        "s",
-                        F.col("id").alias("w"),
-                        F.col("sigma").alias("sw"),
-                        F.col("delta").alias("dw"),
-                    ),
-                    ["s", "w"],
-                )
-                .groupBy("s", F.col("v").alias("id"))
-                .agg(
-                    F.sum(
-                        F.expr(f"(sv * ({scale} + dw)) div sw")
-                    ).alias("delta")
-                )
-            )
-            cur_d = cut_lineage(
-                cur.join(succ, ["s", "id"], "left").select(
-                    "s",
-                    "id",
-                    "sigma",
-                    F.coalesce("delta", F.lit(0)).cast("long").alias("delta"),
-                )
-            )
-            parts.append(cur_d)
-            above = cur_d
-
-        # parts[-1] is level 0 (v = s: endpoint, not interior) — excluded.
-        interior = parts[0]
-        for p in parts[1:-1]:
-            interior = interior.unionByName(p)
-        bc = interior.groupBy("id").agg(F.sum("delta").alias("betweenness_fp"))
-        nodes = sym.select(F.col("src").alias("id")).distinct()
-        return cut_lineage(
-            nodes.join(bc, "id", "left").select(
-                "id",
-                F.coalesce("betweenness_fp", F.lit(0))
-                .cast("long")
-                .alias("betweenness_fp"),
-            )
+        levels = _sigma_levels(sym, sources, max_depth)
+        return _accumulate(
+            sym,
+            levels,
+            F.expr(f"(sv * ({scale} + aw)) div sw"),
+            F.sum("acc"),
+            "betweenness_fp",
         )
 
 
@@ -276,7 +225,9 @@ def labeled_bfs_levels(
     d(s, id) ∈ [0, max_depth], one row per (source, first-visited node)
     — the shared forward pass of the distance-centrality family
     (harmonic/closeness, eccentricity, mean path length), identical to
-    stress_centrality_sampled's forward phase minus the path counts.
+    ``_sigma_levels`` minus the path counts. It keeps its own pass on
+    purpose: carrying σ would let those distance queries fail on a
+    BIGINT overflow under ANSI mode, which they cannot do without it.
 
     ``sym``: symmetrized simple edge relation DataFrame[src, dst];
     ``sources``: DataFrame[src]. Scale shape: one frontier⋈edges join
@@ -294,8 +245,7 @@ def labeled_bfs_levels(
             )
         )
         out = lvl
-        # r12: same visited-checkpoint removal as the stress/betweenness
-        # loops above — the union of checkpointed levels needs no cut.
+        # The union of checkpointed levels needs no cut (see _sigma_levels).
         visited = lvl.select("s", "id")
         for depth in range(1, max_depth + 1):
             cand = (

@@ -185,3 +185,15 @@ def test_seal_stdout_isolates_the_final_line_from_stdout_chatter():
     assert out_lines == ['{"metric": "m", "value": 1.0}']
     assert "driver chatter on old stdout" in proc.stderr.decode()
     assert "child chatter on fd 1" in proc.stderr.decode()
+
+
+def test_scale_sentinel_rebuilds_on_new_factor_or_recipe(tmp_path):
+    # the scale10x replica is reused only when _SCALE_OK matches exactly
+    recipe = tmp_path / "make_scale_dir.py"
+    recipe.write_text("FACTOR_RECIPE = 1\n")
+    built = bench._scale_sentinel("/data/sf0.1", 10, str(recipe))
+    assert bench._scale_sentinel("/data/sf0.1", 10, str(recipe)) == built
+    assert bench._scale_sentinel("/data/sf0.01", 10, str(recipe)) != built
+    assert bench._scale_sentinel("/data/sf0.1", 5, str(recipe)) != built
+    recipe.write_text("FACTOR_RECIPE = 2\n")
+    assert bench._scale_sentinel("/data/sf0.1", 10, str(recipe)) != built

@@ -34,14 +34,15 @@ def test_cc_chain_propagation_depth(spark):
 
 
 def test_cc_early_stop_matches_fixed_rounds(spark):
-    # early exit at fixpoint must give identical labels to the fixed
-    # round budget (fixpoints are stable under further propagation)
+    # the free fixpoint exit must land on the known components, and on
+    # the labels of the exact budget the 5-node path needs (fixpoints are
+    # stable under further propagation)
     e = _edges(spark, [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (12, 11)])
-    fixed = sorted(map(tuple, connected_components(e, max_iterations=8).collect()))
-    early = sorted(
-        map(tuple, connected_components(e, max_iterations=8, stop_early=True).collect())
-    )
-    assert early == fixed
+    loose = sorted(map(tuple, connected_components(e, max_iterations=8).collect()))
+    expected = [(i, 1) for i in range(1, 6)] + [(i, 10) for i in (10, 11, 12)]
+    assert loose == expected
+    exact = sorted(map(tuple, connected_components(e, max_iterations=4).collect()))
+    assert loose == exact
 
 
 def test_bfs_directed_vs_symmetrized(spark):
