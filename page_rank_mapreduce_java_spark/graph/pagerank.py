@@ -13,22 +13,30 @@ Spark-idiomatic plan replaces all of that:
   (``ranks ⋈ links`` on id, then ``groupBy(dst).sum``), which is exactly the
   GraphX/GraphFrames triplet step (Gonzalez et al., OSDI'14);
 - the dangling-mass counter (reference pageRank_v2.java:216-222, :79-83)
-  becomes a broadcast 1-row aggregate folded into the same per-iteration
-  action (no driver round-trip; the reference needed a counter RPC per job);
+  becomes ``DataFrame.observe`` on the checkpoint job that cuts each state:
+  the scalar D_t comes back with that job and superstep t+1 reads it as a
+  literal, the reference's Counter channel at no extra job;
 - lineage is cut every iteration with ``localCheckpoint`` — the #1
-  Spark-specific hazard for iterative dataflow (SURVEY.md §4.3). The
-  checkpoint doubles as the one action that executes the iteration. That
-  is one action, not one job: under AQE every shuffle stage runs as its
-  own job, so the traced perfbench ``pagerank_chain`` run (250k edges, 4
-  partitions, 10 supersteps, 4-core host) counts 86 Spark jobs for its 11
-  lineage cuts.
+  Spark-specific hazard for iterative dataflow (SURVEY.md §4.3).
 
-Scale notes (100 TB design point): ranks and links are co-partitioned on
-the join key with the same partition count, so the per-iteration join
-reshuffles only the (small) ranks side; the links side is shuffled once at
-setup. Contributions aggregate map-side first (hash aggregate partial).
-No driver-side collections anywhere except the two scalars (N, dangling
-mass) per iteration.
+Measured plan (traced perfbench ``pagerank_chain``: 250k edges, width 4,
+10 supersteps, 4-core host). Under AQE a cut state reports
+``UnknownPartitioning``, and links (7.6 MB) and the contribution aggregate
+fall below the broadcast threshold, so planner-chosen joins would collect
+both to the driver and broadcast them every superstep (7 Spark jobs).
+Both joins are hinted ``shuffle_hash`` instead: the cut state is
+re-shuffled onto links' partitioning, and the contributions leave through
+the aggregate's own exchange (after its map-side partial sum) at
+``spark.sql.shuffle.partitions``, the width the node table is keyed on;
+links and the node table are read in place. A superstep is 3 jobs (the
+rank exchange, the contribution exchange, the checkpoint), 44 per pass of
+11 cuts, and nothing node- or edge-sized passes the driver. At width 1
+Spark plans links as a single partition, and it re-shuffles a
+single-partition join side to ``spark.sql.shuffle.partitions`` once the
+planner's size estimate passes ``spark.sql.maxSinglePartitionBytes``. A
+cut keeps the estimate of the plan it cut, a product over the superstep's
+joins, which passes that bound within two supersteps, so below ~75k edges
+links is re-shuffled every superstep (4 jobs).
 
 Semantics (general form): with damping d (reference: 0.85, Makefile:24) and
 N nodes,
@@ -43,13 +51,14 @@ outdeg ≡ 1; see SURVEY.md §2.6 M1 for the divergence note.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from page_rank_mapreduce_java_spark.graph.keyed import keyed_edges
-from page_rank_mapreduce_java_spark.plans.checkpoints import cut_lineage
+from page_rank_mapreduce_java_spark.plans.checkpoints import cut_lineage, observed_cut
 
 
 @dataclass
@@ -83,9 +92,9 @@ def pagerank(
     for integral degrees the arithmetic (÷count vs ·1.0÷Σ1.0) is
     IEEE-identical, so existing unweighted results are bit-stable.
 
-    One action per iteration: the dangling 1-row aggregate rides the
-    plan as a broadcast, and the eager localCheckpoint executes it.
-    ``tol`` adds one small action per iteration.
+    One action per iteration, the eager checkpoint, which also returns
+    the dangling mass through ``observe``. ``tol`` adds one L1 action per
+    iteration, a shuffle join of the two cut states.
 
     ``personalize``: optional DataFrame whose first column is a node-id
     source set S. Teleport mass then resets to uniform-over-S instead of
@@ -93,9 +102,10 @@ def pagerank(
     same reset vector). Source ids absent from the graph are ignored.
 
     Scale: the edges are shuffled once onto the join key (graph/keyed.py)
-    and ``links`` is persisted on that partitioning —
-    iterations re-shuffle only the rank vector (8·N bytes·3 cols), never
-    the edges. Contribution sums aggregate map-side before the exchange.
+    and ``links`` is persisted on that partitioning; each superstep
+    re-shuffles the rank vector and the contributions' map-side partial
+    sums, never the edges (see the module docstring for the plan and its
+    width-1 case).
 
     ``reliable_checkpoint_every=k``: every k-th iteration cuts lineage
     with a RELIABLE ``checkpoint()`` to the session's checkpoint dir
@@ -114,123 +124,106 @@ def pagerank(
 
     # links: one row per edge with the emitting node's out-degree. The
     # keyed edges are already hash-partitioned on src, so the per-src
-    # degree window needs no exchange and links inherits the partitioning
-    # every iteration's join reuses. Everything else (nodes, dangling set)
-    # derives from the persisted links so an expensive upstream edge
-    # computation runs exactly once.
+    # degree window needs no exchange and links keeps that partitioning.
     w = (
         F.col(weight_col).cast("double") if weight_col is not None else F.lit(1.0)
     )
     with keyed_edges(
         edges.select("src", "dst", w.alias("w")), partitions=partitions
-    ) as (ed, partitions):
+    ) as (ed, _):
         links = ed.select(
             F.col("src").alias("id"),
             "dst",
             "w",
             F.sum("w").over(Window.partitionBy("src")).alias("deg"),
         ).persist()
+        # The node table, keyed where the contribution aggregate lands: an
+        # id is dangling iff it is never a source (the reference's sink
+        # node 0, pageRank_v2.java:35), and a reset target iff it is in
+        # ``personalize``. Ids only in ``personalize`` have a NULL ``dang``
+        # and are dropped.
+        ids = [
+            links.select("id", F.lit(False).alias("dang"), F.lit(False).alias("reset")),
+            links.select(F.col("dst").alias("id"), F.lit(True), F.lit(False)),
+        ]
+        if personalize is not None:
+            first = F.col(personalize.columns[0])
+            ids.append(personalize.select(first.alias("id"), F.lit(None), F.lit(True)))
         nodes = (
-            links.select("id")
-            .unionByName(links.select(F.col("dst").alias("id")))
-            .distinct()
-            .repartition(partitions, "id")
-            .persist()
-        )
-        n = nodes.count()
-    if n == 0:
-        empty = nodes.withColumn("rank", F.lit(0.0)).localCheckpoint(eager=True)
-        links.unpersist()
-        nodes.unpersist()
-        return PageRankResult(ranks=empty, num_nodes=0, iterations_run=0)
-
-    # Dangling = nodes with no out-edges (the reference's sink node 0 is the
-    # special case; reference pageRank_v2.java:35,216-222).
-    dangling = nodes.join(links.select("id"), "id", "left_anti").persist()
-
-    # Reset-probability vector p: uniform, or uniform-over-sources when
-    # personalized. Co-partitioned with nodes; joined every superstep.
-    if personalize is not None:
-        srcs = (
-            personalize.select(F.col(personalize.columns[0]).alias("id"))
-            .distinct()
-            .join(nodes, "id", "left_semi")
-        )
-        n_src = srcs.count()
-        if n_src == 0:
-            raise ValueError("personalize set has no ids present in the graph")
-        pvec = (
-            nodes.join(srcs.withColumn("p0", F.lit(1.0 / n_src)), "id", "left")
-            .select("id", F.coalesce("p0", F.lit(0.0)).alias("p"))
-            .repartition(partitions, "id")
-            .persist()
-        )
-    else:
-        # A constant column over the persisted nodes: nothing to cache.
-        pvec = nodes.select("id", F.lit(1.0 / n).alias("p"))
-
-    ranks = cut_lineage(pvec.select("id", F.col("p").alias("rank")))
-
-    result = PageRankResult(ranks=ranks, num_nodes=n, iterations_run=0)
-
-    for it in range(num_iterations):
-        # 1-row dangling-mass aggregate, broadcast into the update — stays
-        # inside this iteration's one action (contrast: the reference's
-        # Counter needed a job boundary + client RPC to move this scalar).
-        d_df = (
-            ranks.join(dangling, "id", "left_semi")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm"))
-        )
-
-        contribs = (
-            ranks.join(links, "id")
-            .select(
-                F.col("dst").alias("id"),
-                (F.col("rank") * F.col("w") / F.col("deg")).alias("c"),
-            )
+            reduce(DataFrame.union, ids)
+            .repartition(int(spark.conf.get("spark.sql.shuffle.partitions")), "id")
             .groupBy("id")
-            .agg(F.sum("c").alias("contrib"))
+            .agg(F.bool_and("dang").alias("dang"), F.bool_or("reset").alias("reset"))
+            .filter(F.col("dang").isNotNull())
+            .persist()
         )
-        new_ranks = (
-            pvec.join(contribs, "id", "left")
-            .crossJoin(F.broadcast(d_df))
-            .select(
+        n, n_reset = nodes.agg(F.count("*"), F.count_if("reset")).first()
+    try:
+        if n == 0:
+            return PageRankResult(
+                ranks=cut_lineage(nodes.select("id", F.lit(0.0).alias("rank"))),
+                num_nodes=0,
+                iterations_run=0,
+            )
+        if personalize is None:
+            p = F.lit(1.0 / n)
+        elif n_reset == 0:
+            raise ValueError("personalize set has no ids present in the graph")
+        else:
+            p = F.when(F.col("reset"), F.lit(1.0 / n_reset)).otherwise(F.lit(0.0))
+        node = nodes.select("id", p.alias("p"), "dang")
+        # Each cut returns the dangling mass of the state it cuts.
+        mass = F.sum(F.when(F.col("dang"), F.col("rank")))
+        init = node.select("id", F.col("p").alias("rank"), "dang")
+        ranks, dm = observed_cut(init, mass, "dang")
+        result = PageRankResult(ranks=ranks, num_nodes=n, iterations_run=0)
+        for it in range(num_iterations):
+            # Shuffle joins: the cut state is re-shuffled onto links'
+            # partitioning and the contributions onto the node table's;
+            # links and node are read in place.
+            contribs = (
+                ranks.hint("shuffle_hash")
+                .join(links, "id")
+                .select(
+                    F.col("dst").alias("id"),
+                    (F.col("rank") * F.col("w") / F.col("deg")).alias("c"),
+                )
+                .groupBy("id")
+                .agg(F.sum("c").alias("contrib"))
+            )
+            new_ranks = node.join(contribs.hint("shuffle_hash"), "id", "left").select(
                 "id",
+                "dang",
                 (
                     F.lit(1.0 - damping) * F.col("p")
                     + F.lit(damping)
-                    * (F.coalesce(F.col("contrib"), F.lit(0.0)) + F.col("dm") * F.col("p"))
+                    * (
+                        F.coalesce(F.col("contrib"), F.lit(0.0))
+                        + F.lit(dm or 0.0) * F.col("p")
+                    )
                 ).alias("rank"),
             )
-        )
-        # The one action per iteration; reliable on the cadence boundary.
-        reliable = bool(
-            reliable_checkpoint_every and (it + 1) % reliable_checkpoint_every == 0
-        )
-        new_ranks = cut_lineage(new_ranks, reliable=reliable)
-
-        if tol is not None:
-            delta = (
-                new_ranks.alias("a")
-                .join(ranks.alias("b"), "id")
-                .agg(F.sum(F.abs(F.col("a.rank") - F.col("b.rank"))).alias("d"))
-                .first()["d"]
+            reliable = bool(
+                reliable_checkpoint_every and (it + 1) % reliable_checkpoint_every == 0
             )
-            result.l1_deltas.append(delta)
-            ranks = new_ranks
+            new_ranks, dm = observed_cut(new_ranks, mass, "dang", reliable)
             result.iterations_run = it + 1
-            if delta < tol:
+            if tol is not None:
+                delta = (
+                    new_ranks.alias("a")
+                    .join(ranks.alias("b").hint("shuffle_hash"), "id")
+                    .agg(F.sum(F.abs(F.col("a.rank") - F.col("b.rank"))).alias("d"))
+                    .first()["d"]
+                )
+                result.l1_deltas.append(delta)
+            ranks = new_ranks
+            if tol is not None and delta < tol:
                 break
-        else:
-            ranks = new_ranks
-            result.iterations_run = it + 1
-
-    result.ranks = ranks
-    nodes.unpersist()
-    links.unpersist()
-    dangling.unpersist()
-    pvec.unpersist()
-    return result
+        result.ranks = ranks
+        return result
+    finally:
+        nodes.unpersist()
+        links.unpersist()
 
 
 def reference_init_state(edges: DataFrame, k: int) -> DataFrame:

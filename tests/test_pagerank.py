@@ -150,6 +150,55 @@ def test_personalized_pagerank_matches_python_oracle(spark):
     assert got[1] > got[5]
 
 
+def test_observed_dangling_mass_matches_oracle_on_both_cuts(spark, tmp_path):
+    # Dangling 4, 6 and 7; the source set holds dangling 6 (and 99, absent).
+    # With reliable_checkpoint_every=2, supersteps 2 and 4 cut with
+    # checkpoint() and the others with localCheckpoint, so the dangling
+    # mass is read through observe on both kinds of cut.
+    edges = [(1, 2), (2, 3), (3, 1), (3, 4), (1, 5), (5, 6), (5, 7), (2, 7)]
+    df = spark.createDataFrame(edges, "src LONG, dst LONG")
+    srcs = spark.createDataFrame([(1,), (6,), (99,)], "id LONG")
+    sc = spark.sparkContext
+    if sc.getCheckpointDir() is None:
+        # A set dir cannot be unset: pin the missing-dir error first.
+        with pytest.raises(ValueError, match="setCheckpointDir"):
+            pagerank(df, num_iterations=1, reliable_checkpoint_every=1)
+        sc.setCheckpointDir(str(tmp_path / "ckpt"))
+    res = pagerank(df, num_iterations=5, personalize=srcs, reliable_checkpoint_every=2)
+    got = {r.id: r.rank for r in res.ranks.collect()}
+    exp = python_personalized(edges, 5, [1, 6])
+    assert set(got) == set(exp)
+    for v in exp:
+        assert got[v] == pytest.approx(exp[v], abs=1e-12)
+    assert sum(got.values()) == pytest.approx(1.0, abs=1e-12)
+
+
+@pytest.mark.parametrize("width,most", [(2, 3), (1, 4)])
+def test_superstep_job_count(spark, width, most):
+    # Jobs of 4 supersteps minus jobs of 2, so set-up cancels out. A
+    # superstep is the rank exchange, the contribution exchange and the
+    # checkpoint's own job, which also reads the dangling mass. Width 1
+    # adds the re-shuffle of links (graph/pagerank.py).
+    sc = spark.sparkContext
+    edges = chain_edges(spark, 10)
+    jobs = {}
+    for iters in (2, 4):
+        group = f"pagerank-supersteps-{width}-{iters}"
+        sc.setJobGroup(group, group)
+        try:
+            pagerank(edges, num_iterations=iters, partitions=width)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[iters] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert (jobs[4] - jobs[2]) / 2 <= most
+
+
+def test_empty_graph(spark):
+    res = pagerank(spark.createDataFrame([], "src LONG, dst LONG"), num_iterations=3)
+    assert (res.num_nodes, res.iterations_run) == (0, 0)
+    assert res.ranks.columns == ["id", "rank"] and res.ranks.count() == 0
+
+
 def test_personalized_requires_source_in_graph(spark):
     df = spark.createDataFrame([(1, 2)], "src LONG, dst LONG")
     ghost = spark.createDataFrame([(42,)], "id LONG")

@@ -13,6 +13,7 @@ import pytest
 from page_rank_mapreduce_java_spark.operators import relational
 from page_rank_mapreduce_java_spark.graph import queries as gq
 from page_rank_mapreduce_java_spark.dedup import queries as dq
+from page_rank_mapreduce_java_spark.plans.checkpoints import cut_lineage
 from page_rank_mapreduce_java_spark.plans.explain import (
     formatted_plan,
     has_pushed_filter,
@@ -147,18 +148,65 @@ def test_q1_whole_stage_codegen(spark, sf_dir):
     assert executed.count("HashAggregate") >= 2
 
 
-def test_pagerank_iteration_shuffles_ranks_not_links(spark):
-    """After setup, each superstep's exchanges move rank-vector-sized data;
-    the links table is read from storage-level cache (InMemoryTableScan),
-    not re-shuffled."""
+def _executed_ops(plan, shuffled=False):
+    """(class name, node, shuffled?) for every operator of an executed
+    plan, entering AQE query stages but not cached relations. An operator
+    is shuffled when an exchange above it re-partitions its output, i.e.
+    only single-child operators stand between them."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        yield from _executed_ops(plan.executedPlan(), shuffled)
+        return
+    if name.endswith("QueryStageExec"):
+        yield from _executed_ops(plan.plan(), shuffled)
+        return
+    yield name, plan, shuffled
+    cs = plan.children()
+    below = name.endswith("ExchangeExec") or (shuffled and cs.length() == 1)
+    for i in range(cs.length()):
+        yield from _executed_ops(cs.apply(i), below)
+
+
+def test_pagerank_iteration_shuffles_ranks_not_links(spark, monkeypatch):
+    """A superstep plans both joins as shuffle joins, so nothing is
+    broadcast. It re-shuffles the cut rank vector onto the keyed width and
+    the contributions onto the session's 8 shuffle partitions, where the
+    node table is keyed; the cached node table is read in place. So are the
+    cached links at width 4. At width 1 Spark plans links as one partition
+    and re-shuffles it to the session width once the estimate of the cut
+    state passes ``spark.sql.maxSinglePartitionBytes`` (see
+    graph/pagerank.py)."""
     from page_rank_mapreduce_java_spark.graph.generators import chain_edges
     from page_rank_mapreduce_java_spark.graph.pagerank import pagerank
+    from page_rank_mapreduce_java_spark.plans import checkpoints
 
-    res = pagerank(chain_edges(spark, 10), num_iterations=2)
-    # The result plan is a checkpoint scan — constant size, no lineage back
-    # to the edge join (the §4.3 plan-explosion guard).
-    plan = formatted_plan(res.ranks)
-    assert "Scan ExistingRDD" in plan or "LocalTableScan" in plan
+    cuts = []
+
+    def recording_cut(df, reliable=False):
+        cuts.append(df)
+        return cut_lineage(df, reliable)
+
+    monkeypatch.setattr(checkpoints, "cut_lineage", recording_cut)
+    for width in (1, 4):
+        res = pagerank(chain_edges(spark, 10), num_iterations=2, partitions=width)
+        ops = list(_executed_ops(cuts[-1]._jdf.queryExecution().executedPlan()))
+        names = [name for name, _, _ in ops]
+        assert "BroadcastExchangeExec" not in names
+        assert names.count("ShuffledHashJoinExec") == 2
+        scans = {
+            "links" if "dst#" in op.output().toString() else "node": shuffled
+            for name, op, shuffled in ops
+            if name == "InMemoryTableScanExec"
+        }
+        assert scans.keys() == {"links", "node"} and not scans["node"]
+        if width > 1:
+            assert not scans["links"]
+            exchanges = [op for name, op, _ in ops if name == "ShuffleExchangeExec"]
+            assert sorted(op.numPartitions() for op in exchanges) == [width, 8]
+        # The result plan is a checkpoint scan — constant size, no lineage
+        # back to the edge join (the §4.3 plan-explosion guard).
+        plan = formatted_plan(res.ranks)
+        assert "Scan ExistingRDD" in plan or "LocalTableScan" in plan
 
 
 def test_asof_join_is_one_exchange_no_cartesian(spark, sf_dir):
