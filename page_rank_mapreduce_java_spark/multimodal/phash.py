@@ -1,43 +1,29 @@
-"""Perceptual-hash image dedup — multimodal joins the LSH machinery.
+"""Perceptual-hash image dedup: the image modality of the fingerprint
+chassis (fingerprint.py).
 
-The multimodal family (media.py) decodes but never deduplicates (VERDICT
-r4 next #8). This module closes that: a DCT perceptual hash (pHash —
-Zauner, "Implementation and Benchmarking of Perceptual Image Hash
-Functions", 2010; the public phash.org algorithm) computed over REAL
-decoded BMP pixel grids, then Hamming-blocked candidate pairs exactly
-like dedup_simhash_pairs — the same pigeonhole equi-join, a different
-modality plugged into the same machinery.
+A DCT perceptual hash (pHash: Zauner, "Implementation and Benchmarking
+of Perceptual Image Hash Functions", 2010; the public phash.org
+algorithm) over real decoded BMP pixel grids, in deterministic integer
+arithmetic so a DuckDB oracle can certify it end to end:
 
-Everything is deterministic INTEGER arithmetic so a DuckDB oracle can
-certify it end to end:
-
-- Image corpus: one 8×8 grayscale BMP per document. Pixels come 16 per
+- Image: one 8×8 grayscale 24bpp BMP per document. Pixels come 16 per
   digest: block j = md5(seed || ':' || j) yields 16 byte pixels (2 hex
-  chars each) — 4 md5 calls per doc instead of 64 (the audio module's
-  digest-carving trick; Python hashing dominated the encode leg).
-  Derived from the LEADING-CONTENT digest (seed = md5(substr(text,1,64))):
-  the corpus's planted near-dup families share their document head and
-  drift later, so family members render identical images → pHash
-  collisions at hamming 0 that the pair query must find (~20 such pairs
-  at sf0.01), while unrelated docs give independent grids. The BMP bytes are assembled in an Arrow-batched
-  mapInPandas (the encode leg) and decoded back through media.py's real
-  _bmp_pixels (the decode leg) — the hash never shortcuts past the
-  container format.
-- DCT: 2-D type-II DCT as two integer matrix passes (separable form)
-  with the cosine basis pre-scaled to integers (round(cos·2^14)) and
-  rendered as literal constants into BOTH engines — exact, overflow-safe
-  (|coef| ≤ 8·8·255·2^28 < 2^45), and order-independent.
+  chars each). The seed is the leading-content digest
+  md5(substr(text, 1, 64)): the corpus's planted near-dup families share
+  their document head, so family members render identical images and
+  collide at Hamming 0, while unrelated docs give independent grids.
+- DCT: 2-D type-II DCT as two integer matrix passes with the cosine
+  basis pre-scaled to integers (round(cos·2^14)) and rendered as literal
+  constants into both engines: exact, overflow-safe
+  (|coef| ≤ 8·8·255·2^28 < 2^45) and order-independent.
 - Hash: 63 AC coefficients (DC excluded) thresholded against their mean
-  WITHOUT division: bit = 63·coef > Σcoefs. Bits pack into one BIGINT.
-- Pairs: split the 63-bit hash into 4×16-bit blocks; docs sharing any
-  block are candidates (pigeonhole: distance ≤ 3 ⇒ some block equal);
-  verify with bit_count(xor) ≤ PHASH_HAM_MAX.
+  without division: bit = 63·coef > Σcoefs, packed into one BIGINT.
+- Pairs: 4×16-bit blocks (pigeonhole-complete for distance ≤ 3),
+  verified at bit_count(xor) ≤ PHASH_HAM_MAX.
 
-Scale shape (100 TB of images): encode/decode/hash is one narrow
-Arrow-batched pass per image — no shuffle until the doc-keyed hash
-relation; candidate generation is an equi-join on (block, value) whose
-volume tracks near-duplicate volume, not corpus volume (the
-dedup_simhash_pairs argument); verification runs only on collisions.
+The image leg keeps its own encode and hash wrappers (documents_to_bmp,
+bmp_phash) rather than the chassis's: mm_phash_bit_balance
+(operators/relational35.py) calls them directly.
 """
 
 from __future__ import annotations
@@ -48,12 +34,13 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from page_rank_mapreduce_java_spark.catalog import load_table
-from page_rank_mapreduce_java_spark.plans.pairsize import (
-    sum_sq_group_bound,
-    volume_repartition_pairs,
+from page_rank_mapreduce_java_spark.multimodal.fingerprint import (
+    hamming_blocked_pairs,
+    keeper_stream,
+    keepers_sql,
+    pairs_sql,
 )
 
 PHASH_GRID = 8  # pixel grid and DCT size
@@ -181,99 +168,13 @@ def bmp_phash(media: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     return media.mapInPandas(run, "doc_id LONG, phash LONG" + carry_schema)
 
 
-def hamming_blocked_pairs(
-    hashes: DataFrame,
-    hash_col: str,
-    n_blocks: int,
-    block_bits: int,
-    ham_max: int,
-    id_col: str = "doc_id",
-    bound_key: str | None = None,
-) -> DataFrame:
-    """Hamming-blocked near-dup pairs over an integer-hash relation (the
-    dedup_simhash_pairs chassis, generalized across modalities): split
-    the hash into ``n_blocks`` × ``block_bits`` blocks, equi-join docs
-    sharing any block value (pigeonhole: distance ≤ n_blocks - 1 ⇒ some
-    block equal), verify exact Hamming on collisions only.
-
-    The dedup exchange (the DISTINCT over surviving pairs) is
-    VOLUME-SIZED (plans/pairsize.py, the r7 sf10-OOM chassis): on a
-    heavily-duplicated 100 TB corpus, collision-pair volume is
-    Σ_(blk,bv) c² — unbounded relative to the session's fixed shuffle
-    width, the exact class that blew item_item_topk's spill reader. The
-    bound aggregate is one cheap pass over the (persisted) fingerprint
-    relation; repartitioning on (doc_a, doc_b) satisfies the distinct's
-    clustering, so Catalyst elides its own exchange and small corpora
-    keep the session-parallelism plan. ``bound_key`` memoizes the bound
-    per session so repeated plan builds pay it once."""
-    mask = (1 << block_bits) - 1
-    blocks = None
-    for b in range(n_blocks):
-        part = hashes.select(
-            F.col(id_col).alias("doc_id"),
-            F.col(hash_col).alias("_h"),
-            F.lit(b).alias("blk"),
-            F.shiftright(F.col(hash_col), block_bits * b)
-            .bitwiseAND(F.lit(mask))
-            .alias("bv"),
-        )
-        blocks = part if blocks is None else blocks.unionByName(part)
-    pair_bound = sum_sq_group_bound(
-        blocks, ["blk", "bv"], cache_key=bound_key
-    )
-    x, y = blocks.alias("x"), blocks.alias("y")
-    dist = F.bit_count(F.col("x._h").bitwiseXOR(F.col("y._h")))
-    cand = (
-        x.join(y, ["blk", "bv"])
-        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-        .select(
-            F.col("x.doc_id").alias("doc_a"),
-            F.col("y.doc_id").alias("doc_b"),
-            dist.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= ham_max)
-    )
-    return volume_repartition_pairs(
-        cand, ["doc_a", "doc_b"], pair_bound
-    ).distinct()
-
-
-def phash_pairs(hashes: DataFrame, bound_key: str | None = None) -> DataFrame:
-    """pHash near-dup pairs: 4×16-bit blocks, Hamming ≤ 3."""
-    return hamming_blocked_pairs(
-        hashes, "phash", PHASH_BLOCKS, 16, PHASH_HAM_MAX, bound_key=bound_key
-    )
-
-
-def phash_keeper_stream(
-    docs: DataFrame, watermark: str = "2 hours"
-) -> DataFrame:
-    """Streaming perceptual image dedup — the multimodal member of the
-    streaming dedup family (streaming/events.dedup_stream's dual-mode
-    contract): keep ONE representative document per pHash.
-
-    Streaming inputs must carry an event-time ``ts`` column; state is
-    bounded by ``dropDuplicatesWithinWatermark`` on the hash key, so a
-    100 TB/day image ingest dedups with watermark-window state, not
-    corpus-sized state. Batch inputs keep the FIRST row per hash in
-    (doc_id) order — the deterministic, oracle-checkable twin of the
-    stream's keep-first-arrival (parity when arrival follows doc_id,
-    which the stream test enforces). Output: (doc_id, phash).
-    """
-    streaming = docs.isStreaming
-    carry = ("ts",) if streaming else ()
-    hashed = bmp_phash(documents_to_bmp(docs, carry=carry), carry=carry)
-    if streaming:
-        return hashed.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-            ["phash"]
-        ).select("doc_id", "phash")
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("phash").orderBy("doc_id")
-    return (
-        hashed.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("doc_id", "phash")
+def phash_keeper_stream(docs: DataFrame, watermark: str = "2 hours") -> DataFrame:
+    """One keeper document per pHash (fingerprint.keeper_stream): (doc_id, phash)."""
+    return keeper_stream(
+        docs,
+        lambda d, carry: bmp_phash(documents_to_bmp(d, carry), carry),
+        "phash",
+        watermark,
     )
 
 
@@ -291,17 +192,12 @@ def q_mm_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_mm_image_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-duplicate image pairs by blocked pHash Hamming distance —
-    image dedup on the SimHash pair chassis. Exact-duplicate documents
-    (same text → same image) must appear at hamming = 0.
-
-    The hash relation persists: 4 block branches × 2 self-join sides
-    would re-run the Python encode→decode→hash leg 8× (A/B r6:
-    1.29 → 0.93 s at sf0.1 — persist WINS for every multimodal pair
-    query because the recomputed subtree is Python, not JVM)."""
+    """Near-duplicate image pairs by blocked pHash Hamming distance.
+    Exact-duplicate documents (same text → same image) must appear at
+    hamming = 0."""
     d = load_table(spark, "documents", sf_dir)
-    return phash_pairs(
-        bmp_phash(documents_to_bmp(d)).persist(),
+    return hamming_blocked_pairs(
+        bmp_phash(documents_to_bmp(d)), "phash", PHASH_BLOCKS, 16, PHASH_HAM_MAX,
         bound_key=f"phash_pairs:{sf_dir}",
     )
 
@@ -346,25 +242,12 @@ PHASH_SQL = f"""
     SELECT doc_id, phash FROM ph
 """
 
-_BLK_SELECTS = " UNION ALL ".join(
-    f"SELECT doc_id, phash, {b} AS blk, (phash >> {16 * b}) & 65535 AS bv FROM ph"
-    for b in range(PHASH_BLOCKS)
-)
+PHASH_PAIRS_SQL = pairs_sql(_phash_cte(), "ph", "phash", PHASH_BLOCKS, 16, PHASH_HAM_MAX)
 
-PHASH_PAIRS_SQL = f"""
-    WITH {_phash_cte()},
-    blocks AS ({_BLK_SELECTS})
-    SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b,
-           bit_count(xor(x.phash, y.phash)) AS hamming
-    FROM blocks x JOIN blocks y ON x.blk = y.blk AND x.bv = y.bv
-    WHERE x.doc_id < y.doc_id
-      AND bit_count(xor(x.phash, y.phash)) <= {PHASH_HAM_MAX}
-"""
 
 def q_mm_phash_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """phash_keeper_stream in batch mode (the streaming-dedup family's
-    batch-parity convention, streaming/queries.py): one keeper document
-    per perceptual hash, smallest doc_id wins."""
+    """phash_keeper_stream in batch mode: one keeper document per
+    perceptual hash, smallest doc_id wins."""
     d = load_table(spark, "documents", sf_dir)
     return phash_keeper_stream(d)
 
@@ -375,18 +258,8 @@ QUERIES = {
     "mm_phash_keepers": q_mm_phash_keepers,
 }
 
-PHASH_KEEPERS_SQL = f"""
-    WITH {{cte}}
-    SELECT doc_id, phash FROM (
-      SELECT doc_id, phash,
-             row_number() OVER (PARTITION BY phash ORDER BY doc_id) AS rn
-      FROM ph)
-    WHERE rn = 1
-"""
-
-
 ORACLES = {
     "mm_image_phash": PHASH_SQL,
     "mm_image_phash_pairs": PHASH_PAIRS_SQL,
-    "mm_phash_keepers": PHASH_KEEPERS_SQL.format(cte=_phash_cte()),
+    "mm_phash_keepers": keepers_sql(_phash_cte(), "ph", "phash"),
 }

@@ -1,40 +1,38 @@
-"""Video fingerprint dedup — the third modality on the shared LSH
-machinery, completing the image (phash.py) / audio (audiofp.py) triple:
-frame-sample → per-frame perceptual hash → order-independent combine →
-Hamming-blocked near-dup pairs.
+"""Video fingerprint dedup: the video modality of the fingerprint chassis
+(fingerprint.py).
 
-A "video" here is a real multi-frame container: VFP_FRAMES 8×8 grayscale
-BMP frames packed behind a RVID header (frame count + per-frame byte
-lengths), assembled in an Arrow-batched mapInPandas (encode) and parsed
-back frame-by-frame through media.py's real _bmp_pixels (decode) — the
-fingerprint never shortcuts past the container. Frame f's pixels come
-from digest blocks f·4+j of the SAME leading-content seed the image
-modality uses (frame 0 IS the image modality's grid — the thumbnail),
-so the corpus's planted near-dup families (shared head) produce
-identical videos that the pair query must find.
+A video is a real multi-frame container: VFP_FRAMES 8×8 grayscale BMP
+frames behind an RVID header (frame count and per-frame byte lengths),
+parsed back frame by frame through media.py's ``_bmp_pixels``. Frame f's
+pixels come from digest blocks f·4+j of the image modality's
+leading-content seed (frame 0 is the image modality's grid), so near-dup
+families produce identical videos.
 
-Fingerprint: per-frame integer DCT pHash (phash.py's exact arithmetic —
-shared basis constants), combined by XOR across frames. XOR is
-order-independent (oracle: a bit_xor aggregate over the frame-hash
-relation) and keeps 63 bits, so pairs reuse hamming_blocked_pairs with
-the image modality's 4×16-bit pigeonhole blocks.
-
-Scale shape: identical to the siblings — one narrow Arrow-batched pass
-per blob (all frames of a batch hashed in ONE einsum), no shuffle until
-the doc-keyed fingerprint relation; candidate volume tracks near-dup
-volume via the (block, value) equi-join.
+Fingerprint: the image modality's integer DCT pHash of every frame
+(the same basis constants; all frames of a batch in one einsum),
+combined by XOR. XOR is order-independent (oracle: a bit_xor aggregate
+over the frame-hash relation) and keeps 63 bits, so pairs use the image
+modality's 4×16-bit blocks, Hamming ≤ 3.
 """
 
 from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
 from page_rank_mapreduce_java_spark.catalog import load_table
+from page_rank_mapreduce_java_spark.multimodal.fingerprint import (
+    encode_documents,
+    fingerprint_batches,
+    hamming_blocked_pairs,
+    keeper_stream,
+    keepers_sql,
+    pairs_sql,
+)
+from page_rank_mapreduce_java_spark.multimodal.media import _bmp_pixels, _encode_bmp
 from page_rank_mapreduce_java_spark.multimodal.phash import (
     PHASH_BLOCKS,
     PHASH_GRID,
@@ -42,7 +40,7 @@ from page_rank_mapreduce_java_spark.multimodal.phash import (
     PHASH_PER_DIGEST,
     PHASH_SEED_CHARS,
     _basis_values_sql,
-    hamming_blocked_pairs,
+    dct_basis_int,
 )
 
 VFP_FRAMES = 4
@@ -70,134 +68,44 @@ def _decode_rvid(payload: bytes) -> list[bytes]:
     return out
 
 
+def _video_payload(text: str) -> bytes:
+    seed = hashlib.md5(str(text)[:PHASH_SEED_CHARS].encode()).hexdigest()
+    px_bytes = b"".join(
+        hashlib.md5(f"{seed}:{j}".encode()).digest()
+        for j in range(VFP_FRAMES * _BLOCKS_PER_FRAME)
+    )
+    grids = np.frombuffer(px_bytes, dtype=np.uint8).reshape(-1, PHASH_GRID, PHASH_GRID)
+    return _encode_rvid([_encode_bmp(np.repeat(g[:, :, None], 3, axis=2)) for g in grids])
+
+
+def _vfp_kernel(payloads: list[bytes]) -> np.ndarray:
+    n = PHASH_GRID
+    basis = np.array(dct_basis_int(), dtype=np.int64)
+    grids = np.stack(
+        [_bmp_pixels(fr)[:, :, 0] for p in payloads for fr in _decode_rvid(p)]
+    ).astype(np.int64)  # (docs*frames, 8, 8)
+    coefs = np.einsum("ur,brc,vc->buv", basis, grids, basis)
+    ac = coefs.reshape(len(grids), n * n)[:, 1:]
+    bits = (63 * ac > ac.sum(axis=1, keepdims=True)).astype(np.int64)
+    fps = (bits << np.arange(n * n - 1)).sum(axis=1).reshape(-1, VFP_FRAMES)
+    return np.bitwise_xor.reduce(fps, axis=1)
+
+
 def documents_to_video(docs: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
-    """Encode each document's deterministic frame sequence as a real
-    RVID container of BMP frames. Arrow-batched; one row per doc.
-    ``carry`` columns pass through unchanged (phash.documents_to_bmp
-    convention — the streaming keeper carries its event time)."""
-    from page_rank_mapreduce_java_spark.multimodal.media import _encode_bmp
-
-    cols = ["doc_id", "payload", *carry]
-    carry_schema = "".join(
-        f", {c} {docs.schema[c].dataType.simpleString()}" for c in carry
-    )
-
-    def _payload(text: str) -> bytes:
-        import numpy as np
-
-        seed = hashlib.md5(str(text)[:PHASH_SEED_CHARS].encode()).hexdigest()
-        frames = []
-        for f in range(VFP_FRAMES):
-            px_bytes = b"".join(
-                bytes.fromhex(
-                    hashlib.md5(
-                        f"{seed}:{f * _BLOCKS_PER_FRAME + j}".encode()
-                    ).hexdigest()
-                )
-                for j in range(_BLOCKS_PER_FRAME)
-            )
-            g = np.frombuffer(px_bytes, dtype=np.uint8).reshape(
-                PHASH_GRID, PHASH_GRID
-            )
-            frames.append(_encode_bmp(np.repeat(g[:, :, None], 3, axis=2)))
-        return _encode_rvid(frames)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            data = {
-                "doc_id": pdf["doc_id"].tolist(),
-                "payload": [_payload(t) for t in pdf["text"].tolist()],
-            }
-            for c in carry:
-                data[c] = pdf[c].reset_index(drop=True)
-            yield pd.DataFrame(data, columns=cols)
-
-    from page_rank_mapreduce_java_spark.plans.parallelism import (
-        floor_scan_parallelism,
-    )
-
-    # r13 (guide §2.5 / §4): the documents scan is a single split at
-    # bench SFs, so this per-row Python encode leg ran in ONE worker
-    # regardless of core count; floor it at session parallelism (a
-    # cluster-scale scan is left untouched).
-    return floor_scan_parallelism(
-        docs.select("doc_id", "text", *carry)
-    ).mapInPandas(
-        run, "doc_id LONG, payload BINARY" + carry_schema
-    )
+    return encode_documents(docs, _video_payload, carry)
 
 
 def video_fingerprint(media: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
-    """Decode RVID payloads, pHash every frame (one batched einsum over
-    ALL frames of the batch), XOR-combine per video:
-    DataFrame[doc_id LONG, vfp LONG, *carry]."""
-    from page_rank_mapreduce_java_spark.multimodal.media import _bmp_pixels
-    from page_rank_mapreduce_java_spark.multimodal.phash import dct_basis_int
-
-    cols = ["doc_id", "vfp", *carry]
-    carry_schema = "".join(
-        f", {c} {media.schema[c].dataType.simpleString()}" for c in carry
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        basis = np.array(dct_basis_int(), dtype=np.int64)
-        n = PHASH_GRID
-        shifts = np.arange(n * n - 1)
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame({c: [] for c in cols}, columns=cols)
-                continue
-            grids = np.stack(
-                [
-                    _bmp_pixels(fr)[:, :, 0]
-                    for p in pdf["payload"].tolist()
-                    for fr in _decode_rvid(bytes(p))
-                ]
-            ).astype(np.int64)  # (docs*frames, 8, 8)
-            coefs = np.einsum("ur,brc,vc->buv", basis, grids, basis)
-            ac = coefs.reshape(len(grids), n * n)[:, 1:]
-            tot = ac.sum(axis=1, keepdims=True)
-            bits = (63 * ac > tot).astype(np.int64)
-            fps = (bits << shifts).sum(axis=1).reshape(-1, VFP_FRAMES)
-            vfp = fps[:, 0]
-            for f in range(1, VFP_FRAMES):
-                vfp = vfp ^ fps[:, f]
-            data = {"doc_id": pdf["doc_id"].tolist(), "vfp": vfp}
-            for c in carry:
-                data[c] = pdf[c].reset_index(drop=True)
-            yield pd.DataFrame(data, columns=cols)
-
-    return media.mapInPandas(run, "doc_id LONG, vfp LONG" + carry_schema)
+    return fingerprint_batches(media, "vfp", _vfp_kernel, carry)
 
 
-def video_keeper_stream(
-    docs: DataFrame, watermark: str = "2 hours"
-) -> DataFrame:
-    """Streaming video dedup, completing the keeper triple
-    (phash.phash_keeper_stream / audiofp.audio_keeper_stream): one
-    representative document per video fingerprint. Streaming inputs
-    carry an event-time ``ts`` and bound state with
-    dropDuplicatesWithinWatermark on the fingerprint; batch inputs keep
-    the smallest doc_id per fingerprint — the deterministic,
-    oracle-checkable twin. Output: (doc_id, vfp)."""
-    from pyspark.sql import functions as F
-
-    streaming = docs.isStreaming
-    carry = ("ts",) if streaming else ()
-    fp = video_fingerprint(documents_to_video(docs, carry=carry), carry=carry)
-    if streaming:
-        return fp.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-            ["vfp"]
-        ).select("doc_id", "vfp")
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("vfp").orderBy("doc_id")
-    return (
-        fp.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("doc_id", "vfp")
+def video_keeper_stream(docs: DataFrame, watermark: str = "2 hours") -> DataFrame:
+    """One keeper document per video fingerprint: (doc_id, vfp)."""
+    return keeper_stream(
+        docs,
+        lambda d, carry: video_fingerprint(documents_to_video(d, carry), carry),
+        "vfp",
+        watermark,
     )
 
 
@@ -205,8 +113,8 @@ def video_keeper_stream(
 
 
 def q_mm_video_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """video_keeper_stream in batch mode (the streaming-dedup family's
-    batch-parity convention): one keeper per video fingerprint."""
+    """video_keeper_stream in batch mode: one keeper per video
+    fingerprint, smallest doc_id wins."""
     d = load_table(spark, "documents", sf_dir)
     return video_keeper_stream(d)
 
@@ -223,15 +131,11 @@ def q_mm_video_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_mm_video_fp_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate video pairs by blocked fingerprint Hamming
-    distance — the image pair chassis (4×16-bit pigeonhole blocks,
-    Hamming ≤ 3) on the XOR-combined frame hashes. Exact-duplicate
-    documents (same head → same frames) must appear at hamming 0."""
+    distance. Exact-duplicate documents (same head → same frames) must
+    appear at hamming 0."""
     d = load_table(spark, "documents", sf_dir)
-    # persisted: the 8-way band fan-out re-runs the 4-frame Python leg
-    # otherwise (A/B r6: 4.79 -> 2.09 s at sf0.1)
-    fp = video_fingerprint(documents_to_video(d)).persist()
     return hamming_blocked_pairs(
-        fp, "vfp", PHASH_BLOCKS, 16, PHASH_HAM_MAX,
+        video_fingerprint(documents_to_video(d)), "vfp", PHASH_BLOCKS, 16, PHASH_HAM_MAX,
         bound_key=f"videofp_pairs:{sf_dir}",
     )
 
@@ -272,32 +176,6 @@ VFP_SQL = f"""
     SELECT doc_id, vfp FROM vf
 """
 
-_VFP_BLK_SELECTS = " UNION ALL ".join(
-    f"SELECT doc_id, vfp, {b} AS blk, (vfp >> {16 * b}) & 65535 AS bv FROM vf"
-    for b in range(PHASH_BLOCKS)
-)
-
-VFP_PAIRS_SQL = f"""
-    WITH {_vfp_cte()},
-    blocks AS ({_VFP_BLK_SELECTS})
-    SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b,
-           bit_count(xor(x.vfp, y.vfp)) AS hamming
-    FROM blocks x JOIN blocks y ON x.blk = y.blk AND x.bv = y.bv
-    WHERE x.doc_id < y.doc_id
-      AND bit_count(xor(x.vfp, y.vfp)) <= {PHASH_HAM_MAX}
-"""
-
-
-VFP_KEEPERS_SQL = f"""
-    WITH {_vfp_cte()}
-    SELECT doc_id, vfp FROM (
-      SELECT doc_id, vfp,
-             row_number() OVER (PARTITION BY vfp ORDER BY doc_id) AS rn
-      FROM vf)
-    WHERE rn = 1
-"""
-
-
 QUERIES = {
     "mm_video_fingerprint": q_mm_video_fingerprint,
     "mm_video_fp_pairs": q_mm_video_fp_pairs,
@@ -306,6 +184,8 @@ QUERIES = {
 
 ORACLES = {
     "mm_video_fingerprint": VFP_SQL,
-    "mm_video_fp_pairs": VFP_PAIRS_SQL,
-    "mm_video_keepers": VFP_KEEPERS_SQL,
+    "mm_video_fp_pairs": pairs_sql(
+        _vfp_cte(), "vf", "vfp", PHASH_BLOCKS, 16, PHASH_HAM_MAX
+    ),
+    "mm_video_keepers": keepers_sql(_vfp_cte(), "vf", "vfp"),
 }

@@ -12,7 +12,7 @@ from page_rank_mapreduce_java_spark.multimodal.audiofp import (
     wav_fingerprint,
     q_mm_audio_fp_pairs,
 )
-from page_rank_mapreduce_java_spark.multimodal.phash import hamming_blocked_pairs
+from page_rank_mapreduce_java_spark.multimodal.fingerprint import hamming_blocked_pairs
 
 
 def _docs(spark, rows):

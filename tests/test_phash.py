@@ -6,13 +6,14 @@ import hashlib
 
 from pyspark.sql import functions as F
 
+from page_rank_mapreduce_java_spark.multimodal.fingerprint import hamming_blocked_pairs
 from page_rank_mapreduce_java_spark.multimodal.phash import (
     PHASH_BLOCKS,
     PHASH_GRID,
+    PHASH_HAM_MAX,
     bmp_phash,
     dct_basis_int,
     documents_to_bmp,
-    phash_pairs,
     _pixel,
 )
 
@@ -60,7 +61,8 @@ def test_phash_pairs_collision_recall(spark):
     rows = [(i, f"unique text number {i} with drift") for i in range(20)]
     rows += [(100, "duplicated payload"), (101, "duplicated payload"), (102, "duplicated payload")]
     d = _docs(spark, rows)
-    pairs = phash_pairs(bmp_phash(documents_to_bmp(d))).collect()
+    hashes = bmp_phash(documents_to_bmp(d))
+    pairs = hamming_blocked_pairs(hashes, "phash", PHASH_BLOCKS, 16, PHASH_HAM_MAX).collect()
     found = {(r.doc_a, r.doc_b): r.hamming for r in pairs}
     assert found[(100, 101)] == 0
     assert found[(100, 102)] == 0
