@@ -42,14 +42,13 @@ from page_rank_mapreduce_java_spark.operators.recommend import (
     _interactions,
     item_item_topk,
 )
-from page_rank_mapreduce_java_spark.similarity.ann import (
-    ivf_assign,
-    kmeans_sql,
-    kmeans_train,
-)
+from page_rank_mapreduce_java_spark.similarity.ann import ivf_assign, kmeans_train
 from page_rank_mapreduce_java_spark.similarity.queries import (
     IVF_CENTROIDS,
+    IVF_PROBES,
     KMEANS_ITERS,
+    N_QUERY_VECS,
+    _ivf_ctes,
 )
 
 
@@ -134,21 +133,9 @@ def q_ann_ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cell_balance_sql() -> str:
-    kmeans_ctes, kmeans_final = kmeans_sql(
-        k=IVF_CENTROIDS, iters=KMEANS_ITERS
-    )
-    from page_rank_mapreduce_java_spark.functions.vectors import cosine_sql
-
+    # the ann_ivf_topk chain; only its cent/assign CTEs are read here
     return f"""
-    WITH {kmeans_ctes},
-    cent AS (SELECT centroid_id, cvec FROM {kmeans_final}),
-    assign AS (
-      SELECT vec_id, centroid_id FROM (
-        SELECT e.vec_id, c.centroid_id,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY {cosine_sql('e.embedding', 'c.cvec')} DESC,
-                          c.centroid_id ASC) AS rn
-        FROM embeddings e CROSS JOIN cent c) WHERE rn = 1),
+    WITH {_ivf_ctes(N_QUERY_VECS, IVF_PROBES)},
     sizes AS (SELECT centroid_id, COUNT(*) AS n_vecs
               FROM assign GROUP BY 1),
     tot AS (SELECT SUM(n_vecs) AS t FROM sizes)

@@ -1,6 +1,6 @@
 """Approximate-nearest-neighbor library over array<float> embeddings.
 
-Two paths (SURVEY.md §7 M5):
+Three paths (SURVEY.md §7 M5):
 - brute_force_topk: exact cosine top-k. Plan shape: broadcast the (small)
   query set against the (huge) corpus — a broadcast nested-loop producing
   |Q|·|C| rows that immediately collapse through a per-query top-k window.
@@ -10,11 +10,12 @@ Two paths (SURVEY.md §7 M5):
   n_planes (fewer planes → bigger buckets) and by probing neighboring
   buckets. Hyperplane weights come from a deterministic LCG so the same
   buckets are computable in any engine (and in the DuckDB oracle).
-
 - ivf_topk: IVF coarse quantizer — k-means-trained centroids (Lloyd
   iterations as pure DataFrame ops, deterministic and oracle-checkable),
-  probe the nearest cells per query, search only their members. Candidate
-  generation is an equi-join on centroid_id.
+  ``probe_cells`` ranks the nearest cells per query, and only their
+  members are searched. Candidate generation is an equi-join on
+  centroid_id. The same probe step feeds the IVF recall sweep and the
+  IVF-PQ queries (similarity/pq.adc_topk scores their candidates).
 """
 
 from __future__ import annotations
@@ -52,19 +53,11 @@ def _parallel_corpus(df: DataFrame) -> DataFrame:
     return floor_scan_parallelism(df)
 
 
-def brute_force_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Exact cosine top-k of ``corpus`` for every row of ``queries``."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-    )
+    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
     c = _parallel_corpus(
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec"))
+        corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cvec"))
     )
     scored = (
         F.broadcast(q)
@@ -142,13 +135,7 @@ def _centroids_as_row(centroids: DataFrame) -> DataFrame:
     )
 
 
-def ivf_assign(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    parallel_corpus: bool = True,
-) -> DataFrame:
+def ivf_assign(corpus: DataFrame, centroids: DataFrame) -> DataFrame:
     """Assign every vector to its nearest centroid (max cosine, centroid-id
     tiebreak). Centroids broadcast; assignment is one corpus scan plus a
     per-vector top-1 window over the k candidates — the IVF build step.
@@ -161,21 +148,33 @@ def ivf_assign(
     (array) vs 4.33 s (window) at sf0.1 — the exploded window's exchange
     is narrow (id, centroid_id, score) while the nested-lambda argmin
     projection runs interpreted. The certified window shape stays."""
-    # parallel_corpus: same knob and measured tradeoff as kmeans_train —
-    # wide assignment wins for single-materialization consumers, loses
-    # when a chassis replays the assignment subtree (ivf-pq opts out:
-    # quiet A/B ann_ivfpq_topk 5.69 s unfloored vs 6.52 s floored).
-    corp = corpus.select(id_col, vec_col)
-    if parallel_corpus:
-        corp = _parallel_corpus(corp)
+    corp = _parallel_corpus(corpus.select("vec_id", "embedding"))
     scored = corp.join(F.broadcast(centroids), F.lit(True))
-    w = Window.partitionBy(id_col).orderBy(
-        F.desc(cosine(F.col(vec_col), F.col("cvec"))), F.asc("centroid_id")
+    w = Window.partitionBy("vec_id").orderBy(
+        F.desc(cosine(F.col("embedding"), F.col("cvec"))), F.asc("centroid_id")
     )
     return (
         scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
-        .select(id_col, "centroid_id")
+        .select("vec_id", "centroid_id")
+    )
+
+
+def probe_cells(queries: DataFrame, centroids: DataFrame, n_probe: int) -> DataFrame:
+    """The IVF probe step: each query's ``n_probe`` nearest centroid cells
+    (max cosine, centroid-id tiebreak) as DataFrame[query_id, qvec,
+    centroid_id, prn], ``prn`` being the cell's 1-based probe rank. The
+    window runs over |queries| × |centroids| bounded rows against a
+    broadcast centroid set."""
+    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc(cosine(F.col("qvec"), F.col("cvec"))), F.asc("centroid_id")
+    )
+    return (
+        q.join(F.broadcast(centroids), F.lit(True))
+        .withColumn("prn", F.row_number().over(w))
+        .filter(F.col("prn") <= n_probe)
+        .select("query_id", "qvec", "centroid_id", "prn")
     )
 
 
@@ -322,8 +321,6 @@ def ivf_topk(
     n_probe: int = 4,
     n_centroids: int = 16,
     train_iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF approximate top-k: probe the ``n_probe`` nearest centroid cells
     per query and search only their members. The candidate join is an
@@ -335,25 +332,13 @@ def ivf_topk(
     vectors), so cells track the data distribution — the recall profile a
     first-N centroid pick cannot give on clustered data.
     """
-    centroids = kmeans_train(
-        corpus, k=n_centroids, iters=train_iters, id_col=id_col, vec_col=vec_col
-    )
-    assignment = ivf_assign(corpus, centroids, id_col, vec_col)
-
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
-    wq = Window.partitionBy("query_id").orderBy(
-        F.desc(cosine(F.col("qvec"), F.col("cvec"))), F.asc("centroid_id")
-    )
-    probes = (
-        q.join(F.broadcast(centroids), F.lit(True))
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= n_probe)
-        .select("query_id", "qvec", "centroid_id")
-    )
+    centroids = kmeans_train(corpus, k=n_centroids, iters=train_iters)
+    assignment = ivf_assign(corpus, centroids)
+    probes = probe_cells(queries, centroids, n_probe)
 
     members = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec2")
-    ).join(assignment.withColumnRenamed(id_col, "neighbor_id"), "neighbor_id")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cvec2")
+    ).join(assignment.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id")
     cands = probes.join(members, "centroid_id").filter(
         F.col("query_id") != F.col("neighbor_id")
     )

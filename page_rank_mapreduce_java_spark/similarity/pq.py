@@ -10,17 +10,18 @@ M small integer codes (M·log2(k) bits ≈ 4 bytes here vs 256 bytes of
 floats — the ~64× compression that lets a 100 TB embedding corpus fit
 hot storage).
 
-Query-time ADC (asymmetric distance computation) never touches raw
-corpus vectors: the query precomputes a |Q|·M·k lookup table of partial
-squared-L2 distances to every sub-centroid (tiny, broadcast), the codes
-relation joins it on (subspace, code), and the per-(query, vector)
-distance is the SUM of M partials — an equi-join plus a keyed aggregate,
-Spark's native shapes. No UDFs anywhere; the sub-vector slice, the
-assignment argmin, and the distance fold are all JVM higher-order
-functions (functions/vectors.py contract), so a DuckDB oracle rendering
-is possible exactly like kmeans_sql (deferred with the audit window
-full this round — the recall/consistency contract is tested in
-tests/test_pq.py instead).
+Query-time ADC (asymmetric distance computation, ``adc_topk``) never
+touches raw corpus vectors: the query precomputes a |Q|·M·k lookup table
+of partial squared-L2 distances to every sub-centroid (tiny, broadcast),
+each snapped to integer micro-units; the codes relation joins it on
+(subspace, code), and the per-(query, vector) distance is the integer SUM
+of M partials — an equi-join plus a keyed aggregate, Spark's native
+shapes. IVF-PQ is the same operator over a codes relation already
+restricted to (query, candidate) pairs. No UDFs anywhere; the sub-vector
+slice, the assignment argmin, and the distance fold are all JVM
+higher-order functions (functions/vectors.py contract), and
+similarity/queries._adc_sql renders the DuckDB oracle of every PQ and
+IVF-PQ search query.
 
 Plan shapes at 100 TB:
 - train: M independent kmeans_train runs over sliced columns — each is
@@ -133,30 +134,29 @@ def pq_encode(
     )
 
 
-def pq_topk(
-    codes: DataFrame,
-    codebook: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    n_sub: int = PQ_M,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+def adc_topk(
+    codebook: DataFrame, queries: DataFrame, codes: DataFrame, dim: int, k: int
 ) -> DataFrame:
-    """ADC top-k: DataFrame[query_id, neighbor_id, adc_sq] — for every
-    query, the k corpus vectors with the smallest code-approximated
-    squared L2 (ties → neighbor id). The corpus side is ONLY the codes
-    relation — raw vectors are never read at query time."""
+    """ADC top-k: DataFrame[query_id, neighbor_id, adc_micro] — for every
+    query, the k vectors of ``codes`` with the smallest code-approximated
+    squared L2 (ties → neighbor id), self-matches dropped.
+
+    query slices ⋈ broadcast codebook → integer-micro LUT; codes ⋈
+    broadcast LUT on (m, code) — plus query_id when ``codes`` carries
+    one, i.e. holds IVF (query, candidate) pairs — then a keyed sum and
+    a per-query top-k window. Each partial is rounded BEFORE the sum, so
+    ``adc_micro`` and its ranking are order-independent integers,
+    bit-identical across engines."""
     qs = queries.select(
-        F.col(id_col).alias("query_id"),
+        F.col("vec_id").alias("query_id"),
         F.explode(
             F.array(
                 *[
                     F.struct(
                         F.lit(m).alias("m"),
-                        subvector(vec_col, m, n_sub, dim).alias("qv"),
+                        subvector("embedding", m, PQ_M, dim).alias("qv"),
                     )
-                    for m in range(n_sub)
+                    for m in range(PQ_M)
                 ]
             )
         ).alias("s"),
@@ -165,117 +165,18 @@ def pq_topk(
         "query_id",
         "m",
         F.col("centroid_id").alias("code"),
-        sq_l2(F.col("qv"), F.col("cvec")).alias("dsq"),
+        F.round(sq_l2(F.col("qv"), F.col("cvec")) * 1e6).cast("long").alias("dmicro"),
     )
+    keys = ["query_id", "m", "code"] if "query_id" in codes.columns else ["m", "code"]
     scored = (
-        codes.join(F.broadcast(lut), ["m", "code"])
+        codes.join(F.broadcast(lut), keys)
         .filter(F.col("vec_id") != F.col("query_id"))
         .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("dsq").alias("adc_sq"))
+        .agg(F.sum("dmicro").alias("adc_micro"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_sq"), F.asc("neighbor_id")
-    )
+    w = Window.partitionBy("query_id").orderBy(F.asc("adc_micro"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "adc_sq")
-    )
-
-
-def ivfpq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    n_sub: int = PQ_M,
-    k: int = 10,
-    n_probe: int = 4,
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF-PQ — the standard large-scale ANN pairing: the IVF coarse
-    quantizer prunes WHICH cells to search (candidates shrink
-    ~n_probe/n_centroids), then ADC scores the survivors from their
-    4-byte codes instead of raw vectors. At 100 TB the search-side I/O
-    is (codes of probed cells) + one broadcast LUT — neither scales
-    with raw vector bytes.
-
-    Composition of existing pieces only: ann.kmeans_train/ivf_assign
-    for cells, pq_train/pq_encode for codes, and the pq_topk ADC scored
-    over the cell-pruned codes relation. Returns DataFrame[query_id,
-    neighbor_id, adc_sq].
-    """
-    from page_rank_mapreduce_java_spark.functions.vectors import cosine
-    from page_rank_mapreduce_java_spark.similarity.ann import (
-        ivf_assign,
-        kmeans_train,
-    )
-
-    centroids = kmeans_train(
-        corpus,
-        k=n_centroids,
-        id_col=id_col,
-        vec_col=vec_col,
-        parallel_corpus=False,  # five replayed trains: see kmeans_train note
-    )
-    cells = ivf_assign(
-        corpus, centroids, id_col, vec_col, parallel_corpus=False
-    )
-
-    codebook = pq_train(corpus, dim=dim, n_sub=n_sub, id_col=id_col, vec_col=vec_col)
-    codes = pq_encode(corpus, codebook, dim=dim, n_sub=n_sub, id_col=id_col, vec_col=vec_col)
-
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
-    wq = Window.partitionBy("query_id").orderBy(
-        F.desc(cosine(F.col("qvec"), F.col("cvec"))), F.asc("centroid_id")
-    )
-    probes = (
-        q.join(F.broadcast(centroids), F.lit(True))
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= n_probe)
-        .select("query_id", "centroid_id")
-    )
-    # Per-query candidate vec_ids = members of probed cells; restrict the
-    # codes relation to them via the (query_id, vec_id) pair set, then
-    # ADC exactly as pq_topk but with the pair join replacing the full
-    # codes × queries product.
-    cand = probes.join(
-        cells.withColumnRenamed(id_col, "vec_id"), "centroid_id"
-    ).select("query_id", "vec_id")
-
-    qs = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(m).alias("m"),
-                        subvector(vec_col, m, n_sub, dim).alias("qv"),
-                    )
-                    for m in range(n_sub)
-                ]
-            )
-        ).alias("s"),
-    ).select("query_id", F.col("s.m").alias("m"), F.col("s.qv").alias("qv"))
-    lut = qs.join(F.broadcast(codebook), "m").select(
-        "query_id",
-        "m",
-        F.col("centroid_id").alias("code"),
-        sq_l2(F.col("qv"), F.col("cvec")).alias("dsq"),
-    )
-    scored = (
-        cand.join(codes, "vec_id")
-        .join(F.broadcast(lut), ["query_id", "m", "code"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("dsq").alias("adc_sq"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_sq"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "adc_sq")
+        .select("query_id", "neighbor_id", "adc_micro")
     )

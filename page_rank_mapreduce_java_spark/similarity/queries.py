@@ -9,12 +9,15 @@ from page_rank_mapreduce_java_spark.catalog import load_table
 from page_rank_mapreduce_java_spark.functions.vectors import cosine, cosine_sql
 from page_rank_mapreduce_java_spark.similarity.ann import (
     brute_force_topk,
+    ivf_assign,
     ivf_topk,
     kmeans_sql,
     kmeans_train,
     lsh_buckets,
     lsh_buckets_sql,
+    probe_cells,
 )
+from page_rank_mapreduce_java_spark.similarity.pq import adc_topk, pq_encode, pq_train
 
 N_QUERY_VECS = 8
 TOP_K = 10
@@ -133,62 +136,12 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: encode = one narrow corpus pass (broadcast codebook,
     per-(vec, subspace) argmin window on a high-cardinality key);
-    search = codes ⋈ broadcast LUT + keyed sum + per-query top-k
-    window — no raw vectors at query time (similarity/pq.py)."""
-    from page_rank_mapreduce_java_spark.similarity.pq import pq_encode, pq_train
-
+    search = similarity/pq.adc_topk — no raw vectors at query time."""
     e = load_table(spark, "embeddings", sf_dir)
     cb = pq_train(e, dim=PQ_DIM)
     codes = pq_encode(e, cb, dim=PQ_DIM)
     q = e.filter(F.col("vec_id") < PQ_QUERY_VECS)
-    return _adc_topk_micro(cb, codes, q)
-
-
-def _adc_topk_micro(cb: DataFrame, codes: DataFrame, q: DataFrame) -> DataFrame:
-    """The PQ SERVING plan, shared by the end-to-end and pre-trained
-    variants: query slices ⋈ broadcast codebook → integer-micro LUT;
-    codes ⋈ broadcast LUT + keyed sum; per-query top-k window. Corpus
-    side touches only the codes relation."""
-    from page_rank_mapreduce_java_spark.functions.vectors import sq_l2
-    from page_rank_mapreduce_java_spark.similarity.pq import PQ_M, subvector
-    from pyspark.sql.window import Window
-
-    qs = q.select(
-        F.col("vec_id").alias("query_id"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(m).alias("m"),
-                        subvector("embedding", m, PQ_M, PQ_DIM).alias("qv"),
-                    )
-                    for m in range(PQ_M)
-                ]
-            )
-        ).alias("s"),
-    ).select("query_id", F.col("s.m").alias("m"), F.col("s.qv").alias("qv"))
-    lut = qs.join(F.broadcast(cb), "m").select(
-        "query_id",
-        "m",
-        F.col("centroid_id").alias("code"),
-        F.round(sq_l2(F.col("qv"), F.col("cvec")) * 1e6)
-        .cast("long")
-        .alias("dmicro"),
-    )
-    scored = (
-        codes.join(F.broadcast(lut), ["m", "code"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("dmicro").alias("adc_micro"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_micro"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= PQ_TOP_K)
-        .select("query_id", "neighbor_id", "adc_micro")
-    )
+    return adc_topk(cb, q, codes, PQ_DIM, PQ_TOP_K)
 
 
 def _embeddings_fingerprint(sf_dir: str) -> str:
@@ -275,8 +228,6 @@ def q_ann_pq_serve_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the DuckDB oracle — is identical to ann_pq_topk's."""
     import os
 
-    from page_rank_mapreduce_java_spark.similarity.pq import pq_encode, pq_train
-
     def build(tmp: str) -> None:
         e = load_table(spark, "embeddings", sf_dir)
         cb = pq_train(e, dim=PQ_DIM)
@@ -291,89 +242,33 @@ def q_ann_pq_serve_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = load_table(spark, "embeddings", sf_dir).filter(
         F.col("vec_id") < PQ_QUERY_VECS
     )
-    return _adc_topk_micro(cb, codes, q)
+    return adc_topk(cb, q, codes, PQ_DIM, PQ_TOP_K)
 
 
 def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ ADC top-5, fully oracle-certified: the coarse quantizer
     prunes WHICH vectors are scored (candidates shrink ~n_probe/
-    n_centroids), the PQ codes decide HOW — integer micro-unit ADC, the
-    q_ann_pq_topk convention, restricted to the (query, candidate) pair
-    set. This registers the similarity/pq.ivfpq_topk composition (until
-    now score-consistency-tested only) with a full DuckDB mirror:
-    coarse kmeans chain + cell assignment + probe ranking + the four
-    per-subspace codebook chains + cell-pruned integer ADC.
+    n_centroids), the PQ codes decide HOW — the integer micro-unit ADC
+    of q_ann_pq_topk (similarity/pq.adc_topk) over the codes of the
+    (query, candidate) pair set. The DuckDB mirror renders the coarse
+    kmeans chain, cell assignment and probe ranking (_ivf_ctes), the four
+    per-subspace codebook chains and the cell-pruned integer ADC.
 
     Scale shape: candidate generation is probes ⋈ cells on the centroid
     key; scoring reads ONLY the codes of candidates (codes ⋈ broadcast
     LUT + keyed sum); the probe ranking is a window over ≤ |queries|
     × n_centroids bounded rows."""
-    from pyspark.sql.window import Window
-
-    from page_rank_mapreduce_java_spark.functions.vectors import cosine, sq_l2
-    from page_rank_mapreduce_java_spark.similarity.ann import ivf_assign
-    from page_rank_mapreduce_java_spark.similarity.pq import (
-        PQ_M,
-        pq_encode,
-        pq_train,
-        subvector,
-    )
-
     e = load_table(spark, "embeddings", sf_dir)
     cent = kmeans_train(e, k=IVF_CENTROIDS, iters=KMEANS_ITERS)
-    cells = ivf_assign(e, cent)
     q = e.filter(F.col("vec_id") < PQ_QUERY_VECS)
-
-    wq = Window.partitionBy("query_id").orderBy(
-        F.desc(cosine(F.col("embedding"), F.col("cvec"))), F.asc("centroid_id")
-    )
-    probes = (
-        q.select(F.col("vec_id").alias("query_id"), "embedding")
-        .join(F.broadcast(cent), F.lit(True))
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= IVF_PROBES)
-        .select("query_id", "centroid_id")
-    )
     cand = (
-        probes.join(cells, "centroid_id")
-        .filter(F.col("query_id") != F.col("vec_id"))
+        probe_cells(q, cent, IVF_PROBES)
+        .join(ivf_assign(e, cent), "centroid_id")
         .select("query_id", "vec_id")
     )
-
     cb = pq_train(e, dim=PQ_DIM)
-    codes = pq_encode(e, cb, dim=PQ_DIM)
-    qs = q.select(
-        F.col("vec_id").alias("query_id"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(m).alias("m"),
-                        subvector("embedding", m, PQ_M, PQ_DIM).alias("qv"),
-                    )
-                    for m in range(PQ_M)
-                ]
-            )
-        ).alias("s"),
-    ).select("query_id", F.col("s.m").alias("m"), F.col("s.qv").alias("qv"))
-    lut = qs.join(F.broadcast(cb), "m").select(
-        "query_id",
-        "m",
-        F.col("centroid_id").alias("code"),
-        F.round(sq_l2(F.col("qv"), F.col("cvec")) * 1e6).cast("long").alias("dmicro"),
-    )
-    scored = (
-        cand.join(codes, "vec_id")
-        .join(F.broadcast(lut), ["query_id", "m", "code"])
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("dmicro").alias("adc_micro"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_micro"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= PQ_TOP_K)
-        .select("query_id", "neighbor_id", "adc_micro")
-    )
+    codes = cand.join(pq_encode(e, cb, dim=PQ_DIM), "vec_id")
+    return adc_topk(cb, q, codes, PQ_DIM, PQ_TOP_K)
 
 
 def q_ann_ivfpq_serve_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -395,17 +290,6 @@ def q_ann_ivfpq_serve_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical to ann_ivfpq_topk's."""
     import os
 
-    from pyspark.sql.window import Window
-
-    from page_rank_mapreduce_java_spark.functions.vectors import cosine, sq_l2
-    from page_rank_mapreduce_java_spark.similarity.ann import ivf_assign
-    from page_rank_mapreduce_java_spark.similarity.pq import (
-        PQ_M,
-        pq_encode,
-        pq_train,
-        subvector,
-    )
-
     def build(tmp: str) -> None:
         e = load_table(spark, "embeddings", sf_dir)
         cent = kmeans_train(e, k=IVF_CENTROIDS, iters=KMEANS_ITERS)
@@ -416,62 +300,21 @@ def q_ann_ivfpq_serve_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # equi-join on the already-stored key — no assignment at query
         # time. (At scale this relation would also be PARTITIONED BY
         # centroid_id so a probe touches only its cells' files.)
-        cells = ivf_assign(e, cent).select("vec_id", "centroid_id")
-        pq_encode(e, cb, dim=PQ_DIM).join(cells, "vec_id").write.mode(
+        pq_encode(e, cb, dim=PQ_DIM).join(ivf_assign(e, cent), "vec_id").write.mode(
             "overwrite"
         ).parquet(os.path.join(tmp, "codes"))
 
     base = _serve_index_dir(spark, sf_dir, "ivfpq", build)
     cent = spark.read.parquet(os.path.join(base, "centroids"))
     cb = spark.read.parquet(os.path.join(base, "codebook"))
-    codes = spark.read.parquet(os.path.join(base, "codes"))
     q = load_table(spark, "embeddings", sf_dir).filter(
         F.col("vec_id") < PQ_QUERY_VECS
     )
-
-    wq = Window.partitionBy("query_id").orderBy(
-        F.desc(cosine(F.col("embedding"), F.col("cvec"))), F.asc("centroid_id")
+    probes = probe_cells(q, cent, IVF_PROBES).select("query_id", "centroid_id")
+    codes = spark.read.parquet(os.path.join(base, "codes")).join(
+        F.broadcast(probes), "centroid_id"
     )
-    probes = (
-        q.select(F.col("vec_id").alias("query_id"), "embedding")
-        .join(F.broadcast(cent), F.lit(True))
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= IVF_PROBES)
-        .select("query_id", "centroid_id")
-    )
-    qs = q.select(
-        F.col("vec_id").alias("query_id"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(m).alias("m"),
-                        subvector("embedding", m, PQ_M, PQ_DIM).alias("qv"),
-                    )
-                    for m in range(PQ_M)
-                ]
-            )
-        ).alias("s"),
-    ).select("query_id", F.col("s.m").alias("m"), F.col("s.qv").alias("qv"))
-    lut = qs.join(F.broadcast(cb), "m").select(
-        "query_id",
-        "m",
-        F.col("centroid_id").alias("code"),
-        F.round(sq_l2(F.col("qv"), F.col("cvec")) * 1e6).cast("long").alias("dmicro"),
-    )
-    scored = (
-        codes.join(F.broadcast(probes), "centroid_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .join(F.broadcast(lut), ["query_id", "m", "code"])
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("dmicro").alias("adc_micro"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_micro"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= PQ_TOP_K)
-        .select("query_id", "neighbor_id", "adc_micro")
-    )
+    return adc_topk(cb, q, codes, PQ_DIM, PQ_TOP_K)
 
 
 def _pq_oracle_parts() -> tuple[str, str]:
@@ -524,85 +367,40 @@ def _pq_codebook_sql() -> str:
 """
 
 
-def _pq_topk_sql() -> str:
+def _adc_sql(ivf: bool) -> str:
+    """DuckDB mirror of similarity/pq.adc_topk over every (query, vector)
+    pair, or with ``ivf`` only over the probed-cell candidates of
+    _ivf_ctes (the IVF-PQ queries)."""
     from page_rank_mapreduce_java_spark.functions.vectors import sq_l2_sql
 
     body, cb = _pq_oracle_parts()
-    return f"""
-    WITH {body},
-    enc AS MATERIALIZED (
-      SELECT vec_id, m, centroid_id AS code FROM (
-        SELECT s.vec_id, s.m, c.centroid_id,
-               row_number() OVER (PARTITION BY s.vec_id, s.m
-                 ORDER BY {sq_l2_sql('s.sv', 'c.cvec')} ASC,
-                          c.centroid_id ASC) AS rn
-        FROM slices s JOIN {cb} c ON s.m = c.m) WHERE rn = 1),
-    lut AS MATERIALIZED (
-      SELECT q.vec_id AS query_id, c.m, c.centroid_id AS code,
-             CAST(ROUND({sq_l2_sql('q.sv', 'c.cvec')} * 1e6, 0) AS BIGINT)
-               AS dmicro
-      FROM slices q JOIN {cb} c ON q.m = c.m
-      WHERE q.vec_id < {PQ_QUERY_VECS}),
-    scored AS (
-      SELECT l.query_id, e.vec_id AS neighbor_id,
-             CAST(SUM(l.dmicro) AS BIGINT) AS adc_micro
-      FROM enc e JOIN lut l ON e.m = l.m AND e.code = l.code
-      WHERE e.vec_id <> l.query_id
-      GROUP BY 1, 2)
-    SELECT query_id, neighbor_id, adc_micro FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-               ORDER BY adc_micro, neighbor_id) AS rn FROM scored)
-    WHERE rn <= {PQ_TOP_K}
-"""
-
-
-def _ivfpq_topk_sql() -> str:
-    from page_rank_mapreduce_java_spark.functions.vectors import sq_l2_sql
-
-    body, cb = _pq_oracle_parts()
-    return f"""
-    WITH {_KMEANS_CTES},
-    cent AS (SELECT centroid_id, cvec FROM {_KMEANS_FINAL}),
-    assign AS MATERIALIZED (
-      SELECT vec_id AS neighbor_id, centroid_id FROM (
-        SELECT e.vec_id, c.centroid_id,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY {cosine_sql('e.embedding', 'c.cvec')} DESC,
-                          c.centroid_id ASC) AS rn
-        FROM embeddings e CROSS JOIN cent c) WHERE rn = 1),
-    probes AS (
-      SELECT query_id, centroid_id FROM (
-        SELECT q.vec_id AS query_id, c.centroid_id,
-               row_number() OVER (PARTITION BY q.vec_id
-                 ORDER BY {cosine_sql('q.embedding', 'c.cvec')} DESC,
-                          c.centroid_id ASC) AS rn
-        FROM embeddings q CROSS JOIN cent c
-        WHERE q.vec_id < {PQ_QUERY_VECS}) WHERE rn <= {IVF_PROBES}),
-    cand AS MATERIALIZED (
-      SELECT p.query_id, a.neighbor_id
-      FROM probes p JOIN assign a USING (centroid_id)
-      WHERE p.query_id != a.neighbor_id),
-    {body},
-    enc AS MATERIALIZED (
-      SELECT vec_id, m, centroid_id AS code FROM (
-        SELECT s.vec_id, s.m, c.centroid_id,
-               row_number() OVER (PARTITION BY s.vec_id, s.m
-                 ORDER BY {sq_l2_sql('s.sv', 'c.cvec')} ASC,
-                          c.centroid_id ASC) AS rn
-        FROM slices s JOIN {cb} c ON s.m = c.m) WHERE rn = 1),
-    lut AS MATERIALIZED (
-      SELECT q.vec_id AS query_id, c.m, c.centroid_id AS code,
-             CAST(ROUND({sq_l2_sql('q.sv', 'c.cvec')} * 1e6, 0) AS BIGINT)
-               AS dmicro
-      FROM slices q JOIN {cb} c ON q.m = c.m
-      WHERE q.vec_id < {PQ_QUERY_VECS}),
-    scored AS (
-      SELECT l.query_id, e.vec_id AS neighbor_id,
-             CAST(SUM(l.dmicro) AS BIGINT) AS adc_micro
-      FROM cand cd
+    head, pairs = "", "enc e JOIN lut l ON e.m = l.m AND e.code = l.code"
+    if ivf:
+        head = _ivf_ctes(PQ_QUERY_VECS, IVF_PROBES) + ",\n    "
+        pairs = """cand cd
       JOIN enc e ON e.vec_id = cd.neighbor_id
       JOIN lut l ON l.query_id = cd.query_id
-                AND e.m = l.m AND e.code = l.code
+                AND e.m = l.m AND e.code = l.code"""
+    return f"""
+    WITH {head}{body},
+    enc AS MATERIALIZED (
+      SELECT vec_id, m, centroid_id AS code FROM (
+        SELECT s.vec_id, s.m, c.centroid_id,
+               row_number() OVER (PARTITION BY s.vec_id, s.m
+                 ORDER BY {sq_l2_sql('s.sv', 'c.cvec')} ASC,
+                          c.centroid_id ASC) AS rn
+        FROM slices s JOIN {cb} c ON s.m = c.m) WHERE rn = 1),
+    lut AS MATERIALIZED (
+      SELECT q.vec_id AS query_id, c.m, c.centroid_id AS code,
+             CAST(ROUND({sq_l2_sql('q.sv', 'c.cvec')} * 1e6, 0) AS BIGINT)
+               AS dmicro
+      FROM slices q JOIN {cb} c ON q.m = c.m
+      WHERE q.vec_id < {PQ_QUERY_VECS}),
+    scored AS (
+      SELECT l.query_id, e.vec_id AS neighbor_id,
+             CAST(SUM(l.dmicro) AS BIGINT) AS adc_micro
+      FROM {pairs}
+      WHERE e.vec_id <> l.query_id
       GROUP BY 1, 2)
     SELECT query_id, neighbor_id, adc_micro FROM (
       SELECT *, row_number() OVER (PARTITION BY query_id
@@ -831,8 +629,6 @@ def q_ann_ivf_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the sweep is one grouped count joined to a 4-row spine."""
     from pyspark.sql.window import Window
 
-    from page_rank_mapreduce_java_spark.similarity.ann import ivf_assign
-
     e = load_table(spark, "embeddings", sf_dir)
     q = e.filter(F.col("vec_id") < N_QUERY_VECS)
     # r12 A/B note (guide §1.1 empirical loop): persisting brute and a
@@ -846,16 +642,7 @@ def q_ann_ivf_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute = brute_force_topk(e, q, k=TOP_K).select("query_id", "neighbor_id")
     cent = kmeans_train(e, k=IVF_CENTROIDS, iters=KMEANS_ITERS)
     assign = ivf_assign(e, cent)
-    qv = q.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
-    wq = Window.partitionBy("query_id").orderBy(
-        F.desc(cosine(F.col("qvec"), F.col("cvec"))), F.asc("centroid_id")
-    )
-    probes = (
-        qv.join(F.broadcast(cent), F.lit(True))
-        .withColumn("prn", F.row_number().over(wq))
-        .filter(F.col("prn") <= max(RECALL_PROBES))
-        .select("query_id", "qvec", "centroid_id", "prn")
-    )
+    probes = probe_cells(q, cent, max(RECALL_PROBES))
     members = e.select(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("nvec")
     ).join(assign.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id")
@@ -926,11 +713,39 @@ QUERIES = {
 _KMEANS_CTES, _KMEANS_FINAL = kmeans_sql(k=IVF_CENTROIDS, iters=KMEANS_ITERS)
 
 
+def _ivf_ctes(n_queries: int, n_probe: int) -> str:
+    """DuckDB CTE chain of the IVF probe step, shared by every IVF oracle:
+    kmeans → cent → assign (vector → nearest cell) → probes (each of the
+    first ``n_queries`` queries' ``n_probe`` nearest cells, probe rank
+    ``prn`` kept) → cand (query_id, neighbor_id, prn), self-matches
+    dropped. Embed as ``WITH {_ivf_ctes(...)}, ...``."""
+    return f"""{_KMEANS_CTES},
+    cent AS (SELECT centroid_id, cvec FROM {_KMEANS_FINAL}),
+    assign AS (
+      SELECT vec_id AS neighbor_id, centroid_id FROM (
+        SELECT e.vec_id, c.centroid_id,
+               row_number() OVER (PARTITION BY e.vec_id
+                 ORDER BY {cosine_sql('e.embedding', 'c.cvec')} DESC,
+                          c.centroid_id ASC) AS rn
+        FROM embeddings e CROSS JOIN cent c) WHERE rn = 1),
+    probes AS (
+      SELECT query_id, centroid_id, rn AS prn FROM (
+        SELECT q.vec_id AS query_id, c.centroid_id,
+               row_number() OVER (PARTITION BY q.vec_id
+                 ORDER BY {cosine_sql('q.embedding', 'c.cvec')} DESC,
+                          c.centroid_id ASC) AS rn
+        FROM embeddings q CROSS JOIN cent c
+        WHERE q.vec_id < {n_queries}) WHERE rn <= {n_probe}),
+    cand AS (
+      SELECT p.query_id, a.neighbor_id, p.prn
+      FROM probes p JOIN assign a USING (centroid_id)
+      WHERE p.query_id != a.neighbor_id)"""
+
+
 def _ivf_recall_sql() -> str:
-    """DuckDB mirror of q_ann_ivf_recall_sweep: the certified
-    ann_ivf_topk CTE chain (kmeans → cells → probes, probe rank kept),
-    the brute baseline, and one scalar hit-count per probe level."""
-    probe_max = max(RECALL_PROBES)
+    """DuckDB mirror of q_ann_ivf_recall_sweep: the IVF chain at the
+    widest probe level (probe rank kept), the brute baseline, and one
+    scalar hit-count per probe level."""
     per = " UNION ALL ".join(
         f"""
       SELECT CAST({np} AS BIGINT) AS n_probe, (
@@ -949,27 +764,7 @@ def _ivf_recall_sql() -> str:
         for np in RECALL_PROBES
     )
     return f"""
-    WITH {_KMEANS_CTES},
-    cent AS (SELECT centroid_id, cvec FROM {_KMEANS_FINAL}),
-    assign AS (
-      SELECT vec_id AS neighbor_id, centroid_id FROM (
-        SELECT e.vec_id, c.centroid_id,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY {cosine_sql('e.embedding', 'c.cvec')} DESC,
-                          c.centroid_id ASC) AS rn
-        FROM embeddings e CROSS JOIN cent c) WHERE rn = 1),
-    probes AS (
-      SELECT query_id, centroid_id, rn AS prn FROM (
-        SELECT q.vec_id AS query_id, c.centroid_id,
-               row_number() OVER (PARTITION BY q.vec_id
-                 ORDER BY {cosine_sql('q.embedding', 'c.cvec')} DESC,
-                          c.centroid_id ASC) AS rn
-        FROM embeddings q CROSS JOIN cent c
-        WHERE q.vec_id < {N_QUERY_VECS}) WHERE rn <= {probe_max}),
-    cand AS (
-      SELECT p.query_id, a.neighbor_id, p.prn
-      FROM probes p JOIN assign a USING (centroid_id)
-      WHERE p.query_id != a.neighbor_id),
+    WITH {_ivf_ctes(N_QUERY_VECS, max(RECALL_PROBES))},
     brute AS (
       SELECT query_id, neighbor_id FROM (
         SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
@@ -985,6 +780,7 @@ def _ivf_recall_sql() -> str:
            CAST(hits * 1000000 // base AS BIGINT) AS recall_ppm
     FROM sweep, base
     """
+
 
 ORACLES = {
     "embedding_quantize_int8": QUANTIZE_SQL,
@@ -1032,27 +828,7 @@ ORACLES = {
           FROM {_KMEANS_FINAL})
     """,
     "ann_ivf_topk": f"""
-        WITH {_KMEANS_CTES},
-        cent AS (SELECT centroid_id, cvec FROM {_KMEANS_FINAL}),
-        assign AS (
-          SELECT vec_id AS neighbor_id, centroid_id FROM (
-            SELECT e.vec_id, c.centroid_id,
-                   row_number() OVER (PARTITION BY e.vec_id
-                     ORDER BY {cosine_sql('e.embedding', 'c.cvec')} DESC,
-                              c.centroid_id ASC) AS rn
-            FROM embeddings e CROSS JOIN cent c) WHERE rn = 1),
-        probes AS (
-          SELECT query_id, centroid_id FROM (
-            SELECT q.vec_id AS query_id, c.centroid_id,
-                   row_number() OVER (PARTITION BY q.vec_id
-                     ORDER BY {cosine_sql('q.embedding', 'c.cvec')} DESC,
-                              c.centroid_id ASC) AS rn
-            FROM embeddings q CROSS JOIN cent c
-            WHERE q.vec_id < {N_QUERY_VECS}) WHERE rn <= {IVF_PROBES}),
-        cands AS (
-          SELECT p.query_id, a.neighbor_id
-          FROM probes p JOIN assign a USING (centroid_id)
-          WHERE p.query_id != a.neighbor_id)
+        WITH {_ivf_ctes(N_QUERY_VECS, IVF_PROBES)}
         SELECT query_id, neighbor_id, ROUND(cos, 6) AS cos,
                CAST(rn AS BIGINT) AS rn
         FROM (
@@ -1061,20 +837,20 @@ ORACLES = {
                  row_number() OVER (PARTITION BY c.query_id
                    ORDER BY {cosine_sql('q.embedding', 'n.embedding')} DESC,
                             c.neighbor_id ASC) AS rn
-          FROM cands c
+          FROM cand c
           JOIN embeddings q ON q.vec_id = c.query_id
           JOIN embeddings n ON n.vec_id = c.neighbor_id)
         WHERE rn <= {TOP_K}
     """,
     "ann_pq_codebook": _pq_codebook_sql(),
-    "ann_pq_topk": _pq_topk_sql(),
+    "ann_pq_topk": _adc_sql(ivf=False),
     # identical output to ann_pq_topk: training is deterministic, the
     # serving variant only changes WHERE the codebook/codes come from
-    "ann_pq_serve_topk": _pq_topk_sql(),
-    "ann_ivfpq_topk": _ivfpq_topk_sql(),
+    "ann_pq_serve_topk": _adc_sql(ivf=False),
+    "ann_ivfpq_topk": _adc_sql(ivf=True),
     # identical output to ann_ivfpq_topk: deterministic training, the
     # serving variant only changes WHERE centroids/codebook/codes come from
-    "ann_ivfpq_serve_topk": _ivfpq_topk_sql(),
+    "ann_ivfpq_serve_topk": _adc_sql(ivf=True),
     "embedding_cosine_histogram": COSINE_HIST_SQL,
     "ann_ivf_recall_sweep": _ivf_recall_sql(),
 }

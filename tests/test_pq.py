@@ -1,10 +1,13 @@
 """Product-quantization ANN (similarity/pq.py): structural and recall
-contracts. No DuckDB oracle yet (audit window full in r4) — instead the
-tests pin the properties an oracle would check: deterministic codes,
-complete M-code coverage, exact ADC identity on a constructed case, and
-a recall floor against exact L2 top-k."""
+contracts of the code the registered queries run. The DuckDB oracles
+(similarity/queries._adc_sql) check whole-query values; these tests pin
+deterministic codes, complete M-code coverage, the exact integer ADC
+identity recomputed in Python, a recall floor against exact L2 top-k,
+and the IVF-PQ ⊂ PQ score consistency."""
 
 from __future__ import annotations
+
+from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
 from pyspark.sql import functions as F
@@ -14,10 +17,9 @@ from page_rank_mapreduce_java_spark.catalog import load_table
 from page_rank_mapreduce_java_spark.functions.vectors import sq_l2
 from page_rank_mapreduce_java_spark.similarity.pq import (
     PQ_M,
+    adc_topk,
     pq_encode,
-    pq_topk,
     pq_train,
-    subvector,
 )
 
 DIM = 64
@@ -61,27 +63,29 @@ def test_encode_deterministic_across_partitionings(corpus, codebook):
 
 
 def test_adc_equals_sum_of_subspace_distances(spark, corpus, codebook):
-    """For one query, the ADC score of a neighbor must equal the sum of
-    squared-L2 distances from the query's sub-vectors to the neighbor's
-    ASSIGNED sub-centroids — computed independently here."""
-    q = corpus.filter(F.col("vec_id") == corpus.agg(F.min("vec_id")).first()[0])
+    """Every ADC score equals Σ_m HALF_UP(d_m·1e6), d_m the squared L2
+    from the query's m-th sub-vector to the neighbor's ASSIGNED m-th
+    sub-centroid — recomputed here in Python with the same sequential
+    fold — and no query is returned as its own neighbor."""
+    q = corpus.orderBy("vec_id").limit(20)
     codes = pq_encode(corpus, codebook, dim=DIM)
-    top = pq_topk(codes, codebook, q, dim=DIM, k=5)
-    row = top.orderBy("adc_sq", "neighbor_id").first()
+    top = adc_topk(codebook, q, codes, DIM, 10).collect()
+    assert len(top) == 200
 
-    neigh_codes = {
-        (r.m, r.code)
-        for r in codes.filter(F.col("vec_id") == row.neighbor_id).collect()
-    }
-    qvec = q.first().embedding
+    qvecs = {r.vec_id: r.embedding for r in q.collect()}
+    assigned = {(r.vec_id, r.m): r.code for r in codes.collect()}
     cb = {(r.m, r.centroid_id): r.cvec for r in codebook.collect()}
     width = DIM // PQ_M
-    expect = 0.0
-    for m, code in neigh_codes:
-        sub_q = [float(x) for x in qvec[m * width : (m + 1) * width]]
-        cv = cb[(m, code)]
-        expect += sum((a - b) * (a - b) for a, b in zip(sub_q, cv))
-    assert row.adc_sq == pytest.approx(expect, rel=1e-9)
+    for row in top:
+        assert row.neighbor_id != row.query_id
+        expect = 0
+        for m in range(PQ_M):
+            sub_q = qvecs[row.query_id][m * width : (m + 1) * width]
+            d = 0.0
+            for a, b in zip(sub_q, cb[(m, assigned[(row.neighbor_id, m)])]):
+                d += (float(a) - b) * (float(a) - b)
+            expect += int(Decimal(repr(d * 1e6)).quantize(Decimal(1), ROUND_HALF_UP))
+        assert row.adc_micro == expect
 
 
 def test_recall_against_exact_l2(spark, corpus, codebook):
@@ -91,7 +95,7 @@ def test_recall_against_exact_l2(spark, corpus, codebook):
     K = 10
     q = corpus.orderBy("vec_id").limit(20)
     codes = pq_encode(corpus, codebook, dim=DIM)
-    approx = pq_topk(codes, codebook, q, dim=DIM, k=K)
+    approx = adc_topk(codebook, q, codes, DIM, K)
 
     qs = q.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
     c = corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv"))
@@ -152,26 +156,28 @@ def test_serve_index_tag_tracks_data_fingerprint(tmp_path):
     assert before != _embeddings_fingerprint("/root/testdata/sf0.001")
 
 
-def test_ivfpq_subset_consistency(spark, corpus):
-    """IVF-PQ results must be a per-query subset of the FULL ADC ranking
-    restricted to probed cells: every returned neighbor's adc_sq must
-    equal the plain-PQ adc_sq for that (query, neighbor) — cell pruning
-    changes WHICH pairs are scored, never the score."""
-    from page_rank_mapreduce_java_spark.similarity.pq import ivfpq_topk
+def test_ivfpq_subset_consistency(spark, corpus, codebook):
+    """The registered IVF-PQ query's rows must be a per-query subset of
+    the FULL ADC ranking: every returned neighbor's adc_micro equals the
+    plain-PQ adc_micro for that (query, neighbor) — cell pruning changes
+    WHICH pairs are scored, never the score."""
+    from collections import Counter
 
-    q = corpus.orderBy("vec_id").limit(5)
-    cb = pq_train(corpus, dim=DIM)
-    codes = pq_encode(corpus, cb, dim=DIM)
+    from page_rank_mapreduce_java_spark.similarity.queries import (
+        PQ_QUERY_VECS,
+        PQ_TOP_K,
+        q_ann_ivfpq_topk,
+    )
+
+    q = corpus.filter(F.col("vec_id") < PQ_QUERY_VECS)
+    codes = pq_encode(corpus, codebook, dim=DIM)
     full = {
-        (r.query_id, r.neighbor_id): r.adc_sq
-        for r in pq_topk(codes, cb, q, dim=DIM, k=499).collect()
+        (r.query_id, r.neighbor_id): r.adc_micro
+        for r in adc_topk(codebook, q, codes, DIM, corpus.count()).collect()
     }
-    got = ivfpq_topk(corpus, q, dim=DIM, k=10).collect()
+    got = q_ann_ivfpq_topk(spark, "/root/testdata/sf0.001").collect()
     assert len(got) > 0
     for r in got:
-        assert (r.query_id, r.neighbor_id) in full
-        assert r.adc_sq == pytest.approx(full[(r.query_id, r.neighbor_id)], rel=1e-12)
-    # ≤ k rows per query
-    from collections import Counter
+        assert r.adc_micro == full[(r.query_id, r.neighbor_id)]
     per_q = Counter(r.query_id for r in got)
-    assert all(v <= 10 for v in per_q.values())
+    assert all(v <= PQ_TOP_K for v in per_q.values())
