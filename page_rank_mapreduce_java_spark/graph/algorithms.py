@@ -19,11 +19,17 @@ state vector.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from page_rank_mapreduce_java_spark.graph.keyed import keyed_edges
-from page_rank_mapreduce_java_spark.plans.checkpoints import cut_lineage, iterate
+from page_rank_mapreduce_java_spark.plans.checkpoints import (
+    cut_lineage,
+    iterate,
+    observed_cut,
+)
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -184,6 +190,15 @@ def sssp_weighted(
     return dist
 
 
+def _live_edges(ed: DataFrame, nodes: DataFrame) -> DataFrame:
+    """The cut edges of ``ed`` whose endpoints are both in ``nodes``."""
+    return cut_lineage(
+        ed.join(nodes.select(F.col("id").alias("src")), "src", "left_semi")
+        .join(nodes.select(F.col("id").alias("dst")), "dst", "left_semi")
+        .select("src", "dst")
+    )
+
+
 def strongly_connected_components(
     edges: DataFrame,
     max_outer: int = 64,
@@ -221,9 +236,9 @@ def strongly_connected_components(
     their join key (graph/keyed.py), then trimmed to the live subgraph
     each outer round; supersteps move only (id, color/mark) vectors;
     lineage cut per step. The coloring and confirmation fixpoints exit
-    through ``iterate``, whose test rides the checkpoint job; only the
-    trim and outer loops still probe with first() on a node-sized
-    relation. Rounds are
+    through ``iterate``; the trim and outer loops exit on the row counts
+    their node cuts observe (``observed_cut``). No loop exit costs a
+    Spark job of its own. Rounds are
     data-dependent (max_outer/max_inner are safety bounds ~ graph
     diameter, not tuning knobs), which is exactly why this form trades
     away the unrolled-SQL oracle — q_scc's fixed-round doubling closure
@@ -245,42 +260,32 @@ def strongly_connected_components(
             .distinct()
             .repartition(partitions, "id")
         )
-        nodes = cut_lineage(all_nodes)
 
-        assigned = None  # DataFrame[id, scc_id], unioned + lineage-cut per round
-
-        def bank(found: DataFrame) -> None:
-            nonlocal assigned
-            assigned = (
-                found if assigned is None else cut_lineage(assigned.unionByName(found))
-            )
+        count = F.count(F.lit(1))
+        nodes, n = observed_cut(all_nodes, count)
+        found: list[DataFrame] = []  # cut [id, scc_id] pieces, unioned at the end
 
         for _ in range(max_outer):
-            if nodes.first() is None:
+            if not n:
                 break
 
             # --- 1. trim singleton SCCs to fixpoint ----------------------
             for _ in range(max_inner):
                 has_out = ed.select(F.col("src").alias("id"))
                 has_in = ed.select(F.col("dst").alias("id"))
-                core = cut_lineage(
+                core, n_core = observed_cut(
                     nodes.join(has_out.distinct(), "id", "left_semi")
-                    .join(has_in.distinct(), "id", "left_semi")
+                    .join(has_in.distinct(), "id", "left_semi"),
+                    count,
                 )
-                trimmed = nodes.join(core, "id", "left_anti").select(
-                    "id", F.col("id").alias("scc_id")
-                )
-                if trimmed.first() is None:
+                if n_core == n:
                     break
-                bank(cut_lineage(trimmed))
-                nodes = core
-                ed = cut_lineage(
-                    ed.join(nodes.select(F.col("id").alias("src")), "src", "left_semi")
-                    .join(nodes.select(F.col("id").alias("dst")), "dst", "left_semi")
-                    .select("src", "dst")
-                )
-            if nodes.first() is None:
-                continue
+                trimmed = nodes.join(core, "id", "left_anti")
+                found.append(cut_lineage(trimmed.select("id", F.col("id").alias("scc_id"))))
+                nodes, n = core, n_core
+                ed = _live_edges(ed, nodes)
+            if not n:
+                break
 
             # --- 2. forward max-coloring to fixpoint ---------------------
             def color_step(color: DataFrame) -> DataFrame:
@@ -325,19 +330,19 @@ def strongly_connected_components(
 
             members = mark.filter("m").select("id", "color")
             scc_lbl = members.groupBy("color").agg(F.min("id").alias("scc_id"))
-            bank(cut_lineage(members.join(scc_lbl, "color").select("id", "scc_id")))
-
-            # --- 4. peel confirmed nodes and their edges -----------------
-            nodes = cut_lineage(nodes.join(members.select("id"), "id", "left_anti"))
-            ed = cut_lineage(
-                ed.join(nodes.select(F.col("id").alias("src")), "src", "left_semi")
-                .join(nodes.select(F.col("id").alias("dst")), "dst", "left_semi")
-                .select("src", "dst")
+            found.append(
+                cut_lineage(members.join(scc_lbl, "color").select("id", "scc_id"))
             )
 
-    if assigned is None:
+            # --- 4. peel confirmed nodes and their edges -----------------
+            nodes, n = observed_cut(
+                nodes.join(members.select("id"), "id", "left_anti"), count
+            )
+            ed = _live_edges(ed, nodes)
+
+    if not found:
         return all_nodes.select("id", F.col("id").alias("scc_id"))
-    return assigned
+    return reduce(DataFrame.unionByName, found)
 
 
 def label_propagation(

@@ -38,6 +38,8 @@ betweenness-family centralities (Brandes–Pich 2007): cost is linear in
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -45,37 +47,49 @@ from page_rank_mapreduce_java_spark.graph.keyed import keyed_edges
 from page_rank_mapreduce_java_spark.plans.checkpoints import cut_lineage
 
 
-def _sigma_levels(
-    sym: DataFrame, sources: DataFrame, max_depth: int
+def bfs_frontier(
+    sym: DataFrame, sources: DataFrame, max_depth: int, payload: str
 ) -> list[DataFrame]:
-    """Forward pass shared by stress and betweenness: ``levels[l]`` is
-    DataFrame[s, id, sigma] for the nodes at distance ``l`` from source
-    ``s``, with ``sigma`` = the number of shortest s→id paths (BIGINT).
-    ``sym`` must be the keyed edge relation."""
-    lvl0 = cut_lineage(
+    """Level-synchronous multi-source BFS, the forward pass of stress,
+    betweenness and the distance family: ``levels[l]`` is
+    DataFrame[s, id, <payload>] for the nodes first visited at distance
+    ``l`` from source ``s``. ``payload`` "sigma" carries the number of
+    shortest s→id paths (BIGINT), summed over the level-(l-1)
+    predecessors; "level" carries ``l`` itself. ``sym`` must be the
+    keyed edge relation."""
+    sigma = payload == "sigma"
+    lvl = cut_lineage(
         sources.select(
             F.col("src").alias("s"),
             F.col("src").alias("id"),
-            F.lit(1).cast("long").alias("sigma"),
+            F.lit(int(sigma)).cast("long").alias(payload),
         )
     )
-    levels = [lvl0]
+    levels = [lvl]
     # ``visited`` is only ever a union of already-checkpointed levels, so
     # it needs no cut of its own (one eager job per level saved): the
     # union lineage is depth-bounded by max_depth and each leg scans a
     # checkpoint.
-    visited = lvl0.select("s", "id")
-    for _ in range(max_depth):
-        prev = levels[-1]
-        cand = (
-            prev.join(sym, prev.id == sym.src)
-            .select("s", F.col("dst").alias("id"), "sigma")
-            .groupBy("s", "id")
-            .agg(F.sum("sigma").alias("sigma"))
-        )
-        nxt = cut_lineage(cand.join(visited, ["s", "id"], "left_anti"))
-        levels.append(nxt)
-        visited = visited.unionByName(nxt.select("s", "id"))
+    visited = lvl.select("s", "id")
+    for depth in range(1, max_depth + 1):
+        hop = lvl.join(sym, lvl.id == sym.src)
+        if sigma:
+            nxt = (
+                hop.select("s", F.col("dst").alias("id"), "sigma")
+                .groupBy("s", "id")
+                .agg(F.sum("sigma").alias("sigma"))
+                .join(visited, ["s", "id"], "left_anti")
+            )
+        else:
+            nxt = (
+                hop.select("s", F.col("dst").alias("id"))
+                .distinct()
+                .join(visited, ["s", "id"], "left_anti")
+                .withColumn("level", F.lit(depth).cast("long"))
+            )
+        lvl = cut_lineage(nxt)
+        levels.append(lvl)
+        visited = visited.unionByName(lvl.select("s", "id"))
     return levels
 
 
@@ -149,7 +163,7 @@ def stress_centrality_sampled(
     every node of ``sym`` (0 where never interior).
     """
     with keyed_edges(sym.select("src", "dst"), memo=cache_key) as (sym, _):
-        levels = _sigma_levels(sym, sources, max_depth)
+        levels = bfs_frontier(sym, sources, max_depth, "sigma")
         return _accumulate(
             sym,
             levels,
@@ -205,7 +219,7 @@ def betweenness_sampled(
     frontier-sized × |sources|, never edge-sized.
     """
     with keyed_edges(sym.select("src", "dst"), memo=cache_key) as (sym, _):
-        levels = _sigma_levels(sym, sources, max_depth)
+        levels = bfs_frontier(sym, sources, max_depth, "sigma")
         return _accumulate(
             sym,
             levels,
@@ -223,11 +237,10 @@ def labeled_bfs_levels(
 ) -> DataFrame:
     """Per-source BFS level labels: DataFrame[s, id, level] with level =
     d(s, id) ∈ [0, max_depth], one row per (source, first-visited node)
-    — the shared forward pass of the distance-centrality family
-    (harmonic/closeness, eccentricity, mean path length), identical to
-    ``_sigma_levels`` minus the path counts. It keeps its own pass on
-    purpose: carrying σ would let those distance queries fail on a
-    BIGINT overflow under ANSI mode, which they cannot do without it.
+    — the forward pass of the distance-centrality family
+    (harmonic/closeness, eccentricity, mean path length). It carries the
+    level, not σ: path counts could overflow BIGINT under ANSI mode, and
+    these queries do not need them.
 
     ``sym``: symmetrized simple edge relation DataFrame[src, dst];
     ``sources``: DataFrame[src]. Scale shape: one frontier⋈edges join
@@ -237,28 +250,5 @@ def labeled_bfs_levels(
     via localCheckpoint first).
     """
     with keyed_edges(sym.select("src", "dst"), memo=cache_key) as (sym, _):
-        lvl = cut_lineage(
-            sources.select(
-                F.col("src").alias("s"),
-                F.col("src").alias("id"),
-                F.lit(0).cast("long").alias("level"),
-            )
-        )
-        out = lvl
-        # The union of checkpointed levels needs no cut (see _sigma_levels).
-        visited = lvl.select("s", "id")
-        for depth in range(1, max_depth + 1):
-            cand = (
-                lvl.join(sym, lvl.id == sym.src)
-                .select("s", F.col("dst").alias("id"))
-                .distinct()
-            )
-            nxt = cut_lineage(
-                cand.join(visited, ["s", "id"], "left_anti").withColumn(
-                    "level", F.lit(depth).cast("long")
-                )
-            )
-            out = out.unionByName(nxt)
-            visited = visited.unionByName(nxt.select("s", "id"))
-            lvl = nxt
-        return cut_lineage(out)
+        levels = bfs_frontier(sym, sources, max_depth, "level")
+        return cut_lineage(reduce(DataFrame.unionByName, levels))

@@ -102,22 +102,27 @@ def _rank_e8():
 _RANKS_CACHE: dict[tuple, DataFrame] = {}
 
 
-def _corpus_ranks(spark: SparkSession, sf_dir: str, personalized: bool = False) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, personalized)
+def _corpus_ranks(spark: SparkSession, sf_dir: str, variant: str | None = None) -> DataFrame:
+    """DataFrame[id, rank_e8] of the corpus PageRank; ``variant`` is None,
+    ``"personalized"`` (teleport onto the BFS sources) or ``"weighted"``
+    (lineitem-count edge weights)."""
+    key = (spark.sparkContext.applicationId, sf_dir, variant)
     if key not in _RANKS_CACHE:
-        edges = derived_edges(spark, sf_dir)
-        sources = None
-        if personalized:
-            sources = edges.filter(F.col("src") <= BFS_SOURCE_MAX).select("src").distinct()
-        res = pagerank(
-            edges, num_iterations=PAGERANK_ITERS, damping=DAMPING, personalize=sources
-        )
+        if variant == "weighted":
+            edges, opts = weighted_edges(spark, sf_dir), {"weight_col": "w"}
+        else:
+            edges, opts = derived_edges(spark, sf_dir), {}
+        if variant == "personalized":
+            opts["personalize"] = (
+                edges.filter(F.col("src") <= BFS_SOURCE_MAX).select("src").distinct()
+            )
+        res = pagerank(edges, num_iterations=PAGERANK_ITERS, damping=DAMPING, **opts)
         _RANKS_CACHE[key] = res.ranks
-    return _RANKS_CACHE[key]
+    return _RANKS_CACHE[key].select("id", _rank_e8().alias("rank_e8"))
 
 
 def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _corpus_ranks(spark, sf_dir).select("id", _rank_e8().alias("rank_e8"))
+    return _corpus_ranks(spark, sf_dir)
 
 
 def q_pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -127,21 +132,73 @@ def q_pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     (graph/pagerank.py) on lineitem-count weights — the importance
     ranking a recommendation pipeline actually wants, where buying 40
     times from a supplier should count 40× a single order."""
-    key = (spark.sparkContext.applicationId, sf_dir, "weighted")
-    if key not in _RANKS_CACHE:
-        res = pagerank(
-            weighted_edges(spark, sf_dir),
-            num_iterations=PAGERANK_ITERS,
-            damping=DAMPING,
-            weight_col="w",
-        )
-        _RANKS_CACHE[key] = res.ranks
-    return _RANKS_CACHE[key].select("id", _rank_e8().alias("rank_e8"))
+    return _corpus_ranks(spark, sf_dir, "weighted")
 
 
 def q_pagerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ranked = _corpus_ranks(spark, sf_dir).select("id", _rank_e8().alias("rank_e8"))
-    return ranked.orderBy(F.desc("rank_e8"), F.asc("id")).limit(20)
+    return _corpus_ranks(spark, sf_dir).orderBy(F.desc("rank_e8"), F.asc("id")).limit(20)
+
+
+def pagerank_chain_sql(
+    edges_ctes: str,
+    iters: int,
+    damping: float,
+    weighted: bool = False,
+    sources: str | None = None,
+    prefix: str = "",
+) -> str:
+    """The unrolled PageRank oracle: ``edges_ctes`` (``WITH`` through the
+    ``{prefix}edges`` CTE[src, dst(, w)]), then the node, out-degree and
+    seed CTEs and one (dangling mass d, contributions c, ranks r) triple
+    per superstep, ending at the ``{prefix}r{iters}`` CTE[id, rank]. All
+    rank arithmetic is DOUBLE, as on the Spark side.
+
+    ``weighted``: deg = Σw and each edge scatters rank·w/deg (left-to-right
+    association matches the Spark column expression). ``sources``: a
+    SELECT of personalization ids; teleport and dangling mass then reset
+    uniformly onto them. ``prefix`` names the CTEs apart inside a larger
+    oracle."""
+    x = prefix
+    deg = "SUM(w)" if weighted else "count(*)"
+    share = f"r.rank * e.w / d.{x}deg" if weighted else f"r.rank / d.{x}deg"
+    sql = f"""{edges_ctes},
+{x}nodes AS MATERIALIZED (SELECT src AS id FROM {x}edges UNION SELECT dst FROM {x}edges),
+{x}deg AS MATERIALIZED (SELECT src AS id, {deg} AS {x}deg FROM {x}edges GROUP BY 1),"""
+    if sources is None:
+        sql += f"""
+{x}nn AS (SELECT count(*) AS n FROM {x}nodes),
+{x}r0 AS MATERIALIZED (SELECT id, CAST(1.0 AS DOUBLE)/{x}nn.n AS rank FROM {x}nodes, {x}nn)"""
+        row, teleport, base = "n", f"/{x}nn.n", f"{x}nodes n CROSS JOIN {x}nn"
+    else:
+        sql += f"""
+{x}srcs AS ({sources}),
+{x}ns AS (SELECT count(*) AS n FROM {x}srcs),
+{x}pvec AS MATERIALIZED (SELECT n.id,
+         CASE WHEN s.id IS NOT NULL THEN CAST(1.0 AS DOUBLE)/{x}ns.n
+              ELSE CAST(0.0 AS DOUBLE) END AS p
+         FROM {x}nodes n CROSS JOIN {x}ns LEFT JOIN {x}srcs s ON n.id = s.id),
+{x}r0 AS MATERIALIZED (SELECT id, p AS rank FROM {x}pvec)"""
+        row, teleport, base = "v", " * v.p", f"{x}pvec v"
+    for i in range(1, iters + 1):
+        p = i - 1
+        sql += f""",
+{x}d{i} AS MATERIALIZED (SELECT COALESCE(SUM(r.rank), CAST(0.0 AS DOUBLE)) AS dm
+         FROM {x}r{p} r LEFT JOIN {x}deg d ON r.id = d.id WHERE d.id IS NULL),
+{x}c{i} AS MATERIALIZED (SELECT e.dst AS id, SUM({share}) AS contrib
+         FROM {x}r{p} r JOIN {x}edges e ON r.id = e.src JOIN {x}deg d ON d.id = e.src
+         GROUP BY 1),
+{x}r{i} AS MATERIALIZED (SELECT {row}.id,
+         CAST({1.0 - damping} AS DOUBLE){teleport}
+         + CAST({damping} AS DOUBLE)
+           * (COALESCE(c.contrib, CAST(0.0 AS DOUBLE)) + {x}d{i}.dm{teleport}) AS rank
+         FROM {base} CROSS JOIN {x}d{i} LEFT JOIN {x}c{i} c ON {row}.id = c.id)"""
+    return sql
+
+
+def _corpus_pagerank_sql(edges_sql: str, **kw) -> str:
+    return pagerank_chain_sql(
+        f"WITH edges AS MATERIALIZED ({edges_sql})", PAGERANK_ITERS, DAMPING, **kw
+    ) + f"\nSELECT id, CAST(ROUND(rank * 1e8, 0) AS BIGINT) AS rank_e8 FROM r{PAGERANK_ITERS}"
 
 
 def q_out_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -172,43 +229,7 @@ BFS_SOURCE_MAX = 5  # custkeys ≤ 5 are the BFS / personalization source set
 def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Personalized PageRank: teleport mass resets to the source customers
     (custkey ≤ 5) instead of uniformly — the recommendation-graph variant."""
-    return _corpus_ranks(spark, sf_dir, personalized=True).select(
-        "id", _rank_e8().alias("rank_e8")
-    )
-
-
-def _ppr_oracle_sql(iters: int = PAGERANK_ITERS, damping: float = DAMPING) -> str:
-    base = f"""WITH edges AS MATERIALIZED ({EDGES_SQL}),
-nodes AS MATERIALIZED (SELECT src AS id FROM edges UNION SELECT dst FROM edges),
-deg AS MATERIALIZED (SELECT src AS id, count(*) AS deg FROM edges GROUP BY 1),
-srcs AS (SELECT DISTINCT src AS id FROM edges WHERE src <= {BFS_SOURCE_MAX}),
-ns AS (SELECT count(*) AS n FROM srcs),
-pvec AS MATERIALIZED (SELECT n.id,
-         CASE WHEN s.id IS NOT NULL THEN CAST(1.0 AS DOUBLE)/ns.n
-              ELSE CAST(0.0 AS DOUBLE) END AS p
-         FROM nodes n CROSS JOIN ns LEFT JOIN srcs s ON n.id = s.id),
-r0 AS MATERIALIZED (SELECT id, p AS rank FROM pvec)"""
-    steps = []
-    for i in range(1, iters + 1):
-        p = i - 1
-        steps.append(
-            f""",
-d{i} AS MATERIALIZED (SELECT COALESCE(SUM(r.rank), CAST(0.0 AS DOUBLE)) AS dm
-         FROM r{p} r LEFT JOIN deg d ON r.id = d.id WHERE d.id IS NULL),
-c{i} AS MATERIALIZED (SELECT e.dst AS id, SUM(r.rank / d.deg) AS contrib
-         FROM r{p} r JOIN edges e ON r.id = e.src JOIN deg d ON d.id = e.src
-         GROUP BY 1),
-r{i} AS MATERIALIZED (SELECT v.id,
-         CAST({1.0 - damping} AS DOUBLE) * v.p
-         + CAST({damping} AS DOUBLE)
-           * (COALESCE(c.contrib, CAST(0.0 AS DOUBLE)) + d{i}.dm * v.p) AS rank
-         FROM pvec v CROSS JOIN d{i} LEFT JOIN c{i} c ON v.id = c.id)"""
-        )
-    return (
-        base
-        + "".join(steps)
-        + f"\nSELECT id, CAST(ROUND(rank * 1e8, 0) AS BIGINT) AS rank_e8 FROM r{iters}"
-    )
+    return _corpus_ranks(spark, sf_dir, "personalized")
 
 
 def q_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -463,67 +484,6 @@ h{i} AS MATERIALIZED (SELECT id, s / (SELECT SUM(s) FROM hr{i}) AS h FROM hr{i})
 SELECT id, 'hub' AS kind, CAST(ROUND(h * 1e8, 0) AS BIGINT) AS score_e8 FROM h{iters}
 UNION ALL
 SELECT id, 'auth' AS kind, CAST(ROUND(a * 1e8, 0) AS BIGINT) AS score_e8 FROM a{iters}"""
-    )
-
-
-def _pagerank_oracle_sql(iters: int = PAGERANK_ITERS, damping: float = DAMPING) -> str:
-    base = f"""WITH edges AS MATERIALIZED ({EDGES_SQL}),
-nodes AS MATERIALIZED (SELECT src AS id FROM edges UNION SELECT dst FROM edges),
-deg AS MATERIALIZED (SELECT src AS id, count(*) AS deg FROM edges GROUP BY 1),
-nn AS (SELECT count(*) AS n FROM nodes),
-r0 AS MATERIALIZED (SELECT id, CAST(1.0 AS DOUBLE)/nn.n AS rank FROM nodes, nn)"""
-    steps = []
-    for i in range(1, iters + 1):
-        p = i - 1
-        steps.append(
-            f""",
-d{i} AS MATERIALIZED (SELECT COALESCE(SUM(r.rank), CAST(0.0 AS DOUBLE)) AS dm
-         FROM r{p} r LEFT JOIN deg d ON r.id = d.id WHERE d.id IS NULL),
-c{i} AS MATERIALIZED (SELECT e.dst AS id, SUM(r.rank / d.deg) AS contrib
-         FROM r{p} r JOIN edges e ON r.id = e.src JOIN deg d ON d.id = e.src
-         GROUP BY 1),
-r{i} AS MATERIALIZED (SELECT n.id,
-         CAST({1.0 - damping} AS DOUBLE)/nn.n
-         + CAST({damping} AS DOUBLE)
-           * (COALESCE(c.contrib, CAST(0.0 AS DOUBLE)) + d{i}.dm/nn.n) AS rank
-         FROM nodes n CROSS JOIN nn CROSS JOIN d{i} LEFT JOIN c{i} c ON n.id = c.id)"""
-        )
-    return (
-        base
-        + "".join(steps)
-        + f"\nSELECT id, CAST(ROUND(rank * 1e8, 0) AS BIGINT) AS rank_e8 FROM r{iters}"
-    )
-
-
-def _wpagerank_oracle_sql(iters: int = PAGERANK_ITERS, damping: float = DAMPING) -> str:
-    """Weighted-PageRank oracle: identical chain to _pagerank_oracle_sql
-    with deg = Σw and per-edge contribution rank·w/deg (left-to-right
-    association matches the Spark column expression)."""
-    base = f"""WITH edges AS MATERIALIZED ({WEDGES_SQL}),
-nodes AS MATERIALIZED (SELECT src AS id FROM edges UNION SELECT dst FROM edges),
-deg AS MATERIALIZED (SELECT src AS id, SUM(w) AS deg FROM edges GROUP BY 1),
-nn AS (SELECT count(*) AS n FROM nodes),
-r0 AS MATERIALIZED (SELECT id, CAST(1.0 AS DOUBLE)/nn.n AS rank FROM nodes, nn)"""
-    steps = []
-    for i in range(1, iters + 1):
-        p = i - 1
-        steps.append(
-            f""",
-d{i} AS MATERIALIZED (SELECT COALESCE(SUM(r.rank), CAST(0.0 AS DOUBLE)) AS dm
-         FROM r{p} r LEFT JOIN deg d ON r.id = d.id WHERE d.id IS NULL),
-c{i} AS MATERIALIZED (SELECT e.dst AS id, SUM(r.rank * e.w / d.deg) AS contrib
-         FROM r{p} r JOIN edges e ON r.id = e.src JOIN deg d ON d.id = e.src
-         GROUP BY 1),
-r{i} AS MATERIALIZED (SELECT n.id,
-         CAST({1.0 - damping} AS DOUBLE)/nn.n
-         + CAST({damping} AS DOUBLE)
-           * (COALESCE(c.contrib, CAST(0.0 AS DOUBLE)) + d{i}.dm/nn.n) AS rank
-         FROM nodes n CROSS JOIN nn CROSS JOIN d{i} LEFT JOIN c{i} c ON n.id = c.id)"""
-        )
-    return (
-        base
-        + "".join(steps)
-        + f"\nSELECT id, CAST(ROUND(rank * 1e8, 0) AS BIGINT) AS rank_e8 FROM r{iters}"
     )
 
 
@@ -1159,6 +1119,16 @@ ASSORTATIVITY_SQL = f"""
 STRESS_DEPTH = 4
 
 
+def _bfs_inputs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame, str]:
+    """(symmetrized interaction edges, BFS sources, keyed-edge memo): the
+    inputs of the multi-source BFS queries, as _frontier_sql reads them."""
+    from page_rank_mapreduce_java_spark.graph.algorithms import _symmetrize
+
+    edges = derived_edges(spark, sf_dir)
+    sources = edges.filter(F.col("src") <= BFS_SOURCE_MAX).select("src").distinct()
+    return _symmetrize(edges), sources, f"interact:{sf_dir}"
+
+
 def q_stress_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Depth-4 stress centrality from the BFS source customers over the
     symmetrized interaction graph — the integer-exact betweenness-family
@@ -1166,19 +1136,12 @@ def q_stress_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     most shortest paths. Source-sampled (custkey ≤ BFS_SOURCE_MAX) and
     depth-bounded exactly like graph_bfs_hops; the oracle unrolls the
     same levels, so truncation is part of the certified semantics."""
-    from page_rank_mapreduce_java_spark.graph.algorithms import _symmetrize
     from page_rank_mapreduce_java_spark.graph.centrality import (
         stress_centrality_sampled,
     )
 
-    edges = derived_edges(spark, sf_dir)
-    sources = edges.filter(F.col("src") <= BFS_SOURCE_MAX).select("src").distinct()
-    return stress_centrality_sampled(
-        _symmetrize(edges),
-        sources,
-        max_depth=STRESS_DEPTH,
-        cache_key=f"interact:{sf_dir}",
-    )
+    sym, sources, memo = _bfs_inputs(spark, sf_dir)
+    return stress_centrality_sampled(sym, sources, max_depth=STRESS_DEPTH, cache_key=memo)
 
 
 BETWEENNESS_SCALE = 10_000  # δ carried in 1e-4 units (see graph/centrality.py)
@@ -1195,54 +1158,55 @@ def q_betweenness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the oracle unrolls the identical recursion. Source-sampled
     (custkey ≤ BFS_SOURCE_MAX) and depth-bounded exactly like
     graph_bfs_hops; truncation is part of the certified semantics."""
-    from page_rank_mapreduce_java_spark.graph.algorithms import _symmetrize
     from page_rank_mapreduce_java_spark.graph.centrality import (
         betweenness_sampled,
     )
 
-    edges = derived_edges(spark, sf_dir)
-    sources = edges.filter(F.col("src") <= BFS_SOURCE_MAX).select("src").distinct()
+    sym, sources, memo = _bfs_inputs(spark, sf_dir)
     return betweenness_sampled(
-        _symmetrize(edges),
-        sources,
-        max_depth=STRESS_DEPTH,
-        scale=BETWEENNESS_SCALE,
-        cache_key=f"interact:{sf_dir}",
+        sym, sources, max_depth=STRESS_DEPTH, scale=BETWEENNESS_SCALE, cache_key=memo
     )
+
+
+def _frontier_sql(depth: int, payload: str) -> str:
+    """Unrolled multi-source BFS from the BFS sources over the symmetrized
+    interaction graph: f{l}[s, id, <payload>] holds the nodes first
+    visited at level l from source s, v{l}[s, id] every node visited up to
+    level l. ``payload`` "sigma" is the number of shortest s→id paths,
+    summed over the level-(l-1) predecessors; "level" is l itself. The
+    oracle twin of graph/centrality.bfs_frontier."""
+    sigma = payload == "sigma"
+    sql = f"""WITH edges AS MATERIALIZED ({EDGES_SQL}),
+sym AS MATERIALIZED (SELECT src, dst FROM edges UNION SELECT dst, src FROM edges),
+srcs AS (SELECT DISTINCT src AS id FROM edges WHERE src <= {BFS_SOURCE_MAX}),
+f0 AS MATERIALIZED (SELECT id AS s, id, CAST({int(sigma)} AS BIGINT) AS {payload} FROM srcs),
+v0 AS MATERIALIZED (SELECT s, id FROM f0)"""
+    for i in range(1, depth + 1):
+        p = i - 1
+        pick, value, group = (
+            ("", "SUM(p.sigma)", "\n  GROUP BY p.s, e.dst") if sigma else ("DISTINCT ", i, "")
+        )
+        sql += f""",
+f{i} AS MATERIALIZED (
+  SELECT {pick}p.s, e.dst AS id, CAST({value} AS BIGINT) AS {payload}
+  FROM f{p} p JOIN sym e ON p.id = e.src
+  LEFT JOIN v{p} v ON v.s = p.s AND v.id = e.dst
+  WHERE v.id IS NULL{group}),
+v{i} AS MATERIALIZED (SELECT s, id FROM v{p} UNION ALL SELECT s, id FROM f{i})"""
+    return sql
 
 
 def _betweenness_oracle_sql(
     depth: int = STRESS_DEPTH, scale: int = BETWEENNESS_SCALE
 ) -> str:
-    """DuckDB unroll of betweenness_sampled: the stress oracle's forward
-    pass verbatim, a backward pass carrying (sigma, delta) with the same
+    """DuckDB unroll of betweenness_sampled: the shared σ forward pass
+    (_frontier_sql), a backward pass carrying (sigma, delta) with the same
     per-edge integer division, interior = levels ≥ 1 summing delta."""
-    base = f"""WITH edges AS MATERIALIZED ({EDGES_SQL}),
-sym AS MATERIALIZED (SELECT src, dst FROM edges UNION SELECT dst, src FROM edges),
-srcs AS (SELECT DISTINCT src AS id FROM edges WHERE src <= {BFS_SOURCE_MAX}),
-f0 AS MATERIALIZED (SELECT id AS s, id, CAST(1 AS BIGINT) AS sigma FROM srcs),
-v0 AS MATERIALIZED (SELECT s, id FROM f0)"""
-    steps = []
-    for i in range(1, depth + 1):
-        p = i - 1
-        steps.append(
-            f""",
-f{i} AS MATERIALIZED (
-  SELECT p.s, e.dst AS id, CAST(SUM(p.sigma) AS BIGINT) AS sigma
-  FROM f{p} p JOIN sym e ON p.id = e.src
-  LEFT JOIN v{p} v ON v.s = p.s AND v.id = e.dst
-  WHERE v.id IS NULL
-  GROUP BY p.s, e.dst),
-v{i} AS MATERIALIZED (SELECT s, id FROM v{p} UNION ALL SELECT s, id FROM f{i})"""
-        )
-    steps.append(
-        f""",
+    sql = _frontier_sql(depth, "sigma") + f""",
 d{depth} AS MATERIALIZED (
   SELECT s, id, sigma, CAST(0 AS BIGINT) AS delta FROM f{depth})"""
-    )
     for l in range(depth - 1, -1, -1):
-        steps.append(
-            f""",
+        sql += f""",
 d{l} AS MATERIALIZED (
   SELECT c.s, c.id, c.sigma,
          CAST(COALESCE(SUM((c.sigma * ({scale} + dn.delta)) // dn.sigma),
@@ -1251,13 +1215,11 @@ d{l} AS MATERIALIZED (
   LEFT JOIN sym e ON c.id = e.src
   LEFT JOIN d{l + 1} dn ON dn.s = c.s AND dn.id = e.dst
   GROUP BY c.s, c.id, c.sigma)"""
-        )
     interior = " UNION ALL ".join(
         f"SELECT id, delta FROM d{l}" for l in range(1, depth + 1)
     )
     return (
-        base
-        + "".join(steps)
+        sql
         + f""",
 contrib AS ({interior}),
 nodes AS (SELECT DISTINCT src AS id FROM sym)
@@ -1268,31 +1230,10 @@ FROM nodes n LEFT JOIN contrib u ON n.id = u.id GROUP BY n.id"""
 
 
 def _stress_oracle_sql(depth: int = STRESS_DEPTH) -> str:
-    base = f"""WITH edges AS MATERIALIZED ({EDGES_SQL}),
-sym AS MATERIALIZED (SELECT src, dst FROM edges UNION SELECT dst, src FROM edges),
-srcs AS (SELECT DISTINCT src AS id FROM edges WHERE src <= {BFS_SOURCE_MAX}),
-f0 AS MATERIALIZED (SELECT id AS s, id, CAST(1 AS BIGINT) AS sigma FROM srcs),
-v0 AS MATERIALIZED (SELECT s, id FROM f0)"""
-    steps = []
-    for i in range(1, depth + 1):
-        p = i - 1
-        steps.append(
-            f""",
-f{i} AS MATERIALIZED (
-  SELECT p.s, e.dst AS id, CAST(SUM(p.sigma) AS BIGINT) AS sigma
-  FROM f{p} p JOIN sym e ON p.id = e.src
-  LEFT JOIN v{p} v ON v.s = p.s AND v.id = e.dst
-  WHERE v.id IS NULL
-  GROUP BY p.s, e.dst),
-v{i} AS MATERIALIZED (SELECT s, id FROM v{p} UNION ALL SELECT s, id FROM f{i})"""
-        )
-    steps.append(
-        f""",
+    sql = _frontier_sql(depth, "sigma") + f""",
 g{depth} AS MATERIALIZED (SELECT s, id, CAST(0 AS BIGINT) AS g FROM f{depth})"""
-    )
     for l in range(depth - 1, -1, -1):
-        steps.append(
-            f""",
+        sql += f""",
 g{l} AS MATERIALIZED (
   SELECT c.s, c.id,
          CAST(COALESCE(SUM(1 + gn.g), 0) AS BIGINT) AS g
@@ -1300,15 +1241,13 @@ g{l} AS MATERIALIZED (
   LEFT JOIN sym e ON c.id = e.src
   LEFT JOIN g{l + 1} gn ON gn.s = c.s AND gn.id = e.dst
   GROUP BY c.s, c.id)"""
-        )
     interior = " UNION ALL ".join(
         f"SELECT f{l}.id, f{l}.sigma * g{l}.g AS c "
         f"FROM f{l} JOIN g{l} ON f{l}.s = g{l}.s AND f{l}.id = g{l}.id"
         for l in range(1, depth + 1)
     )
     return (
-        base
-        + "".join(steps)
+        sql
         + f""",
 contrib AS ({interior}),
 nodes AS (SELECT DISTINCT src AS id FROM sym)
@@ -1348,15 +1287,10 @@ QUERIES = {
 }
 
 ORACLES = {
-    "graph_pagerank": _pagerank_oracle_sql(),
-    "graph_pagerank_weighted": _wpagerank_oracle_sql(),
-    "graph_pagerank_topk": (
-        _pagerank_oracle_sql().replace(
-            f"SELECT id, CAST(ROUND(rank * 1e8, 0) AS BIGINT) AS rank_e8 FROM r{PAGERANK_ITERS}",
-            f"SELECT id, CAST(ROUND(rank * 1e8, 0) AS BIGINT) AS rank_e8 FROM r{PAGERANK_ITERS} "
-            "ORDER BY rank_e8 DESC, id ASC LIMIT 20",
-        )
-    ),
+    "graph_pagerank": _corpus_pagerank_sql(EDGES_SQL),
+    "graph_pagerank_weighted": _corpus_pagerank_sql(WEDGES_SQL, weighted=True),
+    "graph_pagerank_topk": _corpus_pagerank_sql(EDGES_SQL)
+    + " ORDER BY rank_e8 DESC, id ASC LIMIT 20",
     "graph_out_degrees": f"WITH edges AS MATERIALIZED ({EDGES_SQL}) "
     "SELECT src AS id, count(*) AS out_degree FROM edges GROUP BY 1",
     "graph_in_degrees": f"WITH edges AS MATERIALIZED ({EDGES_SQL}) "
@@ -1372,7 +1306,10 @@ ORACLES = {
     "SELECT dst AS src, src AS dst FROM edges",
     "graph_connected_components": _cc_oracle_sql(),
     "graph_bfs_hops": _bfs_oracle_sql(),
-    "graph_personalized_pagerank": _ppr_oracle_sql(),
+    "graph_personalized_pagerank": _corpus_pagerank_sql(
+        EDGES_SQL,
+        sources=f"SELECT DISTINCT src AS id FROM edges WHERE src <= {BFS_SOURCE_MAX}",
+    ),
     "graph_common_neighbors": COMMON_NEIGHBORS_SQL,
     "graph_scc": _scc_oracle_sql(),
     "graph_scc_fwbw": _scc_oracle_sql(same_nation=False),
@@ -1406,8 +1343,8 @@ ORACLES["graph_clustering_coeff"] = _clustering_coeff_oracle_sql()
 # --- distance-centrality family over shared labeled BFS levels (round 5) -----
 #
 # harmonic centrality, eccentricity, and mean path length all reduce the
-# SAME (source, node, level) relation — the forward pass of the stress
-# chassis minus path counts (graph/centrality.labeled_bfs_levels). One
+# SAME (source, node, level) relation — the stress chassis' BFS frontier
+# with the level as payload (graph/centrality.labeled_bfs_levels). One
 # BFS run per (application, sf_dir) feeds all three queries (memoized
 # like _RANKS_CACHE; the levels DataFrame is localCheckpoint-backed).
 # Depth bound = BFS_HOPS, sources = custkey ≤ BFS_SOURCE_MAX, exactly
@@ -1420,22 +1357,15 @@ _LEVELS_CACHE: dict[tuple, DataFrame] = {}
 
 
 def _corpus_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from page_rank_mapreduce_java_spark.graph.algorithms import _symmetrize
     from page_rank_mapreduce_java_spark.graph.centrality import (
         labeled_bfs_levels,
     )
 
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _LEVELS_CACHE:
-        edges = derived_edges(spark, sf_dir)
-        sources = (
-            edges.filter(F.col("src") <= BFS_SOURCE_MAX).select("src").distinct()
-        )
+        sym, sources, memo = _bfs_inputs(spark, sf_dir)
         _LEVELS_CACHE[key] = labeled_bfs_levels(
-            _symmetrize(edges),
-            sources,
-            max_depth=BFS_HOPS,
-            cache_key=f"interact:{sf_dir}",
+            sym, sources, max_depth=BFS_HOPS, cache_key=memo
         )
     return _LEVELS_CACHE[key]
 
@@ -1498,42 +1428,6 @@ def q_graph_avg_path_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _levels_base_sql(depth: int = BFS_HOPS) -> str:
-    """Unrolled (s, id, level) first-visit relation — the oracle twin of
-    labeled_bfs_levels; one frontier/visited CTE pair per level."""
-    base = f"""WITH edges AS MATERIALIZED ({EDGES_SQL}),
-sym AS MATERIALIZED (SELECT src, dst FROM edges UNION SELECT dst, src FROM edges),
-srcs AS (SELECT DISTINCT src AS id FROM edges WHERE src <= {BFS_SOURCE_MAX}),
-f0 AS MATERIALIZED (SELECT id AS s, id, CAST(0 AS BIGINT) AS level FROM srcs),
-v0 AS MATERIALIZED (SELECT s, id FROM f0)"""
-    steps = []
-    for i in range(1, depth + 1):
-        p = i - 1
-        steps.append(
-            f""",
-f{i} AS MATERIALIZED (
-  SELECT DISTINCT p.s, e.dst AS id, CAST({i} AS BIGINT) AS level
-  FROM f{p} p JOIN sym e ON p.id = e.src
-  LEFT JOIN v{p} v ON v.s = p.s AND v.id = e.dst
-  WHERE v.id IS NULL),
-v{i} AS MATERIALIZED (SELECT s, id FROM v{p} UNION ALL SELECT s, id FROM f{i})"""
-        )
-    lv = " UNION ALL ".join(f"SELECT * FROM f{i}" for i in range(1, depth + 1))
-    return base + "".join(steps) + f",\nlv AS MATERIALIZED ({lv})"
-
-
-def _harmonic_oracle_sql(depth: int = BFS_HOPS) -> str:
-    return (
-        _levels_base_sql(depth)
-        + f""",
-h AS (SELECT id, CAST(SUM({HARM_SCALE} // level) AS BIGINT) AS harm12
-      FROM lv GROUP BY 1),
-nodes AS (SELECT DISTINCT src AS id FROM sym)
-SELECT n.id, CAST(COALESCE(h.harm12, 0) AS BIGINT) AS harm12
-FROM nodes n LEFT JOIN h ON n.id = h.id"""
-    )
-
-
 def q_graph_closeness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Depth-bounded closeness per sampled source (reached pairs only):
     integer (n_reached, sum_levels) plus closeness in milli =
@@ -1554,44 +1448,34 @@ def q_graph_closeness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _closeness_oracle_sql(depth: int = BFS_HOPS) -> str:
-    return (
-        _levels_base_sql(depth)
-        + """
+QUERIES["graph_harmonic_centrality"] = q_harmonic_centrality
+QUERIES["graph_eccentricity"] = q_graph_eccentricity
+QUERIES["graph_closeness_sampled"] = q_graph_closeness_sampled
+QUERIES["graph_avg_path_length"] = q_graph_avg_path_length
+
+# The oracle twin of labeled_bfs_levels: the level frontiers unioned into
+# the (s, id, level) first-visit relation ``lv``.
+_LEVELS_SQL = _frontier_sql(BFS_HOPS, "level") + ",\nlv AS MATERIALIZED ({})".format(
+    " UNION ALL ".join(f"SELECT * FROM f{i}" for i in range(1, BFS_HOPS + 1))
+)
+ORACLES["graph_harmonic_centrality"] = _LEVELS_SQL + f""",
+h AS (SELECT id, CAST(SUM({HARM_SCALE} // level) AS BIGINT) AS harm12
+      FROM lv GROUP BY 1),
+nodes AS (SELECT DISTINCT src AS id FROM sym)
+SELECT n.id, CAST(COALESCE(h.harm12, 0) AS BIGINT) AS harm12
+FROM nodes n LEFT JOIN h ON n.id = h.id"""
+ORACLES["graph_eccentricity"] = _LEVELS_SQL + """
+SELECT s, CAST(MAX(level) AS BIGINT) AS ecc,
+       CAST(COUNT(*) AS BIGINT) AS n_reached
+FROM lv GROUP BY 1"""
+ORACLES["graph_closeness_sampled"] = _LEVELS_SQL + """
 SELECT s, CAST(COUNT(*) AS BIGINT) AS n_reached,
        CAST(SUM(level) AS BIGINT) AS sum_levels,
        CAST((COUNT(*) * 1000) // SUM(level) AS BIGINT) AS closeness_milli
 FROM lv GROUP BY 1"""
-    )
-
-
-def _eccentricity_oracle_sql(depth: int = BFS_HOPS) -> str:
-    return (
-        _levels_base_sql(depth)
-        + """
-SELECT s, CAST(MAX(level) AS BIGINT) AS ecc,
-       CAST(COUNT(*) AS BIGINT) AS n_reached
-FROM lv GROUP BY 1"""
-    )
-
-
-def _avg_path_oracle_sql(depth: int = BFS_HOPS) -> str:
-    return (
-        _levels_base_sql(depth)
-        + """
+ORACLES["graph_avg_path_length"] = _LEVELS_SQL + """
 SELECT CAST(COUNT(*) AS BIGINT) AS n_pairs,
        CAST(SUM(level) AS BIGINT) AS sum_levels,
        CAST(ROUND(CAST(SUM(level) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) * 1e3, 0)
             AS BIGINT) AS avg_milli
 FROM lv"""
-    )
-
-
-QUERIES["graph_harmonic_centrality"] = q_harmonic_centrality
-QUERIES["graph_eccentricity"] = q_graph_eccentricity
-QUERIES["graph_closeness_sampled"] = q_graph_closeness_sampled
-QUERIES["graph_avg_path_length"] = q_graph_avg_path_length
-ORACLES["graph_harmonic_centrality"] = _harmonic_oracle_sql()
-ORACLES["graph_eccentricity"] = _eccentricity_oracle_sql()
-ORACLES["graph_closeness_sampled"] = _closeness_oracle_sql()
-ORACLES["graph_avg_path_length"] = _avg_path_oracle_sql()

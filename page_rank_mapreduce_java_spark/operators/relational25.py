@@ -32,6 +32,7 @@ from page_rank_mapreduce_java_spark.graph.pagerank import pagerank
 from page_rank_mapreduce_java_spark.graph.queries import (
     COOC_EDGES_SQL,
     cooccurrence_edges,
+    pagerank_chain_sql,
 )
 
 
@@ -153,32 +154,13 @@ _WORD_EDGES_SQL = f"""
 def _textrank_sql(
     iters: int = TEXTRANK_ITERS, damping: float = TEXTRANK_DAMPING
 ) -> str:
-    # The exact _wpagerank_oracle_sql chain (graph/queries.py:498) with
-    # the word-adjacency edges CTE, finished by the vocab join + top-10.
-    base = f"""WITH edges AS MATERIALIZED ({_WORD_EDGES_SQL}),
-nodes AS MATERIALIZED (SELECT src AS id FROM edges UNION SELECT dst FROM edges),
-deg AS MATERIALIZED (SELECT src AS id, SUM(w) AS deg FROM edges GROUP BY 1),
-nn AS (SELECT count(*) AS n FROM nodes),
-r0 AS MATERIALIZED (SELECT id, CAST(1.0 AS DOUBLE)/nn.n AS rank FROM nodes, nn)"""
-    steps = []
-    for i in range(1, iters + 1):
-        p = i - 1
-        steps.append(
-            f""",
-d{i} AS MATERIALIZED (SELECT COALESCE(SUM(r.rank), CAST(0.0 AS DOUBLE)) AS dm
-         FROM r{p} r LEFT JOIN deg d ON r.id = d.id WHERE d.id IS NULL),
-c{i} AS MATERIALIZED (SELECT e.dst AS id, SUM(r.rank * e.w / d.deg) AS contrib
-         FROM r{p} r JOIN edges e ON r.id = e.src JOIN deg d ON d.id = e.src
-         GROUP BY 1),
-r{i} AS MATERIALIZED (SELECT n.id,
-         CAST({1.0 - damping} AS DOUBLE)/nn.n
-         + CAST({damping} AS DOUBLE)
-           * (COALESCE(c.contrib, CAST(0.0 AS DOUBLE)) + d{i}.dm/nn.n) AS rank
-         FROM nodes n CROSS JOIN nn CROSS JOIN d{i} LEFT JOIN c{i} c ON n.id = c.id)"""
-        )
+    # The weighted PageRank oracle chain over the word-adjacency edges,
+    # finished by the vocab join + top-10.
+    chain = pagerank_chain_sql(
+        f"WITH edges AS MATERIALIZED ({_WORD_EDGES_SQL})", iters, damping, weighted=True
+    )
     return (
-        base
-        + "".join(steps)
+        chain
         + f""",
 vocab AS (SELECT DISTINCT word, {md5_long_sql("word")} AS id
           FROM (SELECT unnest({WORDS_SQL}) AS word FROM documents)),

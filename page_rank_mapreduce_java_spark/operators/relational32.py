@@ -25,6 +25,7 @@ from page_rank_mapreduce_java_spark.graph.pagerank import pagerank
 from page_rank_mapreduce_java_spark.graph.queries import (
     COOC_EDGES_SQL,
     cooccurrence_edges,
+    pagerank_chain_sql,
 )
 from page_rank_mapreduce_java_spark.operators.relational25 import (
     KATZ_ITERS,
@@ -160,17 +161,24 @@ def q_graph_centrality_rank_agreement(
         _katz_from_sym,
     )
 
-    # ONE persisted, src-keyed edge relation (graph/keyed.py) feeds both
-    # iterative chains, so the co-occurrence self-join runs once. Both
-    # chains return materialized vectors, so the edges are released at
-    # the block's end.
+    # One persisted, src-keyed edge relation (graph/keyed.py) feeds both
+    # iterative chains, so the co-occurrence self-join runs once. Katz
+    # iterates over it directly; pagerank keys its own weighted copy of
+    # it at the same width, so it skips its sizing count. Both chains
+    # return materialized vectors, so the edges are released at the
+    # block's end.
     e = cooccurrence_edges(spark, sf_dir)
     sym = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    with keyed_edges(sym, memo=f"cooc:{sf_dir}") as (keyed, _):
+    with keyed_edges(sym, memo=f"cooc:{sf_dir}") as (keyed, width):
         pr = (
-            pagerank(keyed, num_iterations=AGREE_PR_ITERS, damping=AGREE_DAMPING)
+            pagerank(
+                keyed,
+                num_iterations=AGREE_PR_ITERS,
+                damping=AGREE_DAMPING,
+                partitions=width,
+            )
             .ranks.withColumn("pr_e8", F.round(F.col("rank") * 1e8).cast("long"))
             .select("id", "pr_e8")
         )
@@ -252,32 +260,16 @@ def q_graph_centrality_rank_agreement(
 def _agreement_sql() -> str:
     # PageRank chain on the SYMMETRIC co-occurrence edges (both
     # directions — matching the Spark side), then Katz, then Spearman.
-    base = f"""WITH pr_e0 AS MATERIALIZED ({COOC_EDGES_SQL}),
-pr_edges AS MATERIALIZED (SELECT src, dst FROM pr_e0 UNION ALL SELECT dst, src FROM pr_e0),
-pr_nodes AS MATERIALIZED (SELECT src AS id FROM pr_edges UNION SELECT dst FROM pr_edges),
-pr_deg AS MATERIALIZED (SELECT src AS id, count(*) AS pr_deg FROM pr_edges GROUP BY 1),
-pr_nn AS (SELECT count(*) AS n FROM pr_nodes),
-pr_r0 AS MATERIALIZED (SELECT id, CAST(1.0 AS DOUBLE)/pr_nn.n AS rank FROM pr_nodes, pr_nn)"""
-    steps = []
-    for i in range(1, AGREE_PR_ITERS + 1):
-        p = i - 1
-        steps.append(
-            f""",
-pr_d{i} AS MATERIALIZED (SELECT COALESCE(SUM(r.rank), CAST(0.0 AS DOUBLE)) AS dm
-         FROM pr_r{p} r LEFT JOIN pr_deg d ON r.id = d.id WHERE d.id IS NULL),
-pr_c{i} AS MATERIALIZED (SELECT e.dst AS id, SUM(r.rank / d.pr_deg) AS contrib
-         FROM pr_r{p} r JOIN pr_edges e ON r.id = e.src JOIN pr_deg d ON d.id = e.src
-         GROUP BY 1),
-pr_r{i} AS MATERIALIZED (SELECT n.id,
-         CAST({1.0 - AGREE_DAMPING} AS DOUBLE)/pr_nn.n
-         + CAST({AGREE_DAMPING} AS DOUBLE)
-           * (COALESCE(c.contrib, CAST(0.0 AS DOUBLE)) + pr_d{i}.dm/pr_nn.n) AS rank
-         FROM pr_nodes n CROSS JOIN pr_nn CROSS JOIN pr_d{i} LEFT JOIN pr_c{i} c ON n.id = c.id)"""
-        )
+    chain = pagerank_chain_sql(
+        f"""WITH pr_e0 AS MATERIALIZED ({COOC_EDGES_SQL}),
+pr_edges AS MATERIALIZED (SELECT src, dst FROM pr_e0 UNION ALL SELECT dst, src FROM pr_e0)""",
+        AGREE_PR_ITERS,
+        AGREE_DAMPING,
+        prefix="pr_",
+    )
     katz = _katz_sql(KATZ_ITERS)
     return (
-        base
-        + "".join(steps)
+        chain
         + f""",
 pr AS (SELECT id, CAST(ROUND(rank * 1e8, 0) AS BIGINT) AS pr_e8
        FROM pr_r{AGREE_PR_ITERS}),

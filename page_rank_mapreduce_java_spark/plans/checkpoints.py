@@ -33,16 +33,18 @@ def cut_lineage(df: DataFrame, reliable: bool = False) -> DataFrame:
 
 
 def observed_cut(
-    df: DataFrame, metric: Column, drop: str, reliable: bool = False
+    df: DataFrame, metric: Column, drop: str | None = None, reliable: bool = False
 ) -> tuple[DataFrame, Any]:
-    """Cut ``df`` without its ``drop`` column and return the cut state with
-    the value of the aggregate ``metric`` over ``df``'s rows. The value is
-    read through ``DataFrame.observe`` on the checkpoint's own job, so it
-    costs no Spark job; each cut gets a fresh ``Observation``, which can be
-    read only once."""
+    """Cut ``df`` (without its ``drop`` column, if given) and return the cut
+    state with the value of the aggregate ``metric`` over ``df``'s rows.
+    The value is read through ``DataFrame.observe`` on the checkpoint's own
+    job, so it costs no Spark job; each cut gets a fresh ``Observation``,
+    which can be read only once."""
     obs = Observation()
-    state = cut_lineage(df.observe(obs, metric.alias("m")).drop(drop), reliable)
-    return state, obs.get["m"]
+    observed = df.observe(obs, metric.alias("m"))
+    if drop is not None:
+        observed = observed.drop(drop)
+    return cut_lineage(observed, reliable), obs.get["m"]
 
 
 def iterate(

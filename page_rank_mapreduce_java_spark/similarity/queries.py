@@ -173,7 +173,9 @@ def _embeddings_fingerprint(sf_dir: str) -> str:
 def _serve_index_dir(spark: SparkSession, sf_dir: str, kind: str, build) -> str:
     """Resolve (building at most once, atomically) the on-disk serving
     index for ``sf_dir``. The tag covers params + the quantizer SOURCE
-    (an edited trainer must rebuild) + the embeddings DATA fingerprint
+    of ``pq.py`` and ``ann.py`` (the index holds codebooks and codes
+    from the one, IVF centroids and cells from the other, so an edit to
+    either must rebuild) + the embeddings DATA fingerprint
     (a regenerated corpus must rebuild). The build writes into a
     process-private temp dir that is renamed into place only when
     complete, so concurrent sessions can race the build without a reader
@@ -185,10 +187,11 @@ def _serve_index_dir(spark: SparkSession, sf_dir: str, kind: str, build) -> str:
     import shutil
     import uuid
 
-    from page_rank_mapreduce_java_spark.similarity import pq as pqmod
+    from page_rank_mapreduce_java_spark.similarity import ann, pq
     from page_rank_mapreduce_java_spark.similarity.pq import PQ_K, PQ_M
 
-    code_v = hashlib.md5(inspect.getsource(pqmod).encode()).hexdigest()[:8]
+    code = inspect.getsource(pq) + inspect.getsource(ann)
+    code_v = hashlib.md5(code.encode()).hexdigest()[:8]
     data_v = _embeddings_fingerprint(sf_dir)
     tag = hashlib.md5(
         f"{os.path.abspath(sf_dir)}|{kind}|{PQ_DIM}|{PQ_M}|{PQ_K}"

@@ -205,6 +205,21 @@ def test_scc_random_graphs_match_kosaraju(spark):
         assert got == want, (sorted(got.items())[:10], sorted(want.items())[:10])
 
 
+def test_scc_self_loops_only(spark):
+    """Self-loops are dropped before the loop, so every node is trimmed
+    in the first outer round: the trim cut observes zero nodes left and
+    the outer loop exits on that count."""
+    pairs = [(i, i) for i in (3, 1, 7, 20)]
+    got = _scc_spark(spark, pairs)
+    assert got == _kosaraju(pairs) == {1: 1, 3: 3, 7: 7, 20: 20}
+
+
+def test_scc_empty_edge_set(spark):
+    """No edges: the node cut observes zero rows, no round runs, and the
+    result is empty, as in the reference."""
+    assert _scc_spark(spark, []) == _kosaraju([]) == {}
+
+
 def test_scc_agrees_with_doubling_closure_query(spark, sf_dir):
     """The engine operator and q_scc's oracle-checkable doubling closure
     must produce the identical labeling on the corpus graph."""

@@ -156,6 +156,40 @@ def test_serve_index_tag_tracks_data_fingerprint(tmp_path):
     assert before != _embeddings_fingerprint("/root/testdata/sf0.001")
 
 
+def test_serve_index_tag_tracks_ann_source(tmp_path, monkeypatch):
+    """The IVF-PQ serving index stores centroids (``ann.kmeans_train``)
+    and cells (``ann.ivf_assign``), so an edit to ann.py must resolve to
+    a different index directory, not keep serving the old index."""
+    import inspect
+    import os
+    import shutil
+
+    from page_rank_mapreduce_java_spark.similarity import ann
+    from page_rank_mapreduce_java_spark.similarity.queries import _serve_index_dir
+
+    def build(tmp: str) -> None:
+        os.makedirs(tmp)
+
+    # a private sf_dir, so no tag here names a real index
+    sf_dir = str(tmp_path)
+    dirs = [_serve_index_dir(None, sf_dir, "ivfpq", build)]
+    try:
+        dirs.append(_serve_index_dir(None, sf_dir, "ivfpq", build))
+        getsource = inspect.getsource
+        monkeypatch.setattr(
+            inspect,
+            "getsource",
+            lambda obj: getsource(obj) + ("# edited\n" if obj is ann else ""),
+        )
+        dirs.append(_serve_index_dir(None, sf_dir, "ivfpq", build))
+        assert dirs[0] == dirs[1]
+        assert dirs[2] != dirs[0]
+        assert os.path.exists(os.path.join(dirs[2], "_BUILT"))
+    finally:
+        for d in set(dirs):
+            shutil.rmtree(d, ignore_errors=True)
+
+
 def test_ivfpq_subset_consistency(spark, corpus, codebook):
     """The registered IVF-PQ query's rows must be a per-query subset of
     the FULL ADC ranking: every returned neighbor's adc_micro equals the
