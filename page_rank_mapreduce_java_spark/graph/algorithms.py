@@ -82,37 +82,39 @@ def hits(
     one hub row per node with out-edges, one auth row per node with
     in-edges (a node can be both on general graphs).
 
-    Same chassis as pagerank.py: the edge relation shuffles once and is
-    persisted; every half-step moves only a score vector, the L1 scale is
-    a broadcast 1-row aggregate inside the same job, and lineage is cut
-    once per iteration."""
+    Same chassis as pagerank.py: the edge relation is persisted and every
+    half-step moves only a score vector. A half-step cuts the unscaled
+    sums and observes their total (``observed_cut``); the next half-step,
+    or the output, divides by it as a literal, so the L1 scale costs no
+    Spark job. ``iterations`` must be at least 1.
+    """
+    if iterations < 1:
+        raise ValueError(f"hits needs iterations >= 1, got {iterations}")
     ed = edges.select(
         F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst")
     ).persist()
-    hubs = ed.select(F.col("src").alias("id")).distinct()
-    hub = cut_lineage(hubs.select("id", F.lit(1.0).alias("h")))
-    auth = None
-    for _ in range(iterations):
-        ar = (
-            hub.join(ed, hub.id == ed.src)
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("h").alias("s"))
+
+    def half_step(scores: DataFrame, total: float, key: str, out: str):
+        return observed_cut(
+            scores.join(ed, scores.id == ed[key])
+            .groupBy(F.col(out).alias("id"))
+            .agg(F.sum(F.col("s") / total).alias("s")),
+            F.sum("s"),
         )
-        at = ar.agg(F.sum("s").alias("t"))
-        auth = cut_lineage(ar.join(F.broadcast(at)).select("id", (F.col("s") / F.col("t")).alias("a")))
-        hr = (
-            auth.join(ed, auth.id == ed.dst)
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.sum("a").alias("s"))
+
+    try:
+        hub = ed.select(F.col("src").alias("id")).distinct().withColumn("s", F.lit(1.0))
+        hub_total = 1.0
+        for _ in range(iterations):
+            auth, auth_total = half_step(hub, hub_total, "src", "dst")
+            hub, hub_total = half_step(auth, auth_total, "dst", "src")
+        hub_out, auth_out = (
+            scores.select("id", F.lit(kind).alias("kind"), (F.col("s") / t).alias("score"))
+            for scores, t, kind in ((hub, hub_total, "hub"), (auth, auth_total, "auth"))
         )
-        ht = hr.agg(F.sum("s").alias("t"))
-        hub = cut_lineage(hr.join(F.broadcast(ht)).select("id", (F.col("s") / F.col("t")).alias("h")))
-    out = hub.select("id", F.lit("hub").alias("kind"), F.col("h").alias("score")).unionByName(
-        auth.select("id", F.lit("auth").alias("kind"), F.col("a").alias("score"))
-    )
-    out = cut_lineage(out)
-    ed.unpersist()
-    return out
+        return cut_lineage(hub_out.unionByName(auth_out))
+    finally:
+        ed.unpersist()
 
 
 def bfs_distances(
@@ -157,13 +159,7 @@ def sssp_weighted(
             .distinct()
             .repartition(partitions, "id")
         )
-        src_ids = (
-            sources.select(F.col(sources.columns[0]).alias("id"))
-            .distinct()
-            .join(nodes, "id", "left_semi")
-        )
-        if src_ids.first() is None:
-            raise ValueError("source set has no ids present in the graph")
+        src_ids = sources.select(F.col(sources.columns[0]).alias("id")).distinct()
 
         def step(dist: DataFrame) -> DataFrame:
             reached = dist.filter(F.col("dist") >= 0)
@@ -181,11 +177,15 @@ def sssp_weighted(
                 "id", new.alias("dist"), (new != F.col("dist")).alias("_moved")
             )
 
-        dist = cut_lineage(
+        # The seed cut observes how many sources are in the graph.
+        dist, n_sources = observed_cut(
             nodes.join(src_ids.withColumn("d0", F.lit(0)), "id", "left").select(
                 "id", F.coalesce("d0", F.lit(-1)).cast("long").alias("dist")
-            )
+            ),
+            F.sum((F.col("dist") == 0).cast("long")),
         )
+        if not n_sources:
+            raise ValueError("source set has no ids present in the graph")
         dist = iterate(dist, step, rounds)
     return dist
 

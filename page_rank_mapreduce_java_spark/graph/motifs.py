@@ -20,19 +20,21 @@ re-expressed relationally):
 - a triangle is a wedge (u→v, u→w) whose closing pair (v,w) exists in
   the canonical src<dst edge set: one equi-join, counted exactly once.
 
-k-core: synchronous peeling — each round drops every node whose degree
-within the surviving subgraph is < k. Deterministic for a fixed round
-count, so the oracle unrolls the same rounds as a CTE chain; rounds are
-degree-vector-sized joins against the persisted edge relation (the
-PageRank superstep cost shape).
+k-core and k-truss: synchronous peeling — each round drops every node
+(edge) whose degree (triangle support) within the surviving subgraph is
+too low. Deterministic for a fixed round count, so the oracle unrolls
+the same rounds as a CTE chain. Each round's cut observes the vector's
+minimum, and the loop exits at the fixpoint without a probe job.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from page_rank_mapreduce_java_spark.plans.checkpoints import cut_lineage
+from page_rank_mapreduce_java_spark.plans.checkpoints import cut_lineage, observed_cut
 
 
 def _undirect(edges: DataFrame) -> DataFrame:
@@ -83,51 +85,56 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     )
 
 
-def kcore(
-    edges: DataFrame, k: int = 3, rounds: int = 8, stop_early: bool = True
-) -> DataFrame:
-    """Synchronous k-core peeling with a fixpoint early exit.
+def _peel(
+    und: DataFrame, active: DataFrame, k: int, rounds: int
+) -> tuple[DataFrame, int | None]:
+    """Up to ``rounds`` synchronous peels of the undirected edges ``und``
+    from the survivor ids ``active``: each round drops every node whose
+    degree inside the surviving subgraph is < k.
+
+    Returns the last cut degree vector DataFrame[id long, core_degree
+    long] and its minimum ``low``, observed on the cut's own job. The
+    loop stops once ``low`` is NULL or ``>= k``: the round removed no
+    node, so every later round is the identity and the oracle's full
+    unroll lands on the same vector. A node isolated inside the
+    survivors drops by absence from the vector; no other degree changes.
+    """
+    degrees, low = None, None
+    for _ in range(rounds):
+        alive = und.join(active.select(F.col("id").alias("src")), "src").join(
+            active.select(F.col("id").alias("dst")), "dst"
+        )
+        degrees, low = observed_cut(
+            alive.groupBy(F.col("src").alias("id")).agg(
+                F.count(F.lit(1)).alias("core_degree")
+            ),
+            F.min("core_degree"),
+        )
+        active = degrees.filter(F.col("core_degree") >= k).select("id")
+        if low is None or low >= k:
+            break
+    return degrees, low
+
+
+def kcore(edges: DataFrame, k: int = 3, rounds: int = 8) -> DataFrame:
+    """Synchronous k-core peeling (``_peel``), exiting at the fixpoint.
 
     Returns DataFrame[id long, core_degree long]: nodes surviving
     ``rounds`` peels with their degree inside the surviving subgraph.
-    ``stop_early`` exits once a round removes no node: a stable core is a
-    fixpoint, so every later round is the identity and the DuckDB oracle
-    can still unroll the full ``rounds`` budget and compute identical
-    output. The check is one ``first()`` probe on the (node-sized,
-    already-computed) degree vector — the same pattern measured 2× on the
-    dedup_clusters component step. Peeling depth on the co-occurrence
-    corpus graph is 1–2 rounds, so the default 8-round budget was mostly
-    identity passes.
+    Peeling depth on the co-occurrence corpus graph is 1–2 rounds, so
+    most of the default 8-round budget is never run.
     """
     edges = edges.select(
         F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst")
     )
     und = _undirect(edges).persist()
-    active = cut_lineage(und.select(F.col("src").alias("id")).distinct())
-    degrees = None
-    for _ in range(rounds):
-        alive = und.join(active.select(F.col("id").alias("src")), "src").join(
-            active.select(F.col("id").alias("dst")), "dst"
-        )
-        # One materialization per round: checkpoint the degree vector and
-        # let the survivor set be a lazy filter over the checkpointed
-        # blocks — both the fixpoint probe and the next round's joins then
-        # reread blocks instead of recomputing the superstep.
-        degrees = cut_lineage(
-            alive.groupBy(F.col("src").alias("id")).agg(
-                F.count(F.lit(1)).alias("core_degree")
-            )
-        )
-        active = degrees.filter(F.col("core_degree") >= k).select("id")
-        if stop_early and degrees.filter(F.col("core_degree") < k).first() is None:
-            break
-    out = degrees.join(active, "id").select(
-        "id", F.col("core_degree").cast("long").alias("core_degree")
-    )
-    # Materialize before releasing the edge cache the plan reads.
-    out = cut_lineage(out)
-    und.unpersist()
-    return out
+    try:
+        active = cut_lineage(und.select(F.col("src").alias("id")).distinct())
+        degrees, _ = _peel(und, active, k, rounds)
+        # A filter over the cut vector: reads none of the edge cache.
+        return degrees.filter(F.col("core_degree") >= k)
+    finally:
+        und.unpersist()
 
 
 def _edge_support(edges: DataFrame) -> DataFrame:
@@ -171,35 +178,31 @@ def _edge_support(edges: DataFrame) -> DataFrame:
     )
 
 
-def ktruss(
-    edges: DataFrame, k: int = 4, rounds: int = 4, stop_early: bool = True
-) -> DataFrame:
+def ktruss(edges: DataFrame, k: int = 4, rounds: int = 4) -> DataFrame:
     """k-truss edge peeling (Cohen, "Trusses: Cohesive Subgraphs for
     Social Network Analysis", NSA technical report 2008 — public
     literature): repeatedly drop edges in fewer than k-2 triangles of the
     surviving subgraph. Returns DataFrame[src, dst, support] — the truss
     edges with their within-truss support after ``rounds`` peels.
 
-    Same chassis as kcore: one materialized support vector per round, a
-    lazy filter for the survivor set, a ``first()`` fixpoint probe for
-    ``stop_early`` (oracle-safe — a stable truss is unchanged by extra
-    rounds; the DuckDB oracle unrolls the full budget). Each round costs
-    one degree-oriented wedge join — the m^{3/2}-bounded triangle pass —
-    against the current (shrinking) edge set.
+    Each round checkpoints the support vector and observes its minimum
+    on the checkpoint's job; the loop stops once that minimum is NULL or
+    ``>= k-2`` (a stable truss, unchanged by the oracle's further
+    rounds). Each round costs one degree-oriented wedge join — the
+    m^{3/2}-bounded triangle pass — against the current (shrinking) edge
+    set.
     """
-    from page_rank_mapreduce_java_spark.plans.checkpoints import cut_lineage
-
     edges = edges.select(
         F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst")
     )
     cur = cut_lineage(edges.distinct())
     sup = None
     for _ in range(rounds):
-        sup = cut_lineage(_edge_support(cur))
+        sup, low = observed_cut(_edge_support(cur), F.min("support"))
         cur = sup.filter(F.col("support") >= k - 2).select("src", "dst")
-        if stop_early and sup.filter(F.col("support") < k - 2).first() is None:
+        if low is None or low >= k - 2:
             break
-    return sup.filter(F.col("support") >= k - 2).select("src", "dst", "support")
+    return sup.filter(F.col("support") >= k - 2)
 
 
 # --- DuckDB oracle builders ---------------------------------------------------
@@ -316,94 +319,49 @@ def kcore_sql(edges_cte: str, k: int = 3, rounds: int = 8) -> str:
     )
 
 
-def kcore_curve(
-    edges: DataFrame, max_k: int = 6, rounds: int = 8, stop_early: bool = True
-) -> DataFrame:
+def kcore_curve(edges: DataFrame, max_k: int = 6, rounds: int = 8) -> DataFrame:
     """The full k-core decomposition curve in ONE chained peel.
 
     Returns DataFrame[k long, core_size long, core_degree_sum long] for
     k = 1..max_k, where core_degree_sum = 2·|E(k-core)|.
 
     The k-core is a subgraph of the (k-1)-core and peeling is confluent,
-    so instead of max_k independent fixpoints from the full graph (the
-    round-8 shape: 6 × warm-up + 6 × full-graph first rounds), the peel
-    CONTINUES: k's peel starts from the (k-1)-core's survivor set, the
-    per-k snapshot is read off the fixpoint degree vector, and every
-    round after k=1 runs on a shrinking subgraph. One undirected-edge
-    persist serves the whole curve. Per-k cost past k=1 is a couple of
-    node-sized degree aggregates over the already-small previous core —
-    the plan you'd want at 100×.
+    so the peel CONTINUES: k's ``_peel`` starts from the (k-1)-core's
+    survivors, and k's snapshot reads the last degree vector. One edge
+    persist serves the whole curve. The oracle (kcore_curve_sql) unrolls
+    the full per-k budget and lands on the same vectors, since a peel
+    that stops early stopped at a fixpoint.
 
-    ``stop_early`` (fixpoint probe, one ``first()`` on the materialized
-    degree vector) is oracle-safe by the graph_kcore contract: a stable
-    core is a fixpoint, so the DuckDB oracle (kcore_curve_sql) unrolls
-    the full per-k ``rounds`` budget and lands on identical output —
-    including the not-yet-converged case, where BOTH sides run the same
-    ``rounds`` chain. A node isolated inside the survivor subgraph drops
-    via absence from the degree vector without tripping the probe; its
-    removal changes no other node's degree, so the fixpoint read-off is
-    still exact (same semantics as ``kcore``, r2-certified).
-
-    Plateau skip (round 11): when k-1's peel CONVERGED and the fixpoint
-    degree vector has no node below k, the k-core equals the
-    (k-1)-core — recomputing degrees over the unchanged survivor set
-    would reproduce the identical vector (confluence), so the entire
-    recompute round is skipped and k's snapshot reads the existing
-    checkpointed vector. On plateaued stretches of the curve (min core
-    degree ≥ several k at once — the common shape for dense
-    co-occurrence graphs) this removes whole edge-sized join rounds:
-    one probe (node-sized checkpoint scan) instead of an |E|-scan +
-    degree shuffle + checkpoint per plateaued k. Only taken when the
-    previous k converged (a rounds-exhausted vector is NOT a fixpoint
-    and must keep peeling exactly like the oracle's unroll).
+    Plateau skip: when the last observed minimum degree is already
+    ``>= k``, that vector is a fixpoint with no node below k, so it is
+    also k's vector and no round runs. A vector left by an exhausted
+    budget has a minimum below the previous k, so it never skips.
     """
     edges = edges.select(
         F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst")
     )
     und = _undirect(edges).persist()
-    active = cut_lineage(und.select(F.col("src").alias("id")).distinct())
-    out = None
-    degrees = None
-    converged = False
-    for k in range(1, max_k + 1):
-        if (
-            stop_early
-            and converged
-            and degrees is not None
-            and degrees.filter(F.col("core_degree") < k).first() is None
-        ):
-            pass  # plateau: k-core == (k-1)-core; reuse the fixpoint vector
-        else:
-            converged = False
-            for _ in range(rounds):
-                alive = und.join(
-                    active.select(F.col("id").alias("src")), "src"
-                ).join(active.select(F.col("id").alias("dst")), "dst")
-                degrees = cut_lineage(
-                    alive.groupBy(F.col("src").alias("id")).agg(
-                        F.count(F.lit(1)).alias("core_degree")
-                    )
-                )
+    try:
+        active = cut_lineage(und.select(F.col("src").alias("id")).distinct())
+        low = 0  # no vector yet: k=1 always peels
+        rows = []
+        for k in range(1, max_k + 1):
+            if low is not None and low < k:
+                degrees, low = _peel(und, active, k, rounds)
                 active = degrees.filter(F.col("core_degree") >= k).select("id")
-                if (
-                    stop_early
-                    and degrees.filter(F.col("core_degree") < k).first()
-                    is None
-                ):
-                    converged = True
-                    break
-        row = degrees.filter(F.col("core_degree") >= k).agg(
-            F.lit(k).cast("long").alias("k"),
-            F.count(F.lit(1)).cast("long").alias("core_size"),
-            F.coalesce(F.sum("core_degree"), F.lit(0))
-            .cast("long")
-            .alias("core_degree_sum"),
-        )
-        out = row if out is None else out.unionByName(row)
-    # Materialize the 6-row curve before releasing the edge cache it reads.
-    out = cut_lineage(out)
-    und.unpersist()
-    return out
+            rows.append(
+                degrees.filter(F.col("core_degree") >= k).agg(
+                    F.lit(k).cast("long").alias("k"),
+                    F.count(F.lit(1)).cast("long").alias("core_size"),
+                    F.coalesce(F.sum("core_degree"), F.lit(0))
+                    .cast("long")
+                    .alias("core_degree_sum"),
+                )
+            )
+        # Materialize the curve before releasing the edge cache it reads.
+        return cut_lineage(reduce(DataFrame.unionByName, rows))
+    finally:
+        und.unpersist()
 
 
 def kcore_curve_sql(edges_cte: str, max_k: int = 6, rounds: int = 8) -> str:

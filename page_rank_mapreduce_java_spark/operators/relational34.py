@@ -8,9 +8,9 @@ Registered after the round-8 audit window filled; enters the round-9
 window with this fused plan.
 
 Exactness: pure integer counting over the chained peeling fixpoints
-(the graph_kcore contract — stop_early exits at the fixpoint the
-unrolled oracle also lands on; both sides share the per-k rounds
-budget, so even a non-converged k is bit-identical)."""
+(the graph_kcore contract — a peel exits at the fixpoint the unrolled
+oracle also lands on; both sides share the per-k rounds budget, so even
+a non-converged k is bit-identical)."""
 
 from __future__ import annotations
 
@@ -35,14 +35,8 @@ def q_graph_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     dense nucleus shears off). Output per k:
     (k, core_size, core_degree_sum) — core_degree_sum = 2·|E(core)|.
 
-    Scale shape (round-9 fused plan): the k-core nests inside the
-    (k-1)-core and peeling is confluent, so ONE chained peel computes
-    the whole curve — k's rounds continue from the (k-1)-core's
-    survivor set, each k's snapshot is a 1-row aggregate off the
-    fixpoint degree vector, and a single persisted undirected edge
-    relation serves all six thresholds. Replaces six independent
-    full-graph fixpoints (6 × warm-up + 6 × full-graph first rounds);
-    past k=1, every round runs on the already-peeled shrinking core.
+    Scale shape: ONE chained peel computes the whole curve
+    (graph/motifs.kcore_curve).
     """
     edges = cooccurrence_edges(spark, sf_dir)
     return kcore_curve(edges, max_k=KCORE_CURVE_MAX_K, rounds=KCORE_CURVE_ROUNDS)

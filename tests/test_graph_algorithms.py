@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from page_rank_mapreduce_java_spark.graph.algorithms import (
@@ -91,6 +92,41 @@ def test_sssp_prefers_cheaper_longer_path(spark):
     sources = spark.createDataFrame([(0,)], "src LONG")
     got = {(r.id, r.dist) for r in sssp_weighted(edges, sources, rounds=4).collect()}
     assert (3, 3) in got and (2, 2) in got and (1, 1) in got and (0, 0) in got
+
+
+def test_sssp_rejects_sources_outside_graph(spark):
+    from page_rank_mapreduce_java_spark.graph.algorithms import sssp_weighted
+
+    edges = spark.createDataFrame([(0, 1, 1), (1, 2, 1)], "src LONG, dst LONG, w LONG")
+    sources = spark.createDataFrame([(7,), (8,)], "src LONG")
+    with pytest.raises(ValueError, match="no ids present"):
+        sssp_weighted(edges, sources, rounds=2)
+
+
+def test_hits_three_node_graph(spark):
+    # 1->2, 1->3, 2->3. Iteration 1: auth sums (1, 2) -> (1/3, 2/3), hub
+    # sums (1, 2/3) -> (3/5, 2/5). Iteration 2: auth sums (3/5, 1) ->
+    # (3/8, 5/8), hub sums (1, 5/8) -> (8/13, 5/13).
+    from page_rank_mapreduce_java_spark.graph.algorithms import hits
+
+    got = {
+        (r.kind, r.id): r.score
+        for r in hits(_edges(spark, [(1, 2), (1, 3), (2, 3)]), iterations=2).collect()
+    }
+    want = {
+        ("hub", 1): 8 / 13,
+        ("hub", 2): 5 / 13,
+        ("auth", 2): 3 / 8,
+        ("auth", 3): 5 / 8,
+    }
+    assert got == pytest.approx(want, rel=1e-12)
+
+
+def test_hits_rejects_zero_iterations(spark):
+    from page_rank_mapreduce_java_spark.graph.algorithms import hits
+
+    with pytest.raises(ValueError, match="iterations"):
+        hits(_edges(spark, [(1, 2)]), iterations=0)
 
 
 # --- FW-BW/coloring SCC vs a pure-Python Kosaraju reference ---------------

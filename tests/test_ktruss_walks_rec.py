@@ -21,11 +21,14 @@ def test_ktruss_keeps_clique_drops_pendant(spark):
     assert all(s == 2 for s in out.values())
 
 
-def test_ktruss_early_exit_matches_full_budget(spark):
+def test_ktruss_fixpoint_exit_matches_unrolled_peel(spark):
+    # The loop exits at the fixpoint its support cut observes; the
+    # reference runs every one of the 6 rounds.
+    from tests.test_properties_r5 import _python_ktruss
+
     edges = [(1, 2), (1, 3), (2, 3), (3, 4), (4, 5), (1, 4), (2, 4)]
-    fast = sorted(map(tuple, ktruss(_edges(spark, edges), k=3, rounds=6, stop_early=True).collect()))
-    slow = sorted(map(tuple, ktruss(_edges(spark, edges), k=3, rounds=6, stop_early=False).collect()))
-    assert fast == slow
+    got = {(r.src, r.dst): r.support for r in ktruss(_edges(spark, edges), k=3, rounds=6).collect()}
+    assert got == _python_ktruss(edges, k=3, rounds=6)
 
 
 def test_hash_walks_deterministic_and_edge_respecting(spark, sf_dir):

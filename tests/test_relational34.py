@@ -81,6 +81,49 @@ def test_kcore_curve_known_graph_oracle():
     assert rows == _KNOWN_CURVE
 
 
+# The same graph with a 1-round budget per k: k=2's round leaves node 8's
+# degree 1 behind (budget exhausted, minimum 1 < 2), so k=3 must peel
+# again from {1..7}; node 5 then still counts its edge to 6 (degsum 21),
+# and k=4 reaches the clique.
+_KNOWN_CURVE_ONE_ROUND = [
+    (1, 8, 26),
+    (2, 7, 25),
+    (3, 5, 21),
+    (4, 5, 20),
+    (5, 0, 0),
+    (6, 0, 0),
+]
+
+
+def _random_edges(seed, n=14, p=0.28):
+    import random
+
+    rng = random.Random(seed)
+    return [
+        (a, b) for a in range(1, n) for b in range(a + 1, n + 1) if rng.random() < p
+    ]
+
+
+def test_kcore_curve_exhausted_budget_matches_oracle(spark):
+    """With a 1-round budget most peels stop with nodes below k, so the
+    plateau skip must not reuse their vectors; the curve must equal the
+    DuckDB oracle's unrolled chain (the seeded graphs also catch a skip
+    taken one k early)."""
+    import duckdb
+
+    from page_rank_mapreduce_java_spark.graph.motifs import kcore_curve, kcore_curve_sql
+
+    for edges, max_k in ((_KNOWN_EDGES, 6), (_random_edges(7), 4), (_random_edges(23), 4)):
+        vals = ", ".join(f"({a}, {b})" for a, b in edges)
+        cte = f"SELECT * FROM (VALUES {vals}) AS t(src, dst)"
+        want = sorted(duckdb.sql(kcore_curve_sql(cte, max_k=max_k, rounds=1)).fetchall())
+        if edges is _KNOWN_EDGES:
+            assert want == _KNOWN_CURVE_ONE_ROUND
+        df = spark.createDataFrame(edges, "src long, dst long")
+        got = sorted(tuple(r) for r in kcore_curve(df, max_k=max_k, rounds=1).collect())
+        assert got == want, (edges, got, want)
+
+
 def test_kcore_curve_equals_per_k_peels_on_random_graphs(spark):
     """Chassis equivalence: the fused chained peel must produce, at
     every k, exactly the (core_size, core_degree_sum) that the
@@ -88,20 +131,10 @@ def test_kcore_curve_equals_per_k_peels_on_random_graphs(spark):
     the confluence property the round-9 rewrite rests on. Seeded random
     graphs so the check covers shapes the corpus graph doesn't
     (multi-component, self-contained tails, dense pockets)."""
-    import random
-
     from page_rank_mapreduce_java_spark.graph.motifs import kcore, kcore_curve
 
     for seed in (7, 23):
-        rng = random.Random(seed)
-        n = 14
-        edges = [
-            (a, b)
-            for a in range(1, n)
-            for b in range(a + 1, n + 1)
-            if rng.random() < 0.28
-        ]
-        df = spark.createDataFrame(edges, "src long, dst long")
+        df = spark.createDataFrame(_random_edges(seed), "src long, dst long")
         got = {
             r.k: (r.core_size, r.core_degree_sum)
             for r in kcore_curve(df, max_k=4, rounds=8).collect()
