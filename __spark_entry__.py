@@ -1,32 +1,36 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` runs the flagship iterative PageRank on the sf0.001 corpus.
-``queries()`` / ``oracle_sql()`` aggregate the per-module query registries;
-every relational/graph/extension operator is registered with a DuckDB
-oracle (queries without one get the driver's weaker rows-only check and are
-flagged in the module docstrings).
+``queries()`` / ``oracle_sql()`` serve the engine's one registry
+(``cli.full_registry``): a module registers by defining module-level
+``QUERIES``/``ORACLES`` dicts anywhere under the package. Every query has
+a DuckDB oracle except ``agg_approx_distinct``, which gets the driver's
+weaker rows-only check.
 
 Audit ordering: the driver's per-round correctness gate checks the FIRST
-50 registry entries, so iteration order decides what earns driver-side
-evidence. Order is derived mechanically from ``query_evidence.json``
-(written by tools/update_query_evidence.py after each driver round):
+``AUDIT_WINDOW`` (50) registry entries, so iteration order decides what
+earns driver-side evidence. ``audit_group`` derives each query's group
+from ``query_evidence.json`` (written by tools/update_query_evidence.py
+after each driver round):
 
-  group 0 — recorded never-driver-checked (in the ledger with "never");
-  group 1 — last driver check FAILED, or the query's (function source +
-            oracle SQL) hash changed since the recorded green — a changed
-            query must re-earn its green (the r2 stale-green incident:
-            two queries rewritten in r2 kept coasting on r1 greens);
-  group 2 — brand-new (absent from the ledger entirely): queries added
-            mid-round queue BEHIND the recorded backlog so they cannot
-            evict a failed/stale recertification from an exactly-full
-            window; they earn driver evidence next round;
-  group 3 — green and unchanged;
-  tail    — agg_approx_distinct (oracle-less by design; HLL estimates are
-            engine-specific) never occupies an audit slot.
+  0 never-checked — in the ledger with "never";
+  1 fail/stale    — last driver check FAILED, or the query's (function
+                    source + oracle SQL) hash changed since the recorded
+                    green: a changed query must re-earn its green (the r2
+                    stale-green incident: two queries rewritten in r2
+                    kept coasting on r1 greens);
+  2 new           — absent from the ledger: queries added mid-round queue
+                    BEHIND the recorded backlog so they cannot evict a
+                    failed/stale recertification from an exactly-full
+                    window; they earn driver evidence next round;
+  3 green         — green and unchanged;
+  4 deferred      — ``_DEFER_TO_NEXT_ROUND``;
+  5 rows-only     — agg_approx_distinct (oracle-less by design; HLL
+                    estimates are engine-specific) never occupies a slot.
 
 Within each group, module registration order is kept (deterministic).
-If the evidence file is missing, every query counts as never-checked —
-strictly safe, just wasteful.
+If the evidence file is missing, every query counts as new — strictly
+safe, just wasteful.
 """
 
 from __future__ import annotations
@@ -130,23 +134,6 @@ def query_hash(fn: Callable, oracle: str | None) -> str:
     return hashlib.sha256(payload.encode()).hexdigest()[:16]
 
 
-# NOTE on round numbering: the repo's internal round log (PERF.md)
-# counts two working rounds here — "round 9" (the original
-# certification round, whose driver artifact never landed) and
-# "round 10" (this re-run of the same drain). The DRIVER's artifact
-# numbering continues from CORRECTNESS_r08.json, so the window below
-# is graded as the driver's ROUND 9 (CORRECTNESS_r09.json /
-# BENCH_r09.json). Same window either way; "round 11" in these
-# comments = the driver's round 10.
-#
-# Window math for the driver's round 11 (the repo's internal round 12):
-# CORRECTNESS_r10 landed 50/50 green and the ledger folded it — the
-# registry is fully driver-certified (0 never-checked, 0 fail/stale).
-# Nothing is owed a pinned slot; anything round 11 registers or stales
-# (e.g. the ADVICE-r10 JL-sign fix recert) sorts into the window by
-# the evidence groups below.
-_PRIORITY_THIS_ROUND: tuple[str, ...] = ()
-
 # The keyed-edge refactor (graph/keyed.py) stales every query over
 # pagerank, connected_components, BFS/SSSP, SCC and LPA: with the 41
 # entries already stale that is 56 for 50 slots. These six derived
@@ -166,49 +153,47 @@ _DEFER_TO_NEXT_ROUND: frozenset[str] = frozenset(
 )
 
 
+# The driver's correctness gate grades the first AUDIT_WINDOW entries.
+AUDIT_WINDOW = 50
+
+# Audit groups, in audit order (see the module docstring).
+AUDIT_GROUPS = ("never-checked", "fail/stale", "new", "green", "deferred", "rows-only")
+NEVER, STALE, NEW, GREEN, DEFERRED, ROWS_ONLY = range(len(AUDIT_GROUPS))
+
+
+def audit_group(name: str, fn: Callable, oracle: str | None, evidence: dict) -> int:
+    """The audit group of query ``name`` (an index into AUDIT_GROUPS)
+    under the ledger ``evidence``."""
+    if name == "agg_approx_distinct":
+        return ROWS_ONLY
+    if name in _DEFER_TO_NEXT_ROUND:
+        return DEFERRED
+    ev = evidence.get(name)
+    if ev is None:
+        return NEW  # brand-new this round: behind the recorded backlog
+    if ev.get("driver") == "never":
+        return NEVER
+    if str(ev.get("driver", "")).startswith("fail"):
+        return STALE
+    if ev.get("hash") != query_hash(fn, oracle):
+        return STALE  # changed since last driver green -> re-earn it
+    return GREEN
+
+
 def _audit_order(q: dict, o: dict) -> list[str]:
     try:
         with open(_EVIDENCE_PATH) as f:
             evidence = json.load(f)
     except (OSError, json.JSONDecodeError):
         evidence = {}
-
-    def group(name: str) -> int:
-        if name == "agg_approx_distinct":
-            return 5
-        if name in _DEFER_TO_NEXT_ROUND:
-            return 4
-        if name in _PRIORITY_THIS_ROUND:
-            return 0  # pinned slots: never OR stale, both must be graded
-        ev = evidence.get(name)
-        if ev is None:
-            return 2  # brand-new this round: behind the recorded backlog
-        if ev.get("driver") == "never":
-            return 0
-        if str(ev.get("driver", "")).startswith("fail"):
-            return 1
-        if ev.get("hash") != query_hash(q[name], o.get(name)):
-            return 1  # changed since last driver green -> re-earn it
-        return 3
-
-    def priority(name: str) -> int:
-        # Within a group, round-specific pulls sort first (the r9
-        # deferrals must not miss a second consecutive window).
-        try:
-            return _PRIORITY_THIS_ROUND.index(name)
-        except ValueError:
-            return len(_PRIORITY_THIS_ROUND)
-
-    names = list(q)
-    return sorted(names, key=lambda n: (group(n), priority(n),
-                                        names.index(n)))
+    # sorted() is stable: registration order is kept within a group.
+    return sorted(q, key=lambda n: audit_group(n, q[n], o.get(n), evidence))
 
 
 def _registry() -> tuple[dict, dict]:
-    # One aggregation point for the whole engine (CLI included):
-    # page_rank_mapreduce_java_spark.cli.full_registry. Import errors
-    # propagate — silently shrinking the registry would make the
-    # correctness gate pass on fewer queries without anyone noticing.
+    # One registry for the whole engine (CLI included):
+    # page_rank_mapreduce_java_spark.cli.full_registry, which finds every
+    # module under the package that defines QUERIES/ORACLES.
     from page_rank_mapreduce_java_spark.cli import full_registry
 
     q, o = full_registry()

@@ -99,140 +99,45 @@ def _build_parser() -> argparse.ArgumentParser:
 
 
 def full_registry() -> tuple[dict, dict]:
-    """THE aggregation point for (QUERIES, ORACLES) across all query
-    modules — `cli query X` and the driver contract
-    (`__spark_entry__._registry`) both read from here, so a module can
-    never be registered in one surface and silently missing from the
-    other. Import errors must propagate: silently shrinking the
-    registry would make the correctness gate pass on fewer queries
-    without anyone noticing."""
-    from page_rank_mapreduce_java_spark.dedup import queries as dedup_queries
-    from page_rank_mapreduce_java_spark.functions import (
-        text_queries,
-        text_queries2,
-        text_queries3,
-    )
-    from page_rank_mapreduce_java_spark.graph import linkpred
-    from page_rank_mapreduce_java_spark.graph import queries as graph_queries
-    from page_rank_mapreduce_java_spark.operators import (
-        relational,
-        relational2,
-        relational3,
-        relational4,
-        relational5,
-        relational6,
-        relational7,
-        relational8,
-        relational9,
-        relational10,
-        relational11,
-        relational12,
-        relational13,
-        relational14,
-        relational15,
-        relational16,
-        relational17,
-        relational18,
-        relational19,
-        relational20,
-        relational21,
-        relational22,
-        relational23,
-        relational24,
-        relational25,
-        relational26,
-        relational27,
-        relational28,
-        relational29,
-        relational30,
-        relational31,
-        relational32,
-        relational33,
-        relational34,
-        relational35,
-        relational36,
-        relational37,
-        relational38,
-        relational39,
-        relational40,
-        recommend,
-    )
-    from page_rank_mapreduce_java_spark.multimodal import audiofp as mm_audiofp
-    from page_rank_mapreduce_java_spark.multimodal import phash as mm_phash
-    from page_rank_mapreduce_java_spark.multimodal import videofp as mm_videofp
-    from page_rank_mapreduce_java_spark.similarity import queries as sim_queries
-    from page_rank_mapreduce_java_spark.streaming import queries as stream_queries
+    """The engine's one registry: the (QUERIES, ORACLES) of every module
+    under the package. A module registers by defining module-level
+    ``QUERIES`` (and ``ORACLES``) dicts anywhere under the package; no
+    other edit is needed. `cli query X`, `perfbench` and the driver
+    contract (`__spark_entry__._registry`) all read from here. Import
+    errors propagate: silently shrinking the registry would make the
+    correctness gate pass on fewer queries without anyone noticing."""
+    import importlib
+    import pkgutil
 
+    import page_rank_mapreduce_java_spark as pkg
+
+    return merge_registries(
+        importlib.import_module(info.name)
+        for info in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + ".")
+        if not info.name.endswith(".__main__")
+    )
+
+
+def merge_registries(modules) -> tuple[dict, dict]:
+    """Merge the ``QUERIES``/``ORACLES`` dicts of ``modules``, in order.
+    A name registered by two modules raises instead of shadowing."""
     q: dict = {}
     o: dict = {}
-    for m in (
-        graph_queries,
-        linkpred,
-        relational,
-        relational2,
-        relational3,
-        relational4,
-        relational5,
-        relational6,
-        relational7,
-        relational8,
-        relational9,
-        relational10,
-        relational11,
-        relational12,
-        relational13,
-        relational14,
-        relational15,
-        relational16,
-        relational17,
-        relational18,
-        relational19,
-        relational20,
-        relational21,
-        relational22,
-        relational23,
-        relational24,
-        relational25,
-        relational26,
-        relational27,
-        relational28,
-        relational29,
-        relational30,
-        relational31,
-        relational32,
-        relational33,
-        relational34,
-        relational35,
-        relational36,
-        relational37,
-        relational38,
-        relational39,
-        relational40,
-        recommend,
-        dedup_queries,
-        sim_queries,
-        mm_phash,
-        mm_audiofp,
-        mm_videofp,
-        text_queries,
-        text_queries2,
-        text_queries3,
-        stream_queries,
-    ):
-        q.update(m.QUERIES)
-        o.update(m.ORACLES)
+    for m in modules:
+        for attr, merged in (("QUERIES", q), ("ORACLES", o)):
+            part = getattr(m, attr, {})
+            dup = sorted(merged.keys() & part.keys())
+            if dup:
+                raise ValueError(f"{m.__name__} registers {attr} names again: {dup}")
+            merged.update(part)
     return q, o
-
-
-def _registry():
-    return full_registry()[0]
 
 
 def main(argv: list[str] | None = None) -> int:
     args = _build_parser().parse_args(argv)
 
     if args.cmd == "list-queries":
-        for name in sorted(_registry()):
+        for name in sorted(full_registry()[0]):
             print(name)
         return 0
 
@@ -322,7 +227,7 @@ def main(argv: list[str] | None = None) -> int:
         n = spark.read.parquet(args.output).count()
         print(f"dedup[{args.method}]: {n} rows -> {args.output}")
     elif args.cmd == "query":
-        registry = _registry()
+        registry = full_registry()[0]
         if args.name not in registry:
             print(f"unknown query {args.name!r}; see list-queries", file=sys.stderr)
             return 1
@@ -346,7 +251,7 @@ def main(argv: list[str] | None = None) -> int:
         else:
             df.show(args.show, truncate=False)
     elif args.cmd == "explain":
-        registry = _registry()
+        registry = full_registry()[0]
         if args.name not in registry:
             print(f"unknown query {args.name!r}; see list-queries", file=sys.stderr)
             return 1

@@ -29,9 +29,7 @@ minimum, and the loop exits at the fixpoint without a probe job.
 
 from __future__ import annotations
 
-from functools import reduce
-
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
 from page_rank_mapreduce_java_spark.plans.checkpoints import cut_lineage, observed_cut
@@ -87,33 +85,40 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
 
 def _peel(
     und: DataFrame, active: DataFrame, k: int, rounds: int
-) -> tuple[DataFrame, int | None]:
+) -> tuple[DataFrame, Row]:
     """Up to ``rounds`` synchronous peels of the undirected edges ``und``
     from the survivor ids ``active``: each round drops every node whose
     degree inside the surviving subgraph is < k.
 
     Returns the last cut degree vector DataFrame[id long, core_degree
-    long] and its minimum ``low``, observed on the cut's own job. The
-    loop stops once ``low`` is NULL or ``>= k``: the round removed no
-    node, so every later round is the identity and the oracle's full
-    unroll lands on the same vector. A node isolated inside the
-    survivors drops by absence from the vector; no other degree changes.
+    long] and ``seen``, observed on the cut's own job: its minimum degree
+    ``low``, and the count ``size`` and sum ``total`` of its degrees
+    ``>= k`` (NULL when none). The loop stops once ``low`` is NULL or
+    ``>= k``: the round removed no node, so every later round is the
+    identity and the oracle's full unroll lands on the same vector. A
+    node isolated inside the survivors drops by absence from the vector;
+    no other degree changes.
     """
-    degrees, low = None, None
+    degrees, seen = None, None
+    kept = F.col("core_degree") >= k
     for _ in range(rounds):
         alive = und.join(active.select(F.col("id").alias("src")), "src").join(
             active.select(F.col("id").alias("dst")), "dst"
         )
-        degrees, low = observed_cut(
+        degrees, seen = observed_cut(
             alive.groupBy(F.col("src").alias("id")).agg(
                 F.count(F.lit(1)).alias("core_degree")
             ),
-            F.min("core_degree"),
+            F.struct(
+                F.min("core_degree").alias("low"),
+                F.count_if(kept).alias("size"),
+                F.sum(F.when(kept, F.col("core_degree"))).alias("total"),
+            ),
         )
-        active = degrees.filter(F.col("core_degree") >= k).select("id")
-        if low is None or low >= k:
+        active = degrees.filter(kept).select("id")
+        if seen.low is None or seen.low >= k:
             break
-    return degrees, low
+    return degrees, seen
 
 
 def kcore(edges: DataFrame, k: int = 3, rounds: int = 8) -> DataFrame:
@@ -327,41 +332,36 @@ def kcore_curve(edges: DataFrame, max_k: int = 6, rounds: int = 8) -> DataFrame:
 
     The k-core is a subgraph of the (k-1)-core and peeling is confluent,
     so the peel CONTINUES: k's ``_peel`` starts from the (k-1)-core's
-    survivors, and k's snapshot reads the last degree vector. One edge
-    persist serves the whole curve. The oracle (kcore_curve_sql) unrolls
-    the full per-k budget and lands on the same vectors, since a peel
-    that stops early stopped at a fixpoint.
+    survivors. k's row is the size and degree sum of the last degree
+    vector's nodes with degree ``>= k``, observed on that vector's cut,
+    so the curve is built from literals and runs no job of its own. One
+    edge persist serves the whole curve. The oracle (kcore_curve_sql)
+    unrolls the full per-k budget and lands on the same vectors, since a
+    peel that stops early stopped at a fixpoint.
 
     Plateau skip: when the last observed minimum degree is already
     ``>= k``, that vector is a fixpoint with no node below k, so it is
-    also k's vector and no round runs. A vector left by an exhausted
-    budget has a minimum below the previous k, so it never skips.
+    also k's vector, its observed size and sum are k's row, and no round
+    runs. A vector left by an exhausted budget has a minimum below the
+    previous k, so it never skips.
     """
+    spark = edges.sparkSession
     edges = edges.select(
         F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst")
     )
     und = _undirect(edges).persist()
     try:
         active = cut_lineage(und.select(F.col("src").alias("id")).distinct())
-        low = 0  # no vector yet: k=1 always peels
+        seen = None  # no vector yet: k=1 always peels
         rows = []
         for k in range(1, max_k + 1):
-            if low is not None and low < k:
-                degrees, low = _peel(und, active, k, rounds)
+            if seen is None or (seen.low is not None and seen.low < k):
+                degrees, seen = _peel(und, active, k, rounds)
                 active = degrees.filter(F.col("core_degree") >= k).select("id")
-            rows.append(
-                degrees.filter(F.col("core_degree") >= k).agg(
-                    F.lit(k).cast("long").alias("k"),
-                    F.count(F.lit(1)).cast("long").alias("core_size"),
-                    F.coalesce(F.sum("core_degree"), F.lit(0))
-                    .cast("long")
-                    .alias("core_degree_sum"),
-                )
-            )
-        # Materialize the curve before releasing the edge cache it reads.
-        return cut_lineage(reduce(DataFrame.unionByName, rows))
+            rows.append((k, seen.size, seen.total or 0))
     finally:
         und.unpersist()
+    return spark.createDataFrame(rows, "k long, core_size long, core_degree_sum long")
 
 
 def kcore_curve_sql(edges_cte: str, max_k: int = 6, rounds: int = 8) -> str:

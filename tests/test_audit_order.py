@@ -136,20 +136,3 @@ def test_deferred_set_sorts_after_green_but_before_rows_only():
     assert order.index("green_one") < order.index(dname)
     assert order.index(dname) < order.index("agg_approx_distinct")
 
-
-def test_priority_pins_lead_even_when_stale_green():
-    # The lift-gains case from this round: a PINNED name whose ledger
-    # row is green-but-stale must take a leading slot, not strand at
-    # the back of group 1.
-    pins = list(entrymod._PRIORITY_THIS_ROUND)
-    if not pins:
-        return
-    pname = pins[-1]
-    q = {"plain_never": _q_a, pname: _q_b}
-    o = {n: "SELECT 1 AS v" for n in q}
-    ledger = {
-        "plain_never": {"driver": "never", "hash": "x"},
-        pname: {"driver": "pass", "hash": "stale-hash-0000"},
-    }
-    order = _order_with_ledger(q, o, ledger)
-    assert order.index(pname) < order.index("plain_never")

@@ -4,13 +4,13 @@ from __future__ import annotations
 
 import glob
 
-from page_rank_mapreduce_java_spark.cli import _registry, main
+from page_rank_mapreduce_java_spark.cli import full_registry, main
 
 
 def test_list_queries_matches_registry(capsys):
     assert main(["list-queries"]) == 0
     out = capsys.readouterr().out.split()
-    assert sorted(out) == sorted(_registry())
+    assert sorted(out) == sorted(full_registry()[0])
     assert len(out) >= 148
 
 

@@ -211,19 +211,64 @@ def test_query_hash_captures_transitive_helpers():
 
 
 def test_round_pins_are_consistent():
-    """The round's pinned-slot list and next-round deferral set must
-    stay mutually exclusive, name real registry entries, and actually
-    occupy the front of the audit order — a typo in either constant
-    would silently burn window slots or strand a pinned recert."""
+    """The next-round deferral set must name real registry entries and
+    sit past the audit window: a typo would silently burn a window slot
+    or defer nothing."""
     order = list(entrymod.queries())
-    priority = getattr(entrymod, "_PRIORITY_THIS_ROUND", ())
-    deferred = getattr(entrymod, "_DEFER_TO_NEXT_ROUND", frozenset())
-    assert not set(priority) & deferred
-    missing = (set(priority) | deferred) - set(order)
-    assert not missing, f"pinned/deferred names not in registry: {missing}"
-    assert list(order[: len(priority)]) == list(priority), (
-        "pinned names do not occupy the leading audit slots in order"
-    )
+    deferred = entrymod._DEFER_TO_NEXT_ROUND
+    missing = deferred - set(order)
+    assert not missing, f"deferred names not in registry: {missing}"
     assert all(order.index(n) >= 50 for n in deferred), (
         "a deferred name sits inside the 50-slot window"
     )
+
+
+def test_duplicate_registration_raises():
+    """Two modules registering one name must fail loudly; a silent
+    shadow would drop a query from the registry and the audit."""
+    import types
+
+    import pytest
+
+    from page_rank_mapreduce_java_spark.cli import merge_registries
+
+    a = types.ModuleType("fake_a")
+    a.QUERIES, a.ORACLES = {"shared": len, "only_a": len}, {"shared": "SELECT 1"}
+    b = types.ModuleType("fake_b")
+    b.QUERIES, b.ORACLES = {"shared": abs}, {}
+    helper = types.ModuleType("fake_helper")  # registers nothing
+    q, o = merge_registries([a, helper])
+    assert q == {"shared": len, "only_a": len} and o == {"shared": "SELECT 1"}
+    with pytest.raises(ValueError, match="shared"):
+        merge_registries([a, b])
+    c = types.ModuleType("fake_c")
+    c.QUERIES, c.ORACLES = {}, {"shared": "SELECT 2"}
+    with pytest.raises(ValueError, match="ORACLES"):
+        merge_registries([a, c])
+
+
+def test_every_registering_module_is_discovered():
+    """Every module under the package whose source defines QUERIES is in
+    full_registry(), found here by scanning the files, not by the
+    discovery walk under test."""
+    import importlib
+    import pathlib
+    import re
+
+    import page_rank_mapreduce_java_spark as pkg
+    from page_rank_mapreduce_java_spark.cli import full_registry
+
+    q, o = full_registry()
+    root = pathlib.Path(pkg.__file__).parent
+    found = 0
+    for path in sorted(root.rglob("*.py")):
+        if not re.search(r"^QUERIES\b", path.read_text(), re.MULTILINE):
+            continue
+        rel = path.relative_to(root.parent).with_suffix("")
+        mod = importlib.import_module(".".join(rel.parts))
+        found += 1
+        for name, fn in mod.QUERIES.items():
+            assert q.get(name) is fn, f"{mod.__name__}.{name} not registered"
+        for name, sql in getattr(mod, "ORACLES", {}).items():
+            assert o.get(name) == sql, f"{mod.__name__} oracle {name} not registered"
+    assert found >= 52

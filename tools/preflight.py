@@ -23,8 +23,6 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-WINDOW = 50
-
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
@@ -39,30 +37,22 @@ def main() -> int:
         return 1
     print(f"ok  registry: {len(q)} queries, {len(o)} oracles")
 
-    with open(os.path.join(here, "query_evidence.json")) as f:
+    with open(entrymod._EVIDENCE_PATH) as f:
         ev = json.load(f)
-    deferred = getattr(entrymod, "_DEFER_TO_NEXT_ROUND", frozenset())
-    backlog = {
-        n
-        for n, rec in ev.items()
-        # Membership guard FIRST: comprehension if-clauses apply in order,
-        # so q[n] on a removed/renamed query would KeyError otherwise.
-        if n in q and n not in deferred
-        if rec.get("driver") == "never"
-        or str(rec.get("driver", "")).startswith("fail")
-        or rec.get("hash") != entrymod.query_hash(q[n], o.get(n))
+    needs = {
+        n for n in q if entrymod.audit_group(n, q[n], o.get(n), ev) <= entrymod.NEW
     }
-    new = set(q) - set(ev) - deferred
-    demand = len(backlog | new)
-    window = list(q)[:WINDOW]
-    stranded = sorted((backlog | new) - set(window))
-    print(f"ok  audit demand: {demand}/{WINDOW}" if demand <= WINDOW else
-          f"WARN audit demand {demand} exceeds the {WINDOW}-slot window")
-    if stranded and demand <= WINDOW:
-        print(f"FAIL window: backlog stranded past slot {WINDOW}: {stranded}")
+    window_size = entrymod.AUDIT_WINDOW
+    window = list(q)[:window_size]
+    demand = len(needs)
+    print(f"ok  audit demand: {demand}/{window_size}" if demand <= window_size else
+          f"WARN audit demand {demand} exceeds the {window_size}-slot window")
+    stranded = sorted(needs - set(window))
+    if stranded and demand <= window_size:
+        print(f"FAIL window: backlog stranded past slot {window_size}: {stranded}")
         return 1
-    wasted = [n for n in window if n not in backlog and n not in new]
-    if demand >= WINDOW and wasted:
+    wasted = [n for n in window if n not in needs]
+    if demand >= window_size and wasted:
         print(f"FAIL window: green queries occupying needed slots: {wasted}")
         return 1
 

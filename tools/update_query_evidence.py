@@ -102,37 +102,17 @@ def main() -> int:
     with open(entrymod._EVIDENCE_PATH, "w") as f:
         json.dump(evidence, f, indent=1, sort_keys=True)
 
-    order = list(entrymod.queries())
-    deferred = getattr(entrymod, "_DEFER_TO_NEXT_ROUND", frozenset())
-    groups = {0: [], 1: [], 2: [], 3: []}
-    for n in order:
-        ev = evidence[n]
-        if n == "agg_approx_distinct" or n in deferred:
-            groups[3].append(n)
-        elif ev["driver"] == "never":
-            groups[0].append(n)
-        elif (
-            ev["driver"].startswith("fail")
-            or ev["hash"] == "STALE"
-            # hash-stale: a kept pin no longer matching current source
-            # (an engine-helper edit staled this green). Without this
-            # recomputation the summary undercounts window demand — in
-            # round 8 it printed 13/50 while the true demand was 45/50
-            # (32 chassis-staled greens invisible to the old report).
-            or ev["hash"] != entrymod.query_hash(q[n], o.get(n))
-        ):
-            groups[1].append(n)
-        else:
-            groups[2].append(n)
+    groups: list[list[str]] = [[] for _ in entrymod.AUDIT_GROUPS]
+    for n, fn in q.items():
+        groups[entrymod.audit_group(n, fn, o.get(n), evidence)].append(n)
     print(f"wrote {entrymod._EVIDENCE_PATH}: {len(evidence)} queries")
-    print(f"  never-checked : {len(groups[0])}")
-    print(f"  fail/stale    : {len(groups[1])} {groups[1]}")
-    print(f"  green         : {len(groups[2])}")
-    print(f"  tail          : {groups[3]}" +
-          (f" (deferred: {sorted(deferred)})" if deferred else ""))
-    in_window = len(groups[0]) + len(groups[1])
-    print(f"  audit-window demand: {in_window}/50" +
-          (" — OVERFLOW, driver evidence will lag" if in_window > 50 else ""))
+    for label, names in zip(entrymod.AUDIT_GROUPS, groups):
+        print(f"  {label:<14}: {len(names)}")
+    print(f"  fail/stale names: {groups[entrymod.STALE]}")
+    demand = sum(map(len, groups[: entrymod.NEW + 1]))
+    window = entrymod.AUDIT_WINDOW
+    print(f"  audit-window demand: {demand}/{window}" +
+          (" — OVERFLOW, driver evidence will lag" if demand > window else ""))
     return 0
 
 
