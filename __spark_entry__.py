@@ -190,10 +190,9 @@ def _audit_order(q: dict, o: dict) -> list[str]:
     return sorted(q, key=lambda n: audit_group(n, q[n], o.get(n), evidence))
 
 
-def _registry() -> tuple[dict, dict]:
-    # One registry for the whole engine (CLI included):
-    # page_rank_mapreduce_java_spark.cli.full_registry, which finds every
-    # module under the package that defines QUERIES/ORACLES.
+def registry() -> tuple[dict[str, Callable[[SparkSession, str], DataFrame]], dict[str, str]]:
+    """(queries, oracles) in audit order, built by one pass over
+    ``cli.full_registry`` and the ledger; each call builds it anew."""
     from page_rank_mapreduce_java_spark.cli import full_registry
 
     q, o = full_registry()
@@ -202,8 +201,8 @@ def _registry() -> tuple[dict, dict]:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return _registry()[0]
+    return registry()[0]
 
 
 def oracle_sql() -> dict[str, str]:
-    return _registry()[1]
+    return registry()[1]

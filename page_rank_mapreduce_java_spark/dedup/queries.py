@@ -24,9 +24,8 @@ DataFrame goes out of scope.
 
 The persists that remain are the A/B WINNERS (PERF.md r5 ledger item 3,
 measured interleaved at sf0.1 against the runtime-ReusedExchange
-alternative); ``_PERSIST_SHARED`` exists so the A/B harness
-(tools/ab_persist.py) can flip all sites in one place without editing
-query code.
+alternative); ``_PERSIST_SHARED`` flips all sites in one place, so an
+A/B (tools/ab.py) needs no edit to query code.
 """
 
 from __future__ import annotations
@@ -49,8 +48,8 @@ from page_rank_mapreduce_java_spark.functions.vectors import cosine, cosine_sql
 
 WORDS_SQL = r"regexp_split_to_array(lower(text), '\s+')"
 
-# Toggle for the shared-subtree persists below (tools/ab_persist.py flips
-# this to measure persist vs runtime ReusedExchange on identical code).
+# Toggle for the shared-subtree persists below (flip it in one checkout
+# to A/B persist vs runtime ReusedExchange on otherwise identical code).
 _PERSIST_SHARED = True
 
 

@@ -20,23 +20,21 @@ Spark-idiomatic plan replaces all of that:
   Spark-specific hazard for iterative dataflow (SURVEY.md §4.3).
 
 Measured plan (traced perfbench ``pagerank_chain``: 250k edges, width 4,
-10 supersteps, 4-core host). Under AQE a cut state reports
-``UnknownPartitioning``, and links (7.6 MB) and the contribution aggregate
-fall below the broadcast threshold, so planner-chosen joins would collect
-both to the driver and broadcast them every superstep (7 Spark jobs).
-Both joins are hinted ``shuffle_hash`` instead: the cut state is
-re-shuffled onto links' partitioning, and the contributions leave through
-the aggregate's own exchange (after its map-side partial sum) at
-``spark.sql.shuffle.partitions``, the width the node table is keyed on;
-links and the node table are read in place. A superstep is 3 jobs (the
-rank exchange, the contribution exchange, the checkpoint), 44 per pass of
-11 cuts, and nothing node- or edge-sized passes the driver. At width 1
-Spark plans links as a single partition, and it re-shuffles a
-single-partition join side to ``spark.sql.shuffle.partitions`` once the
-planner's size estimate passes ``spark.sql.maxSinglePartitionBytes``. A
-cut keeps the estimate of the plan it cut, a product over the superstep's
-joins, which passes that bound within two supersteps, so below ~75k edges
-links is re-shuffled every superstep (4 jobs).
+10 supersteps, 4-core host). ``pagerank`` plans under
+``checkpoints.static_planning``: AQE off and ``spark.sql.shuffle.partitions``
+set to the keyed width. The keyed edges, links, the node table
+(``repartition(width, "id")``) and every cut state then report
+``hashpartitioning(id, width)``, so both joins, hinted ``shuffle_hash``
+(links is under the broadcast threshold), read all three relations in
+place. The one exchange is the contribution aggregate's, after its
+map-side partial sum. A superstep is 1 Spark job, the checkpoint, whose
+stages include that exchange; a pass is 14 jobs (4 set-up, 10 cuts), and
+nothing node- or edge-sized passes the driver. At width 1 the planner
+also re-shuffles the node table and moves the aggregate's exchange above
+its final sum (both ``hashpartitioning(id, 1)``), because a cut keeps the
+estimate of the plan it cut, a product over the superstep's joins, which
+passes ``spark.sql.maxSinglePartitionBytes`` within two supersteps; it is
+still 1 job.
 
 Semantics (general form): with damping d (reference: 0.85, Makefile:24) and
 N nodes,
@@ -58,7 +56,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from page_rank_mapreduce_java_spark.graph.keyed import keyed_edges
-from page_rank_mapreduce_java_spark.plans.checkpoints import cut_lineage, observed_cut
+from page_rank_mapreduce_java_spark.plans.checkpoints import (
+    cut_lineage,
+    observed_cut,
+    release,
+    static_planning,
+    without_partitioning,
+)
 
 
 @dataclass
@@ -93,8 +97,10 @@ def pagerank(
     IEEE-identical, so existing unweighted results are bit-stable.
 
     One action per iteration, the eager checkpoint, which also returns
-    the dangling mass through ``observe``. ``tol`` adds one L1 action per
-    iteration, a shuffle join of the two cut states.
+    the dangling mass through ``observe``; state 0 is the reset vector
+    read from the node table, with D_0 from the set-up counts. ``tol``
+    adds one L1 action per iteration, a join of the two cut states. Each
+    superseded state's blocks are released once the next is cut.
 
     ``personalize``: optional DataFrame whose first column is a node-id
     source set S. Teleport mass then resets to uniform-over-S instead of
@@ -102,10 +108,12 @@ def pagerank(
     same reset vector). Source ids absent from the graph are ignored.
 
     Scale: the edges are shuffled once onto the join key (graph/keyed.py)
-    and ``links`` is persisted on that partitioning; each superstep
-    re-shuffles the rank vector and the contributions' map-side partial
-    sums, never the edges (see the module docstring for the plan and its
-    width-1 case).
+    and ``links`` is persisted on that partitioning; a superstep ships
+    only the contributions' map-side partial sums (module docstring). The
+    whole call plans with AQE off and the shuffle width pinned; the confs
+    are restored on return, but other threads planning on the same
+    session meanwhile see them. The returned ranks report no partitioning
+    (``checkpoints.without_partitioning``).
 
     ``reliable_checkpoint_every=k``: every k-th iteration cuts lineage
     with a RELIABLE ``checkpoint()`` to the session's checkpoint dir
@@ -122,26 +130,20 @@ def pagerank(
             "spark.sparkContext.setCheckpointDir(<fault-tolerant path>)"
         )
 
-    # links: one row per edge with the emitting node's out-degree. The
-    # keyed edges are already hash-partitioned on src, so the per-src
-    # degree window needs no exchange and links keeps that partitioning.
-    w = (
-        F.col(weight_col).cast("double") if weight_col is not None else F.lit(1.0)
-    )
-    with keyed_edges(
+    # links: one row per edge with the emitting node's out-degree. AQE is
+    # off from here on, so the keyed edges are cached hash-partitioned on
+    # src; the per-src degree window needs no exchange and links keeps
+    # that partitioning.
+    w = F.col(weight_col).cast("double") if weight_col is not None else F.lit(1.0)
+    with static_planning(spark), keyed_edges(
         edges.select("src", "dst", w.alias("w")), partitions=partitions
-    ) as (ed, _):
-        links = ed.select(
-            F.col("src").alias("id"),
-            "dst",
-            "w",
-            F.sum("w").over(Window.partitionBy("src")).alias("deg"),
-        ).persist()
-        # The node table, keyed where the contribution aggregate lands: an
-        # id is dangling iff it is never a source (the reference's sink
-        # node 0, pageRank_v2.java:35), and a reset target iff it is in
-        # ``personalize``. Ids only in ``personalize`` have a NULL ``dang``
-        # and are dropped.
+    ) as (ed, width):
+        deg = F.sum("w").over(Window.partitionBy("src")).alias("deg")
+        links = ed.select(F.col("src").alias("id"), "dst", "w", deg).persist()
+        # The node table, keyed like links: an id is dangling iff it is
+        # never a source (the reference's sink node 0, pageRank_v2.java:35),
+        # and a reset target iff it is in ``personalize``. Ids only in
+        # ``personalize`` have a NULL ``dang`` and are dropped.
         ids = [
             links.select("id", F.lit(False).alias("dang"), F.lit(False).alias("reset")),
             links.select(F.col("dst").alias("id"), F.lit(True), F.lit(False)),
@@ -151,79 +153,74 @@ def pagerank(
             ids.append(personalize.select(first.alias("id"), F.lit(None), F.lit(True)))
         nodes = (
             reduce(DataFrame.union, ids)
-            .repartition(int(spark.conf.get("spark.sql.shuffle.partitions")), "id")
+            .repartition(width, "id")
             .groupBy("id")
             .agg(F.bool_and("dang").alias("dang"), F.bool_or("reset").alias("reset"))
             .filter(F.col("dang").isNotNull())
             .persist()
         )
-        n, n_reset = nodes.agg(F.count("*"), F.count_if("reset")).first()
-    try:
-        if n == 0:
-            return PageRankResult(
-                ranks=cut_lineage(nodes.select("id", F.lit(0.0).alias("rank"))),
-                num_nodes=0,
-                iterations_run=0,
-            )
-        if personalize is None:
-            p = F.lit(1.0 / n)
-        elif n_reset == 0:
-            raise ValueError("personalize set has no ids present in the graph")
-        else:
-            p = F.when(F.col("reset"), F.lit(1.0 / n_reset)).otherwise(F.lit(0.0))
-        node = nodes.select("id", p.alias("p"), "dang")
-        # Each cut returns the dangling mass of the state it cuts.
-        mass = F.sum(F.when(F.col("dang"), F.col("rank")))
-        init = node.select("id", F.col("p").alias("rank"), "dang")
-        ranks, dm = observed_cut(init, mass, "dang")
-        result = PageRankResult(ranks=ranks, num_nodes=n, iterations_run=0)
-        for it in range(num_iterations):
-            # Shuffle joins: the cut state is re-shuffled onto links'
-            # partitioning and the contributions onto the node table's;
-            # links and node are read in place.
-            contribs = (
-                ranks.hint("shuffle_hash")
-                .join(links, "id")
-                .select(
-                    F.col("dst").alias("id"),
-                    (F.col("rank") * F.col("w") / F.col("deg")).alias("c"),
-                )
-                .groupBy("id")
-                .agg(F.sum("c").alias("contrib"))
-            )
-            new_ranks = node.join(contribs.hint("shuffle_hash"), "id", "left").select(
-                "id",
-                "dang",
-                (
-                    F.lit(1.0 - damping) * F.col("p")
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("contrib"), F.lit(0.0))
-                        + F.lit(dm or 0.0) * F.col("p")
+        dang, reset = F.col("dang"), F.col("reset")
+        n, n_reset, n_dang, n_dang_reset = nodes.agg(
+            F.count("*"), F.count_if(reset), F.count_if(dang), F.count_if(dang & reset)
+        ).first()
+    with static_planning(spark, width):
+        try:
+            if n == 0:
+                ranks = cut_lineage(nodes.select("id", F.lit(0.0).alias("rank")))
+                return PageRankResult(without_partitioning(ranks), 0, 0)
+            # dm: the current state's dangling mass, D_0 from the counts.
+            if personalize is None:
+                p, dm = F.lit(1.0 / n), n_dang / n
+            elif n_reset == 0:
+                raise ValueError("personalize set has no ids present in the graph")
+            else:
+                p = F.when(reset, F.lit(1.0 / n_reset)).otherwise(F.lit(0.0))
+                dm = n_dang_reset / n_reset
+            node = nodes.select("id", p.alias("p"), "dang")
+            # The superstep's expressions; only the dm literal is new per
+            # superstep. Each cut returns the dangling mass of its state.
+            mass = F.sum(F.when(dang, F.col("rank")))
+            share = (F.col("rank") * F.col("w") / F.col("deg")).alias("c")
+            scatter = [F.col("dst").alias("id"), share]
+            gather = F.sum("c").alias("contrib")
+            teleport = F.lit(1.0 - damping) * F.col("p")
+            received = F.coalesce(F.col("contrib"), F.lit(0.0))
+            ranks = node.select("id", F.col("p").alias("rank"))
+            result = PageRankResult(ranks=ranks, num_nodes=n, iterations_run=0)
+            for it in range(num_iterations):
+                # State, links and node share hashpartitioning(id, width):
+                # both joins read them in place; only the contributions'
+                # partial sums are exchanged.
+                contribs = ranks.hint("shuffle_hash").join(links, "id").select(*scatter)
+                contribs = contribs.groupBy("id").agg(gather).hint("shuffle_hash")
+                rank = teleport + F.lit(damping) * (received + F.lit(dm or 0.0) * F.col("p"))
+                new_ranks = node.join(contribs, "id", "left")
+                new_ranks = new_ranks.select("id", "dang", rank.alias("rank"))
+                k = reliable_checkpoint_every
+                reliable = bool(k) and (it + 1) % k == 0
+                new_ranks, dm = observed_cut(new_ranks, mass, "dang", reliable)
+                result.iterations_run = it + 1
+                if tol is not None:
+                    delta = (
+                        new_ranks.alias("a")
+                        .join(ranks.alias("b").hint("shuffle_hash"), "id")
+                        .agg(F.sum(F.abs(F.col("a.rank") - F.col("b.rank"))).alias("d"))
+                        .first()["d"]
                     )
-                ).alias("rank"),
-            )
-            reliable = bool(
-                reliable_checkpoint_every and (it + 1) % reliable_checkpoint_every == 0
-            )
-            new_ranks, dm = observed_cut(new_ranks, mass, "dang", reliable)
-            result.iterations_run = it + 1
-            if tol is not None:
-                delta = (
-                    new_ranks.alias("a")
-                    .join(ranks.alias("b").hint("shuffle_hash"), "id")
-                    .agg(F.sum(F.abs(F.col("a.rank") - F.col("b.rank"))).alias("d"))
-                    .first()["d"]
-                )
-                result.l1_deltas.append(delta)
-            ranks = new_ranks
-            if tol is not None and delta < tol:
-                break
-        result.ranks = ranks
-        return result
-    finally:
-        nodes.unpersist()
-        links.unpersist()
+                    result.l1_deltas.append(delta)
+                if it:  # state 0 reads the node table, not a cut
+                    release(ranks)
+                ranks = new_ranks
+                if tol is not None and delta < tol:
+                    break
+            # The result outlives the node table, so state 0 is cut too;
+            # callers get it without the partitioning (checkpoints.py).
+            ranks = ranks if result.iterations_run else cut_lineage(ranks)
+            result.ranks = without_partitioning(ranks)
+            return result
+        finally:
+            nodes.unpersist()
+            links.unpersist()
 
 
 def reference_init_state(edges: DataFrame, k: int) -> DataFrame:

@@ -9,15 +9,22 @@ a reliable FS every ~5 iterations; local runs don't need it.
 
 Under AQE a cut state forgets its hash partitioning: the checkpoint takes
 the partitioning the adaptive plan reports, ``UnknownPartitioning``, so
-every join against a cut state re-shuffles it or broadcasts it.
+every join against a cut state re-shuffles it or broadcasts it. Inside
+``static_planning`` (AQE off, the shuffle width pinned) a cut keeps the
+``hashpartitioning`` of the plan it cut, so a superstep joins the cut
+state with relations keyed at the same width in place; the state a loop
+returns goes through ``without_partitioning`` first. ``release`` frees a
+superseded state's blocks at once instead of at the ContextCleaner's next
+pass.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -45,6 +52,48 @@ def observed_cut(
     if drop is not None:
         observed = observed.drop(drop)
     return cut_lineage(observed, reliable), obs.get["m"]
+
+
+@contextmanager
+def static_planning(spark: SparkSession, width: int | None = None) -> Iterator[None]:
+    """Plan the block with AQE off and, if ``width`` is given, with
+    ``spark.sql.shuffle.partitions`` set to it; both confs are restored
+    on exit, also on error. The confs are session-wide: other threads
+    planning on ``spark`` meanwhile see them too."""
+    confs = {"spark.sql.adaptive.enabled": "false"}
+    if width is not None:
+        confs["spark.sql.shuffle.partitions"] = str(width)
+    old = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def release(state: DataFrame) -> None:
+    """Free the blocks of a cut state (one returned by ``cut_lineage``)
+    that nothing reads again."""
+    state._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
+def without_partitioning(state: DataFrame) -> DataFrame:
+    """A cut state over the same blocks, reporting no partitioning.
+
+    A cut made inside ``static_planning`` reports the hash partitioning of
+    the plan it cut. Spark's plan comparison does not normalize the
+    attributes of a leaf's partitioning, so once a plan reads such a cut
+    twice (a self-join or self-union re-instances one copy) its persisted
+    subtrees no longer match the cache and are recomputed. The size
+    estimate becomes the session default."""
+    spark = state.sparkSession
+    rdd = state._jdf.queryExecution().logical().rdd()
+    return DataFrame(spark._jsparkSession.internalCreateDataFrame(rdd, state._jdf.schema(), False), spark)
 
 
 def iterate(

@@ -167,15 +167,15 @@ def _executed_ops(plan, shuffled=False):
         yield from _executed_ops(cs.apply(i), below)
 
 
-def test_pagerank_iteration_shuffles_ranks_not_links(spark, monkeypatch):
+def test_pagerank_superstep_shuffles_only_contributions(spark, monkeypatch):
     """A superstep plans both joins as shuffle joins, so nothing is
-    broadcast. It re-shuffles the cut rank vector onto the keyed width and
-    the contributions onto the session's shuffle partitions, where the
-    node table is keyed; the cached node table is read in place. So are the
-    cached links at width 4. At width 1 Spark plans links as one partition
-    and re-shuffles it to the session width once the estimate of the cut
-    state passes ``spark.sql.maxSinglePartitionBytes`` (see
-    graph/pagerank.py)."""
+    broadcast. The cut state, links and the node table are all keyed on
+    ``hashpartitioning(id, width)`` and read in place; the one exchange
+    is the contributions' partial sums, at the keyed width. At width 1
+    the planner re-shuffles the node table and the contribution aggregate
+    at ``hashpartitioning(id, 1)``, since the compounding size estimate of
+    a cut passes ``spark.sql.maxSinglePartitionBytes`` (see
+    graph/pagerank.py); the superstep is still one job."""
     from page_rank_mapreduce_java_spark.graph.generators import chain_edges
     from page_rank_mapreduce_java_spark.graph.pagerank import pagerank
     from page_rank_mapreduce_java_spark.plans import checkpoints
@@ -198,14 +198,16 @@ def test_pagerank_iteration_shuffles_ranks_not_links(spark, monkeypatch):
             for name, op, shuffled in ops
             if name == "InMemoryTableScanExec"
         }
-        assert scans.keys() == {"links", "node"} and not scans["node"]
+        assert scans.keys() == {"links", "node"} and not scans["links"]
+        assert [shuffled for name, _, shuffled in ops if name == "RDDScanExec"] == [False]
+        exchanges = [i for i, name in enumerate(names) if name == "ShuffleExchangeExec"]
+        assert {ops[i][1].numPartitions() for i in exchanges} == {width}
+        # The contributions leave through their aggregate's own exchange.
+        assert any("HashAggregateExec" in names[i + 1 : i + 4] for i in exchanges)
         if width > 1:
-            assert not scans["links"]
-            exchanges = [op for name, op, _ in ops if name == "ShuffleExchangeExec"]
-            session = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            assert sorted(op.numPartitions() for op in exchanges) == sorted(
-                [width, session]
-            )
+            assert len(exchanges) == 1 and not scans["node"]
+        else:
+            assert len(exchanges) == 2 and scans["node"]
         # The result plan is a checkpoint scan — constant size, no lineage
         # back to the edge join (the §4.3 plan-explosion guard).
         plan = formatted_plan(res.ranks)

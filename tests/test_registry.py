@@ -26,8 +26,7 @@ def _groups():
     brand-new        = absent from the ledger (added mid-round) — still
                        needs evidence, but queues behind the backlog so an
                        exactly-full window is never evicted."""
-    q = entrymod.queries()
-    o = entrymod.oracle_sql()
+    q, o = entrymod.registry()
     with open(entrymod._EVIDENCE_PATH) as f:
         evidence = json.load(f)
     deferred = getattr(entrymod, "_DEFER_TO_NEXT_ROUND", frozenset())
@@ -168,8 +167,7 @@ def test_evidence_ledger_survives_grading_window():
 
 
 def test_every_query_has_oracle():
-    q = entrymod.queries()
-    o = entrymod.oracle_sql()
+    q, o = entrymod.registry()
     missing = set(q) - set(o) - ROWS_ONLY_BY_DESIGN
     assert not missing, f"queries without DuckDB oracles: {sorted(missing)}"
 

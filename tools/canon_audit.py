@@ -54,7 +54,7 @@ def main() -> int:
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS FROM '{sf_dir}/{t}.parquet'")
 
-    oracles = entrymod.oracle_sql()
+    _, oracles = entrymod.registry()
     hard_hits: list[str] = []
     for name, sql in oracles.items():
         if only and name not in only:

@@ -54,8 +54,7 @@ def main() -> int:
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS FROM '{sf_dir}/{t}.parquet'")
 
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
+    qs, oracles = entrymod.registry()
     failures = []
     unknown = sorted(only - set(qs))
     if unknown:

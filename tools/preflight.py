@@ -30,7 +30,7 @@ def main() -> int:
 
     import __spark_entry__ as entrymod
 
-    q, o = entrymod.queries(), entrymod.oracle_sql()
+    q, o = entrymod.registry()
     extra_oracles = set(o) - set(q)
     if extra_oracles:
         print(f"FAIL registry: oracles without queries: {sorted(extra_oracles)}")

@@ -52,8 +52,7 @@ def main() -> int:
 
     import __spark_entry__ as entrymod
 
-    q = entrymod.queries()
-    o = entrymod.oracle_sql()
+    q, o = entrymod.registry()
 
     unknown = stale - set(q)
     if unknown:
